@@ -1,18 +1,25 @@
-"""Shared kernel for the swap-state user-keyed monitors (VERDICT r11
-task 5 — the ``_ingest_base.py`` precedent applied to the funnel /
-engagement / cohort family).
+"""Shared kernel for the swap-state monitors (the ``_ingest_base.py``
+precedent): funnel, engagement, cohort, volume anomaly, approx
+engagement and TF-IDF.
 
-All three monitors share the same state discipline, previously
-re-implemented per module (the drift risk this consolidation removes):
+All six share one state discipline:
 
   * ONE swap-written parquet table per monitor: value rows plus a
-    single meta row (the meta discriminator column IS NULL) carrying
-    ``last_epoch`` — atomic state+meta, so there is no window where the
-    rows reflect an epoch the meta does not;
+    single meta row (the meta discriminator column IS NULL).  Value
+    rows are NULL in every column outside ``_VALUE_COLS``; the meta row
+    holds those columns — ``last_epoch`` always, plus any monitor-level
+    scalar (the TF-IDF monitor's ``n_docs``).  State and meta swap
+    atomically, so there is no window where the rows reflect an epoch
+    the meta does not;
   * exactly-once fold: a replayed micro-batch compares its epoch id
-    against ``last_epoch`` and no-ops; the distinct merge is
-    additionally idempotent, so even an ad-hoc double-fold cannot
-    corrupt the state;
+    against ``last_epoch`` and no-ops; an ad-hoc fold (no epoch id)
+    keeps ``last_epoch``.  The distinct and HLL-union merges are also
+    idempotent, so even an ad-hoc double-fold cannot corrupt them; the
+    count-summing merges (anomaly, TF-IDF) rely on the epoch guard
+    alone;
+  * memoized meta row: every state mutation goes through one instance,
+    so ``last_epoch`` (and the TF-IDF ``meta``) run no Spark job after
+    the first read, and none at all on a root with no state yet;
   * fresh-checkpoint half-reset (``reset_epoch_guard``): a stream
     restarted from a NEW checkpoint (epoch ids restart at 0) keeps
     folding into the accumulated state;
@@ -21,11 +28,17 @@ re-implemented per module (the drift risk this consolidation removes):
 
 Subclasses define the state shape (``_STATE_SCHEMA`` /
 ``_VALUE_COLS`` / ``_META_COL``), the per-batch projection
-(``_batch_rows``) and the scoring; the funnel monitor additionally
-overrides ``_post_merge`` with its dominance pruning.  The
-monitor-specific state bounds (``compact`` / ``expire_before``) stay in
-the subclasses — their exactness arguments are monitor-specific — but
-write back through the shared ``_swap_state``.
+(``_batch_rows``) and the scoring; ``_post_merge`` carries the
+merge itself where a distinct is not it (funnel dominance pruning,
+anomaly / TF-IDF count sums, approx HLL union).  The TF-IDF monitor
+keeps its own ``process_batch`` body (drift report, ``n_docs``) around
+the shared ``_new_batch`` guard and ``_fold``.  The monitor-specific
+state bounds (``compact`` / ``expire_before``) stay in the subclasses —
+their exactness arguments are monitor-specific — but write back
+through the shared ``_swap_state``.
+
+``TopKMonitor`` is deliberately not a subclass: its state has no meta
+row and no epoch guard (see its module docstring).
 """
 
 from __future__ import annotations
@@ -33,18 +46,20 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import DataType
 
 from .state_backend import LocalFSBackend, StateBackend
 
 
 class SwapStateMonitor:
-    """State plumbing shared by the user-keyed monitors.  Class
+    """State plumbing shared by the swap-state monitors.  Class
     attributes each subclass pins:
 
     ``_STATE_SUBDIR``  state directory name under the monitor root
     ``_QUERY_NAME``    writeStream queryName
-    ``_STATE_SCHEMA``  DDL of value columns + trailing ``last_epoch``
-    ``_VALUE_COLS``    the value column names (no ``last_epoch``)
+    ``_STATE_SCHEMA``  DDL of value columns, then the meta columns
+                       (``last_epoch`` and any monitor-level scalar)
+    ``_VALUE_COLS``    the value column names
     ``_META_COL``      value column whose NULL marks the meta row
     """
 
@@ -61,14 +76,14 @@ class SwapStateMonitor:
         self.checkpoint_dir = os.path.join(root, "_checkpoints")
         self.ts_col = ts_col
         self.user_col = user_col
-        # single-writer epoch memo: every state mutation goes through
-        # this instance (_swap_state / reset_epoch_guard), so after the
-        # first read the guard needs no per-batch Spark job over the
-        # state parquet — a measured ~1-2 s of pure scheduling per
-        # micro-batch (BENCHLOG round-12).  A fresh instance (restart,
-        # concurrent reader) starts cold and reads the state file, the
-        # single source of truth.
-        self._epoch_memo: int | None = None
+        # single-writer meta memo: every state mutation goes through
+        # this instance (_swap_state), so after the first read the
+        # guard needs no per-batch Spark job over the state parquet — a
+        # measured ~1-2 s of pure scheduling per micro-batch (BENCHLOG
+        # round-12).  A fresh instance (restart, concurrent reader)
+        # starts cold and reads the state file, the single source of
+        # truth.
+        self._meta_memo: dict | None = None
 
     # -- reads ---------------------------------------------------------
     def _state(self, spark: SparkSession) -> DataFrame:
@@ -83,27 +98,25 @@ class SwapStateMonitor:
                 .filter(F.col(self._META_COL).isNotNull())
                 .select(*self._VALUE_COLS))
 
-    def last_epoch(self, spark: SparkSession) -> int:
-        if self._epoch_memo is not None:
-            return self._epoch_memo
-        self.backend.recover(self.state_dir)
-        if not self.backend.has_data(self.state_dir):
+    def _meta(self, spark: SparkSession) -> dict:
+        """The meta row as {meta column: value};
+        ``{"last_epoch": -1}`` before the first state write."""
+        if self._meta_memo is None:
+            self.backend.recover(self.state_dir)
             # fresh monitor: no state table yet, so skip the Spark job
             # entirely — a .first() even on the EMPTY substitute frame
             # costs ~0.8-1.1 s of pure job machinery (measured r13,
-            # BENCHLOG), which every cold start and all three
-            # monitor_*_publish queries paid; -1 is exactly what the
-            # missing meta row means, and memoizing it is sound under
-            # the same single-writer contract as the epoch memo itself
-            self._epoch_memo = -1
-            return self._epoch_memo
-        # recover()/has_data() already ran above — read the parquet
-        # directly rather than repeating both through _state()
-        row = (spark.read.parquet(self.state_dir)
-               .filter(F.col(self._META_COL).isNull())
-               .select("last_epoch").first())
-        self._epoch_memo = row.last_epoch if row else -1
-        return self._epoch_memo
+            # BENCHLOG); the missing meta row means exactly the default
+            row = None
+            if self.backend.has_data(self.state_dir):
+                row = (spark.read.parquet(self.state_dir)
+                       .filter(F.col(self._META_COL).isNull())
+                       .drop(*self._VALUE_COLS).first())
+            self._meta_memo = row.asDict() if row else {"last_epoch": -1}
+        return self._meta_memo
+
+    def last_epoch(self, spark: SparkSession) -> int:
+        return self._meta(spark)["last_epoch"]
 
     # -- subclass hooks --------------------------------------------------
     def _batch_rows(self, events: DataFrame) -> DataFrame:
@@ -111,22 +124,22 @@ class SwapStateMonitor:
         raise NotImplementedError
 
     def _post_merge(self, merged: DataFrame) -> DataFrame:
-        """Hook between the distinct merge and the state write (the
-        funnel monitor's dominance pruning; identity elsewhere)."""
+        """Hook between the union (plus distinct, see
+        ``_MERGE_DISTINCT``) and the state write: the funnel's dominance
+        pruning, the count sums, the HLL union; identity elsewhere."""
         return merged
 
     # -- writes ----------------------------------------------------------
     def _swap_state(self, spark: SparkSession, rows: DataFrame,
-                    epoch: int) -> None:
-        """Atomically replace the state with ``rows`` + a meta row
-        carrying ``epoch`` — the one write path every state mutation
-        (fold, compaction, expiry) goes through."""
-        kept = rows.select(
-            *self._VALUE_COLS,
-            F.lit(None).cast("bigint").alias("last_epoch"))
-        meta = spark.createDataFrame(
-            [tuple([None] * len(self._VALUE_COLS)) + (epoch,)],
-            self._STATE_SCHEMA)
+                    **meta) -> None:
+        """Atomically replace the state with ``rows`` + the meta row,
+        updated by ``meta`` (no ``meta`` keeps it as is) — the one
+        write path every state mutation (fold, compaction, expiry,
+        guard reset) goes through."""
+        meta = {**self._meta(spark), **meta}
+        schema = DataType.fromDDL(self._STATE_SCHEMA)
+        meta_row = spark.createDataFrame(
+            [tuple(meta.get(c) for c in schema.names)], schema)
         # repartition(1), NOT coalesce(1): coalescing a union of a
         # shuffle branch and the meta LocalRelation measured ~4.7 s per
         # micro-batch vs ~0.6 s with an explicit 1-partition shuffle —
@@ -137,20 +150,26 @@ class SwapStateMonitor:
         # plan's read of the current state parquet races nothing — the
         # eager localCheckpoint this replaced was a full extra
         # materialization pass per micro-batch (~0.4 s, BENCHLOG
-        # round-12; ``reset_epoch_guard`` below always worked this way)
+        # round-12).  allowMissingColumns NULLs the meta columns on the
+        # value rows.
         self.backend.swap_write(
-            kept.unionByName(meta).repartition(1), self.state_dir)
-        self._epoch_memo = epoch
+            rows.select(*self._VALUE_COLS)
+            .unionByName(meta_row, allowMissingColumns=True)
+            .repartition(1),
+            self.state_dir)
+        self._meta_memo = meta
 
     #: whether the fold needs an explicit distinct between the union and
     #: ``_post_merge`` — monitors whose ``_post_merge`` already collapses
-    #: duplicates (the funnel's per-user collect_set) opt out, saving a
-    #: full exchange per fold (guide §2.4: two operations keyed the same
-    #: way share one exchange)
+    #: duplicates (the funnel's per-user collect_set) or must not lose
+    #: them (count sums) opt out; skipping it saves a full exchange per
+    #: fold (two operations keyed the same way share one exchange)
     _MERGE_DISTINCT = True
 
-    def process_batch(self, spark: SparkSession, events: DataFrame,
-                      epoch_id: int | None = None) -> None:
+    def _new_batch(self, spark: SparkSession, events: DataFrame,
+                   epoch_id: int | None) -> DataFrame | None:
+        """``events`` lazily checkpointed, or None when the batch is
+        empty or a replay of an already-folded epoch."""
         # LAZY checkpoint: the batch is consumed at most twice (the
         # emptiness probe's limit-1 scan, then the merge's full pass,
         # which materializes the cache as it goes) — the eager form
@@ -158,31 +177,36 @@ class SwapStateMonitor:
         # either consumer ran (~0.15 s of pure scheduling at sf0.1)
         events = events.localCheckpoint(eager=False)
         if events.isEmpty():
-            return
-        last = self.last_epoch(spark)
-        if epoch_id is not None and epoch_id <= last:
-            return  # replayed micro-batch: already folded into state
-        merged = self.state_rows(spark).unionByName(self._batch_rows(events))
+            return None
+        if epoch_id is not None and epoch_id <= self.last_epoch(spark):
+            return None  # replayed micro-batch: already folded into state
+        return events
+
+    def _fold(self, spark: SparkSession, batch: DataFrame,
+              epoch_id: int | None, **meta) -> None:
+        """Merge value rows ``batch`` into the state.  Ad-hoc
+        (epoch-less) folds PRESERVE ``last_epoch``: resetting it would
+        let a later replay of an already-folded epoch pass the guard."""
+        merged = self.state_rows(spark).unionByName(batch)
         if self._MERGE_DISTINCT:
             merged = merged.distinct()
-        self._swap_state(spark, self._post_merge(merged),
-                         last if epoch_id is None else epoch_id)
+        if epoch_id is not None:
+            meta["last_epoch"] = epoch_id
+        self._swap_state(spark, self._post_merge(merged), **meta)
+
+    def process_batch(self, spark: SparkSession, events: DataFrame,
+                      epoch_id: int | None = None) -> None:
+        events = self._new_batch(spark, events, epoch_id)
+        if events is not None:
+            self._fold(spark, self._batch_rows(events), epoch_id)
 
     def reset_epoch_guard(self, spark: SparkSession) -> None:
         """Clear ``last_epoch`` so a stream restarted from a FRESH
         checkpoint (epoch ids restart at 0) keeps folding into the
         accumulated state — the _ingest_base half-reset contract."""
-        state = self._state(spark)
-        if state.isEmpty():
-            return
-        self.backend.swap_write(
-            state.withColumn(
-                "last_epoch",
-                F.when(F.col(self._META_COL).isNull(),
-                       F.lit(-1).cast("bigint"))
-                 .otherwise(F.col("last_epoch"))),
-            self.state_dir)
-        self._epoch_memo = -1
+        self.backend.recover(self.state_dir)
+        if self.backend.has_data(self.state_dir):
+            self._swap_state(spark, self.state_rows(spark), last_epoch=-1)
 
     def start(self, spark: SparkSession, stream: DataFrame,
               available_now: bool = True):

@@ -25,58 +25,52 @@ Two-tier cost model, and why the re-score is NOT a rescan:
     by construction (shared kernel, test-pinned parity).
 
 State is ONE swap-written parquet table: daily-count rows plus a single
-``event_day IS NULL`` meta row carrying ``last_epoch`` — the same
-atomic state+meta layout as the TF-IDF monitor, for the same
-exactly-once reason: a replayed micro-batch compares against
-``last_epoch`` and no-ops, and there is no window where the counts
-reflect an epoch the meta does not.
+``event_day IS NULL`` meta row carrying ``last_epoch`` — the shared
+``_monitor_base.SwapStateMonitor`` layout and exactly-once fold: a
+replayed micro-batch compares against ``last_epoch`` and no-ops, and
+there is no window where the counts reflect an epoch the meta does
+not.  The merge is a count SUM, not the kernel's distinct — a distinct
+would collapse two equal count rows and lose events — so an ad-hoc
+(epoch-less) re-fold of the same events counts them twice; only the
+epoch guard makes replays no-ops.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.analytics import zscore_daily
-from .state_backend import LocalFSBackend, StateBackend
+from ._monitor_base import SwapStateMonitor
+from .state_backend import StateBackend
 
 _STATE_SCHEMA = ("event_type string, event_day string, n_events bigint, "
                  "last_epoch bigint")
 
 
-class VolumeAnomalyMonitor:
+class VolumeAnomalyMonitor(SwapStateMonitor):
     """foreachBatch-driven incremental daily-count state with z-score
     anomaly reporting over the accumulated series.  ``ts_col`` is the
     event-time column, ``type_col`` the stratum; rows with NULL
     event-time are dropped (no day to bucket), NULL type is kept as its
     own stratum — both exactly as the batch operator."""
 
+    _STATE_SUBDIR = "volume_state"
+    _QUERY_NAME = "volume-anomaly-monitor"
+    _STATE_SCHEMA = _STATE_SCHEMA
+    _VALUE_COLS = ("event_type", "event_day", "n_events")
+    _META_COL = "event_day"
+    # counts add: the union is summed per (type, day) in _post_merge
+    _MERGE_DISTINCT = False
+
     def __init__(self, root: str, backend: StateBackend | None = None,
                  ts_col: str = "ts", type_col: str = "event_type"):
-        self.backend = backend or LocalFSBackend()
-        self.state_dir = os.path.join(root, "volume_state")
-        self.checkpoint_dir = os.path.join(root, "_checkpoints")
-        self.ts_col = ts_col
+        super().__init__(root, backend, ts_col)
         self.type_col = type_col
-
-    # -- reads ---------------------------------------------------------
-    def _state(self, spark: SparkSession) -> DataFrame:
-        self.backend.recover(self.state_dir)
-        if not self.backend.has_data(self.state_dir):
-            return spark.createDataFrame([], _STATE_SCHEMA)
-        return spark.read.parquet(self.state_dir)
 
     def daily_counts(self, spark: SparkSession) -> DataFrame:
         """Accumulated (event_type, event_day, n_events) over every
         ingested event."""
-        return (self._state(spark).filter(F.col("event_day").isNotNull())
-                .select("event_type", "event_day", "n_events"))
-
-    def last_epoch(self, spark: SparkSession) -> int:
-        row = (self._state(spark).filter(F.col("event_day").isNull())
-               .select("last_epoch").first())
-        return row.last_epoch if row else -1
+        return self.state_rows(spark)
 
     def scored(self, spark: SparkSession) -> DataFrame:
         """Every accumulated day scored with the SHARED z kernel — the
@@ -89,7 +83,7 @@ class VolumeAnomalyMonitor:
         return self.scored(spark).filter(F.col("is_anomaly"))
 
     # -- writes --------------------------------------------------------
-    def _batch_counts(self, events: DataFrame) -> DataFrame:
+    def _batch_rows(self, events: DataFrame) -> DataFrame:
         return (
             events
             .filter(F.col(self.ts_col).isNotNull())
@@ -100,58 +94,6 @@ class VolumeAnomalyMonitor:
             .agg(F.count("*").cast("bigint").alias("n_events"))
         )
 
-    def process_batch(self, spark: SparkSession, events: DataFrame,
-                      epoch_id: int | None = None) -> None:
-        events = events.localCheckpoint(eager=True)
-        if events.isEmpty():
-            return
-        last = self.last_epoch(spark)
-        if epoch_id is not None and epoch_id <= last:
-            return  # replayed micro-batch: already folded into state
-        batch = self._batch_counts(events)
-        merged = (
-            self.daily_counts(spark).unionByName(batch)
-            .groupBy("event_type", "event_day")
-            .agg(F.sum("n_events").cast("bigint").alias("n_events"))
-            .select("event_type", "event_day", "n_events",
-                    F.lit(None).cast("bigint").alias("last_epoch"))
-        )
-        # ad-hoc (epoch-less) calls PRESERVE last_epoch — resetting it
-        # would let a later replay of an already-folded epoch pass the
-        # guard and double-count (the TfidfMonitor contract)
-        meta = spark.createDataFrame(
-            [(None, None, None, last if epoch_id is None else epoch_id)],
-            _STATE_SCHEMA)
-        # no lineage break needed: swap_write stages the new generation
-        # to a fresh path, so the plan's read of the current state
-        # parquet races nothing (BENCHLOG round-12 second cut)
-        self.backend.swap_write(
-            merged.unionByName(meta).repartition(1), self.state_dir)
-
-    def reset_epoch_guard(self, spark: SparkSession) -> None:
-        """Clear ``last_epoch`` so a stream restarted from a FRESH
-        checkpoint (epoch ids restart at 0) keeps folding into the
-        accumulated counts — the _ingest_base half-reset contract."""
-        state = self._state(spark)
-        if state.isEmpty():
-            return
-        self.backend.swap_write(
-            state.withColumn(
-                "last_epoch",
-                F.when(F.col("event_day").isNull(),
-                       F.lit(-1).cast("bigint"))
-                 .otherwise(F.col("last_epoch"))),
-            self.state_dir)
-
-    def start(self, spark: SparkSession, stream: DataFrame,
-              available_now: bool = True):
-        if not self.backend.checkpoint_established(self.checkpoint_dir):
-            self.reset_epoch_guard(spark)
-        writer = (
-            stream.writeStream.queryName("volume-anomaly-monitor")
-            .option("checkpointLocation", self.checkpoint_dir)
-            .foreachBatch(lambda b, e: self.process_batch(spark, b, e))
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+    def _post_merge(self, merged: DataFrame) -> DataFrame:
+        return (merged.groupBy("event_type", "event_day")
+                .agg(F.sum("n_events").cast("bigint").alias("n_events")))

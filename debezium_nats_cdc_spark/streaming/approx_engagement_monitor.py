@@ -31,53 +31,35 @@ mirroring the batch approx query's estimation plan.
 
 Layout: one swap-written parquet table — (event_day, sk) rows plus a
 single ``event_day IS NULL`` meta row carrying ``last_epoch`` — the
-same atomic state+meta contract as the sibling monitors.  Reference
-parity: the same materialized-view clause as the exact monitor
+shared ``_monitor_base.SwapStateMonitor`` state and exactly-once fold,
+with ``hll_union_agg`` per day as the merge.  Reference parity: the
+same materialized-view clause as the exact monitor
 (`docs/system-design.md:130-134`).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.engagement import _WINDOW_DAYS
-from .state_backend import LocalFSBackend, StateBackend
+from ._monitor_base import SwapStateMonitor
 
 _STATE_SCHEMA = "event_day date, sk binary, last_epoch bigint"
 
 
-class ApproxEngagementMonitor:
+class ApproxEngagementMonitor(SwapStateMonitor):
     """foreachBatch-driven per-day HLL sketch state scored into
     DAU/WAU/stickiness ESTIMATES.  Rows with NULL user or NULL
     event-time are dropped and the configurable user column is cast to
     bigint, exactly as the exact monitor (the ADVICE-r10 contract)."""
 
-    def __init__(self, root: str, backend: StateBackend | None = None,
-                 ts_col: str = "ts", user_col: str = "user_id"):
-        self.backend = backend or LocalFSBackend()
-        self.state_dir = os.path.join(root, "approx_engagement_state")
-        self.checkpoint_dir = os.path.join(root, "_checkpoints")
-        self.ts_col = ts_col
-        self.user_col = user_col
-
-    # -- reads ---------------------------------------------------------
-    def _state(self, spark: SparkSession) -> DataFrame:
-        self.backend.recover(self.state_dir)
-        if not self.backend.has_data(self.state_dir):
-            return spark.createDataFrame([], _STATE_SCHEMA)
-        return spark.read.parquet(self.state_dir)
-
-    def state_rows(self, spark: SparkSession) -> DataFrame:
-        """The accumulated (event_day, sk) sketch rows."""
-        return (self._state(spark).filter(F.col("event_day").isNotNull())
-                .select("event_day", "sk"))
-
-    def last_epoch(self, spark: SparkSession) -> int:
-        row = (self._state(spark).filter(F.col("event_day").isNull())
-               .select("last_epoch").first())
-        return row.last_epoch if row else -1
+    _STATE_SUBDIR = "approx_engagement_state"
+    _QUERY_NAME = "approx-engagement-monitor"
+    _STATE_SCHEMA = _STATE_SCHEMA
+    _VALUE_COLS = ("event_day", "sk")
+    _META_COL = "event_day"
+    # the per-day sketch union in _post_merge is the merge
+    _MERGE_DISTINCT = False
 
     def scored(self, spark: SparkSession) -> DataFrame:
         """DAU/WAU/stickiness ESTIMATES per observed day — the batch
@@ -113,7 +95,7 @@ class ApproxEngagementMonitor:
         )
 
     # -- writes --------------------------------------------------------
-    def _batch_day_sketches(self, events: DataFrame) -> DataFrame:
+    def _batch_rows(self, events: DataFrame) -> DataFrame:
         return (
             events
             .filter(F.col(self.user_col).isNotNull()
@@ -123,30 +105,9 @@ class ApproxEngagementMonitor:
                 F.col(self.user_col).cast("bigint")).alias("sk"))
         )
 
-    def process_batch(self, spark: SparkSession, events: DataFrame,
-                      epoch_id: int | None = None) -> None:
-        events = events.localCheckpoint(eager=True)
-        if events.isEmpty():
-            return
-        last = self.last_epoch(spark)
-        if epoch_id is not None and epoch_id <= last:
-            return  # replayed micro-batch: already folded into state
-        merged = (
-            self.state_rows(spark)
-            .unionByName(self._batch_day_sketches(events))
-            .groupBy("event_day")
-            .agg(F.hll_union_agg("sk").alias("sk"))
-            .select("event_day", "sk",
-                    F.lit(None).cast("bigint").alias("last_epoch"))
-        )
-        meta = spark.createDataFrame(
-            [(None, None, last if epoch_id is None else epoch_id)],
-            _STATE_SCHEMA)
-        # no lineage break needed: swap_write stages the new generation
-        # to a fresh path, so the plan's read of the current state
-        # parquet races nothing (BENCHLOG round-12 second cut)
-        self.backend.swap_write(
-            merged.unionByName(meta).repartition(1), self.state_dir)
+    def _post_merge(self, merged: DataFrame) -> DataFrame:
+        return merged.groupBy("event_day").agg(
+            F.hll_union_agg("sk").alias("sk"))
 
     def expire_before(self, spark: SparkSession, oldest_report_day) -> None:
         """Reporting-horizon cap, mirroring the exact monitor: a day
@@ -155,37 +116,5 @@ class ApproxEngagementMonitor:
         day count — rows, not user-days."""
         cutoff = F.date_sub(F.lit(oldest_report_day).cast("date"),
                             _WINDOW_DAYS - 1)
-        state = self._state(spark)
-        self.backend.swap_write(
-            state.filter(F.col("event_day").isNull()
-                         | (F.col("event_day") >= cutoff))
-            .coalesce(1),
-            self.state_dir)
-
-    def reset_epoch_guard(self, spark: SparkSession) -> None:
-        """Clear ``last_epoch`` so a stream restarted from a FRESH
-        checkpoint (epoch ids restart at 0) keeps folding into the
-        accumulated state — the _ingest_base half-reset contract."""
-        state = self._state(spark)
-        if state.isEmpty():
-            return
-        self.backend.swap_write(
-            state.withColumn(
-                "last_epoch",
-                F.when(F.col("event_day").isNull(),
-                       F.lit(-1).cast("bigint"))
-                 .otherwise(F.col("last_epoch"))),
-            self.state_dir)
-
-    def start(self, spark: SparkSession, stream: DataFrame,
-              available_now: bool = True):
-        if not self.backend.checkpoint_established(self.checkpoint_dir):
-            self.reset_epoch_guard(spark)
-        writer = (
-            stream.writeStream.queryName("approx-engagement-monitor")
-            .option("checkpointLocation", self.checkpoint_dir)
-            .foreachBatch(lambda b, e: self.process_batch(spark, b, e))
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        self._swap_state(
+            spark, self.state_rows(spark).filter(F.col("event_day") >= cutoff))

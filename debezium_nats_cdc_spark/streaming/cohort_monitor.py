@@ -48,7 +48,7 @@ The scoring is the shared :func:`cohort_matrix` kernel
 that the batch ``events_cohort_retention`` also runs — the dau_wau /
 funnel_summary pattern, so the two scorings cannot drift; the state
 plumbing lives in ``_monitor_base.SwapStateMonitor``, shared with the
-funnel and engagement monitors.  The pytest parity gate pins batch ==
+other swap-state monitors.  The pytest parity gate pins batch ==
 streaming after every batch, and ``monitor_cohort_publish`` gives the
 published table a real driver row.
 """
@@ -119,8 +119,7 @@ class CohortMonitor(SwapStateMonitor):
         wm_week = F.date_trunc(
             "week", F.timestamp_micros(F.lit(int(watermark_us)))
         ).cast("date")
-        state = self._state(spark)
-        rows = state.filter(F.col("wk").isNotNull())
+        rows = self.state_rows(spark)
         cohort = F.min("wk").over(W.partitionBy("user_id"))
         kept = (
             rows.withColumn("_cohort", cohort)
@@ -130,4 +129,4 @@ class CohortMonitor(SwapStateMonitor):
                 | (F.col("wk") == F.col("_cohort"))  # the cohort row
             )
         )
-        self._swap_state(spark, kept, self.last_epoch(spark))
+        self._swap_state(spark, kept)

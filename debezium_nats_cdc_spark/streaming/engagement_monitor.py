@@ -61,8 +61,8 @@ class EngagementMonitor(SwapStateMonitor):
     #: Default state-size handoff threshold, in (user, day) rows.
     #: OPERATIONS.md §9's cutover rule is "exact while the day frame
     #: fits comfortably in one shuffle (<= low-billions of user-day
-    #: rows)"; the measured basis (SCALING.md r14,
-    #: tools/ab_engagement_tier.py) is that at 100x users the exact
+    #: rows)"; the measured basis (SCALING.md, r14 engagement-tier
+    #: note) is that at 100x users the exact
     #: tier's per-fold state-keyed shuffle cost 5.68x its sf0.1
     #: wall-clock while the HLL sketch tier's stayed near-flat at
     #: 1.48x — the regime change this guard warns ahead of.  1e9 sits
@@ -182,11 +182,11 @@ class EngagementMonitor(SwapStateMonitor):
         return report
 
     def _swap_state(self, spark: SparkSession, rows: DataFrame,
-                    epoch: int) -> None:
+                    **meta) -> None:
         # every state mutation (fold, expiry, compaction) lands here,
         # so polling after the super write keeps the guard current
         # batch-by-batch at footer-read cost
-        super()._swap_state(spark, rows, epoch)
+        super()._swap_state(spark, rows, **meta)
         if self.handoff_state_rows is not None:
             self.maybe_handoff(spark)
 
@@ -203,5 +203,4 @@ class EngagementMonitor(SwapStateMonitor):
                             _WINDOW_DAYS_STATE - 1)
         self._swap_state(
             spark,
-            self.state_rows(spark).filter(F.col("event_day") >= cutoff),
-            self.last_epoch(spark))
+            self.state_rows(spark).filter(F.col("event_day") >= cutoff))

@@ -254,5 +254,4 @@ class FunnelMonitor(SwapStateMonitor):
 
         self._swap_state(
             spark,
-            self._explode_kept(self._gated(self.state_rows(spark)), keep),
-            self.last_epoch(spark))
+            self._explode_kept(self._gated(self.state_rows(spark)), keep))

@@ -19,11 +19,13 @@ with every batch text operator and the TF-IDF oracle.
 
 State is ONE swap-written parquet table: vocabulary rows (term, tf,
 df) plus a single ``term IS NULL`` meta row carrying (n_docs,
-last_epoch).  Keeping the meta in the same atomic swap is what makes
-micro-batch replay exactly-once: a replayed epoch compares against
-``last_epoch`` and no-ops, and there is no window where the vocabulary
-reflects an epoch the meta does not (the corpus_dedup lesson, applied
-to aggregate state instead of an append log).
+last_epoch) — the shared ``_monitor_base.SwapStateMonitor`` state, whose
+meta row holds every column outside the value columns.  Keeping the
+meta in the same atomic swap is what makes micro-batch replay
+exactly-once: a replayed epoch compares against ``last_epoch`` and
+no-ops, and there is no window where the vocabulary reflects an epoch
+the meta does not (the corpus_dedup lesson, applied to aggregate state
+instead of an append log).
 
 Scale shape: the merge is one hash shuffle keyed on term (map-side
 combined); state size is the vocabulary, not the corpus; the drift
@@ -40,7 +42,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.text import _tokens
-from .state_backend import LocalFSBackend, StateBackend
+from ._monitor_base import SwapStateMonitor
+from .state_backend import StateBackend
 
 _STATE_SCHEMA = ("term string, tf bigint, df bigint, "
                  "n_docs bigint, last_epoch bigint")
@@ -53,40 +56,37 @@ _DRIFT_SCHEMA = ("term string, batch_tf bigint, batch_share double, "
 _NEW_TERM_FLOOR = 1.0
 
 
-class TfidfMonitor:
+class TfidfMonitor(SwapStateMonitor):
     """foreachBatch-driven incremental df/tf state with batch-vs-corpus
     drift reporting.  ``doc_col`` holds the raw text, ``id_col`` the
     document id (ids only count ``n_docs``; re-ingesting an id is the
     caller's dedup problem, as in the batch operator)."""
 
+    _STATE_SUBDIR = "tfidf_state"
+    _QUERY_NAME = "tfidf-monitor"
+    _STATE_SCHEMA = _STATE_SCHEMA
+    _VALUE_COLS = ("term", "tf", "df")
+    _META_COL = "term"
+    # counts add: the union is summed per term in _post_merge
+    _MERGE_DISTINCT = False
+
     def __init__(self, root: str, backend: StateBackend | None = None,
                  id_col: str = "doc_id", doc_col: str = "text",
                  drift_top_n: int = 20):
-        self.backend = backend or LocalFSBackend()
-        self.state_dir = os.path.join(root, "tfidf_state")
+        super().__init__(root, backend)
         self.drift_dir = os.path.join(root, "tfidf_drift")
-        self.checkpoint_dir = os.path.join(root, "_checkpoints")
         self.id_col = id_col
         self.doc_col = doc_col
         self.drift_top_n = drift_top_n
 
-    # -- reads ---------------------------------------------------------
-    def _state(self, spark: SparkSession) -> DataFrame:
-        self.backend.recover(self.state_dir)
-        if not self.backend.has_data(self.state_dir):
-            return spark.createDataFrame([], _STATE_SCHEMA)
-        return spark.read.parquet(self.state_dir)
-
     def terms(self, spark: SparkSession) -> DataFrame:
         """Accumulated vocabulary: (term, tf, df) over every ingested doc."""
-        return (self._state(spark).filter(F.col("term").isNotNull())
-                .select("term", "tf", "df"))
+        return self.state_rows(spark)
 
     def meta(self, spark: SparkSession) -> tuple[int, int]:
         """(n_docs, last_epoch); (0, -1) before the first batch."""
-        row = (self._state(spark).filter(F.col("term").isNull())
-               .select("n_docs", "last_epoch").first())
-        return (row.n_docs, row.last_epoch) if row else (0, -1)
+        m = self._meta(spark)
+        return m.get("n_docs") or 0, m["last_epoch"]
 
     def topk_salient(self, spark: SparkSession, k: int = 10) -> DataFrame:
         """Corpus-level top-k terms by total TF-IDF weight — the same
@@ -113,7 +113,7 @@ class TfidfMonitor:
             F.desc("lift"), F.asc("term"))
 
     # -- writes --------------------------------------------------------
-    def _batch_terms(self, docs: DataFrame) -> DataFrame:
+    def _batch_rows(self, docs: DataFrame) -> DataFrame:
         tok = docs.select(
             F.col(self.id_col).alias("_doc"),
             F.explode(_tokens(F.coalesce(F.col(self.doc_col), F.lit(""))))
@@ -126,40 +126,21 @@ class TfidfMonitor:
             F.count("*").cast("bigint").alias("df"),
         )
 
+    def _post_merge(self, merged: DataFrame) -> DataFrame:
+        return merged.groupBy("term").agg(
+            F.sum("tf").cast("bigint").alias("tf"),
+            F.sum("df").cast("bigint").alias("df"))
+
     def process_batch(self, spark: SparkSession, docs: DataFrame,
                       epoch_id: int | None = None) -> None:
-        docs = docs.localCheckpoint(eager=True)
-        if docs.isEmpty():
+        docs = self._new_batch(spark, docs, epoch_id)
+        if docs is None:
             return
-        n_docs, last_epoch = self.meta(spark)
-        if epoch_id is not None and epoch_id <= last_epoch:
-            return  # replayed micro-batch: already folded into state
-        batch = self._batch_terms(docs).localCheckpoint(eager=True)
-        batch_docs = docs.select(self.id_col).count()
-
+        batch = self._batch_rows(docs).localCheckpoint(eager=True)
         # drift vs the corpus BEFORE this batch is folded in
         self._write_drift(spark, batch)
-
-        merged = (
-            self.terms(spark).unionByName(batch)
-            .groupBy("term")
-            .agg(F.sum("tf").cast("bigint").alias("tf"),
-                 F.sum("df").cast("bigint").alias("df"))
-            .select("term", "tf", "df",
-                    F.lit(None).cast("bigint").alias("n_docs"),
-                    F.lit(None).cast("bigint").alias("last_epoch"))
-        )
-        # ad-hoc (epoch-less) calls must PRESERVE last_epoch: resetting
-        # it would let a later replay of an already-folded epoch pass
-        # the guard and double-count
-        meta = spark.createDataFrame(
-            [(None, None, None, n_docs + batch_docs,
-              last_epoch if epoch_id is None else epoch_id)], _STATE_SCHEMA)
-        # no lineage break needed: swap_write stages the new generation
-        # to a fresh path, so the plan's read of the current state
-        # parquet races nothing (BENCHLOG round-12 second cut)
-        self.backend.swap_write(
-            merged.unionByName(meta).repartition(1), self.state_dir)
+        self._fold(spark, batch, epoch_id,
+                   n_docs=self.meta(spark)[0] + docs.count())
 
     def _write_drift(self, spark: SparkSession, batch: DataFrame) -> None:
         corpus = self.terms(spark)
@@ -195,38 +176,3 @@ class TfidfMonitor:
             .limit(self.drift_top_n)
         )
         self.backend.swap_write(report.coalesce(1), self.drift_dir)
-
-    def reset_epoch_guard(self, spark: SparkSession) -> None:
-        """Clear ``last_epoch`` (set to -1, state otherwise unchanged)
-        so a stream restarted from a FRESH checkpoint — whose epoch ids
-        restart at 0 — can keep folding into the accumulated state.
-        Called automatically by ``start`` on a fresh checkpoint; the
-        replay guard then only protects within the new checkpoint's
-        epoch sequence."""
-        state = self._state(spark)
-        if state.isEmpty():
-            return
-        self.backend.swap_write(
-            state.withColumn(
-                "last_epoch",
-                F.when(F.col("term").isNull(), F.lit(-1).cast("bigint"))
-                 .otherwise(F.col("last_epoch"))),
-            self.state_dir)
-
-    def start(self, spark: SparkSession, stream: DataFrame,
-              available_now: bool = True):
-        # fresh checkpoint => epoch ids restart at 0.  Without this
-        # reset the replay guard (epoch_id <= last_epoch) would
-        # silently DROP every batch until the new epoch sequence passes
-        # the old high-water mark — the _ingest_base half-reset
-        # contract, applied to aggregate state instead of txn markers.
-        if not self.backend.checkpoint_established(self.checkpoint_dir):
-            self.reset_epoch_guard(spark)
-        writer = (
-            stream.writeStream.queryName("tfidf-monitor")
-            .option("checkpointLocation", self.checkpoint_dir)
-            .foreachBatch(lambda b, e: self.process_batch(spark, b, e))
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()

@@ -17,6 +17,13 @@ before re-ranking — so a replayed micro-batch converges to the same
 state (no epoch keying needed: f(state, batch) == f(f(state, batch),
 batch)).
 
+That is also why this monitor is NOT a ``_monitor_base.SwapStateMonitor``
+like the other swap-state monitors: the kernel's meta row and epoch
+guard exist for merges that a replay would corrupt, and this state needs
+neither.  Moving it onto the kernel would either add a meta row and a
+guard that protect nothing, or make the kernel branch on which monitor
+it serves.
+
 Scale path: the per-batch candidate step is the brute-force broadcast
 (every query sees every new vector — exact, and the batch is the small
 side).  If |queries| x |batch| ever dominates, ``prefilter=True``
@@ -34,7 +41,7 @@ direction (cos ≈ 0) collides with p ≈ 0.016 — so the filtered path is
 the right trade exactly when the standing answer tracks NEAR
 neighbors; for exhaustive low-similarity top-k keep the exact default.
 
-Measured cutover (tools/ab_topk_prefilter.py, BENCHLOG r7): below ~5M
+Measured cutover (BENCHLOG, round 7 prefilter A/B): below ~5M
 query x batch pairs per micro-batch the exact Arrow kernel wins (1M
 pairs: 5.3 s vs 6.0 s); above it the filter dominates (32.8M pairs:
 8-9.5 s vs 36-112 s, 4-12x) — the broadcast product, not the cosine,

@@ -1,6 +1,7 @@
 """STRICT replica of the driver's t2 correctness gate (worst-case assumptions).
 
-Differences from tools/check_correctness.py (the lenient replica):
+The repo's one correctness gate.  Worst-case choices, each stricter
+than a plain collect-and-compare:
   - Spark side collected from a VANILLA session (driver owns the session;
     no tuned confs) via .toPandas()
   - DuckDB side collected via .df()  (NOT fetchall) — this converts

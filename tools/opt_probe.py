@@ -28,11 +28,11 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PLANS_DIR = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "plans", "r17")
+PLANS_DIR = os.path.join(REPO, "plans", "r17")
 
 
 def count_jobs(spark, fn, group: str) -> tuple[int, int]:
@@ -67,7 +67,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--tag", default=None,
-                    help="dump explain(formatted) to plans/r16/<q>_<tag>.txt")
+                    help="dump explain(formatted) to "
+                         f"{os.path.relpath(PLANS_DIR, REPO)}/<q>_<tag>.txt")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--sf-dir", default=SF_DIR)
     ap.add_argument("--jobs", action="store_true",

@@ -17,9 +17,13 @@ import time
 
 FAST = "--fast" in sys.argv[1:]
 
+# scale-factor tables, relative to the repo root every gate runs in
+TESTDATA = "../testdata"
+
 GATES: list[tuple[str, list[str]]] = [
-    ("strict oracle (sf0.01, all queries)",
-     [sys.executable, "tools/check_strict.py", "/root/testdata/sf0.01"]),
+    *((f"strict oracle ({sf}, all queries)",
+       [sys.executable, "tools/check_strict.py", f"{TESTDATA}/{sf}"])
+      for sf in ("sf0.001", "sf0.01")),
     ("plan audit", [sys.executable, "tools/plan_audit.py"]),
     ("window rotation", [sys.executable, "tools/check_rotation.py"]),
     # seed-0 differential fuzz (~90 s): the dirty-input gate is cheap
