@@ -22,9 +22,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from debezium_nats_cdc_spark import catalog
 
-# This module-scope import once silently reordered the driver's first-50
-# oracle window (VERDICT r5).  It is safe now: catalog.entries() orders
-# by the explicit catalog._WINDOW_ORDER plan, never by import order.
+# This module-scope import once silently reordered the first 50 queries
+# (VERDICT r5).  It is safe now: catalog.entries() orders by the fixed
+# catalog._WINDOW_ORDER list, never by import order.
 from debezium_nats_cdc_spark.operators import cdc_queries
 from debezium_nats_cdc_spark.operators._common import dec2, money_sum
 

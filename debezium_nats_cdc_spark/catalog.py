@@ -84,43 +84,9 @@ def _load_modules() -> None:
     )
 
 
-# The driver's correctness harness verifies the FIRST 50 entries of
-# queries() per round.  This list IS the window, verbatim — the first 50
-# names below are the round-8 oracle window, in execution order.
-# Rotation rules (tools/check_rotation.py audits both, driver-effectively):
-#   A. every query whose defining module changed this round is in-window;
-#   B. remaining slots go to the queries whose last driver-green row is
-#      oldest (nothing stays unverified for >1 round beyond the latest
-#      artifact).
-#
-# STANDING ALTERNATION POLICY (since r7): with 81 queries and 50 slots,
-# max staleness ≤1 round is achievable only by strict alternation.  The
-# catalog splits into two halves that swap in-window residency every
-# round:
-#   half ODD  (31): cdc_queries 11, text 9, curation 3, multimodal 5,
-#                   aggregates' displaced 3 — in-window on ODD rounds;
-#   half EVEN (31): joins 9, windows 7, sampling 6, advanced 7,
-#                   quantize-or-sim remainder — in-window on EVEN rounds;
-#   the ~19 remaining slots each round go to rule-A (touched/new
-#   modules) first, then to fillers from the off-phase half.
-# Rule A overrides the phase: a touched module's queries enter the
-# window regardless of phase, displacing fillers only (never the
-# on-phase half).  Result: every query is driver-green in round N or
-# N−1, by construction.
-#
-# Round-17 plan (ODD phase, per the r16 verdict + the r16 rotation
-# statement in COVERAGE.md).  The 50 ODD-half queries lead the window
-# verbatim in their CORRECTNESS_r15 artifact order — all 50 were
-# r15-green in the driver artifact AND 100/100 green in the repo's own
-# STRICT_r16 sweep on the final r16 tree, so rule B
-# (oldest-green-first) selects exactly this set with no slack slots.
-# Rule A check is recorded per touched module in COVERAGE.md's r17
-# rotation statement (modules touched this round that DEFINE catalog
-# queries must appear below; touched DEPENDENCIES of out-of-window
-# queries get a local strict re-verify instead).
-# Out of window (50): the whole EVEN half — the CORRECTNESS_r16 key
-# set verbatim, all r16-green; they rotate back in r18.
-# Catalog total: 100 = two exact 50-query halves.
+# Kept only as a stable order for the first 50 queries, in case an
+# external harness still checks just those; per-change verification is
+# the full strict sweep (tools/check_strict.py), so no rotation applies.
 _WINDOW_ORDER: list[str] = [
     "cdc_subject_route",
     "cdc_envelope_build",

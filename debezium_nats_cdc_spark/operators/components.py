@@ -1,31 +1,32 @@
-"""Delta-iteration connected components — the optimized twin of
-``dedup.connected_components`` (VERDICT r10 task 3).
+"""Near-dup cluster assignment: connected components over the matched
+Jaccard pair set (VERDICT r10 task 3).
 
-``dedup_cluster_assign`` has been the catalog's cost ceiling every
-round since r8 (7.61 s driver / 4.3-4.6 s replay at sf0.1, 2-3x the
-next heaviest query).  The measured decomposition (BENCHLOG round-11,
-tools/cc_decompose.py) splits the ~4.1 s replay median into the shared
-Jaccard pair pipeline (2.65 s median, also paid by
-``dedup_ngram_jaccard``) and the CC fixed-point loop (~1.5 s) — and
-shows the loop's cost at sf0.1 is NOT data: the matched graph is 256
-edges / 477 nodes, so ~1.5 s is pure per-round scheduling +
-localCheckpoint overhead.  That floor is attacked two ways, picked
-adaptively by edge count:
+Cluster assignment has been the catalog's cost ceiling every round
+since r8 (7.61 s driver / 4.3-4.6 s replay at sf0.1, 2-3x the next
+heaviest query).  The measured decomposition (BENCHLOG round-11)
+splits the ~4.1 s replay median into the shared Jaccard pair pipeline
+(2.65 s median, also paid by ``dedup_ngram_jaccard``) and the CC
+fixed-point loop (~1.5 s) — and shows the loop's cost at sf0.1 is NOT
+data: the matched graph is 256 edges / 477 nodes, so ~1.5 s is pure
+per-round scheduling + localCheckpoint overhead.  That floor is
+attacked two ways, picked adaptively by edge count:
 
 0. **Size-gated driver-local union-find** (the broadcast-join analogy:
    below a threshold, centralizing beats distributing).  Under
    ``_DRIVER_CC_MAX_EDGES`` pairs the edge set is collected and solved
    exactly in O(E α(E)) Python — microseconds at sf0.1 versus O(log d)
    Spark rounds of fixed overhead.  Above the gate (the 100 TB
-   matched-pair set), the delta iteration below is the path; since r12
-   the gate is probed with ONE ``limit(gate+1).collect()`` job over the
-   checkpointed PAIR set — under the gate that head IS the whole edge
-   set, so no separate count job and no symmetric-doubled
-   materialization on the driver path (BENCHLOG round-12).
+   matched-pair set), the delta iteration below is the path.  The gate
+   lives in ``cluster_assignment`` alone and is probed with ONE
+   ``limit(gate+1).collect()`` job over the checkpointed PAIR set —
+   under the gate that head IS the whole edge set, so no separate count
+   job and no symmetric-doubled materialization on the driver path
+   (BENCHLOG round-12).
 
-Three changes vs the r8 kernel in the distributed path, none of which
-alter the result (both paths property-tested against the same
-union-find reference):
+The distributed kernel, ``connected_components_delta``, makes three
+changes to the retired r8 pointer-jumping loop (the interleaved A/B is
+in BENCHLOG round-11), none of which alter the result (both arms are
+property-tested against the same union-find reference):
 
 1. **Fused convergence probe.**  The r8 loop runs THREE shuffle joins
    per round: neighbor-min, pointer-jump, and a labels-vs-previous
@@ -58,12 +59,10 @@ union-find reference):
    same 20-round safety valve that RAISES rather than returning split
    clusters.
 
-The registered ``dedup_cluster_assign_delta`` query is the driver-
-oracle harness for the kernel (same recursive-CTE true-closure oracle
-as ``dedup_cluster_assign``); the interleaved A/B against the r8
-kernel is recorded in BENCHLOG round-11.  Reference parity: the same
-near-dup clustering contract as ``dedup_cluster_assign``
-(SURVEY §2.K1; reference `sql/init-db.sql` models dedup state only —
+The registered ``dedup_cluster_assign_delta`` query is the catalog's
+cluster-assignment query, checked against a recursive-CTE true-closure
+oracle.  Reference parity: the near-dup clustering contract of
+SURVEY §2.K1 (reference `sql/init-db.sql` models dedup state only —
 the clustering layer is specified, not implemented, in the reference).
 """
 
@@ -73,7 +72,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..catalog import register
-from .dedup import _CC_MAX_ROUNDS, _cluster_oracle, _jaccard_edges
+from .dedup import _JACCARD_PAIRS_SQL, _jaccard_edges
+
+# Safety valve only — convergence is detected per round, not assumed.
+# Pointer jumping doubles reachable label distance each round, so 20
+# rounds covers component diameter ~2^20; any graph still moving after
+# that indicates a bug, and we raise rather than return split clusters.
+_CC_MAX_ROUNDS = 20
 
 # Size gate for the driver-local fast path (the broadcast-join analogy:
 # below the threshold, centralizing beats distributing).  500k undirected
@@ -108,47 +113,23 @@ def _uf_solve(pair_rows) -> dict:
     return {x: find(x) for x in parent}
 
 
-def _gated_pairs(pairs: DataFrame, driver_max_edges: int):
-    """Materialize the pair set once and probe the size gate with ONE
-    job: ``limit(gate+1).collect()`` — if the head fits the gate it IS
-    the whole edge set (no separate count job, no symmetric-doubled
-    materialization on the driver path).  Returns (checkpointed pairs,
-    collected head or None when over the gate / gate disabled)."""
-    pruned = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
-    if not driver_max_edges:
-        return pruned, None
-    head = pruned.limit(driver_max_edges + 1).collect()
-    if len(head) > driver_max_edges:
-        return pruned, None
-    return pruned, head
-
-
 def connected_components_delta(pairs: DataFrame,
                                max_rounds: int = _CC_MAX_ROUNDS,
-                               driver_max_edges: int = _DRIVER_CC_MAX_EDGES,
                                ) -> DataFrame:
     """(doc_a, doc_b) undirected pairs -> (doc_id, lbl) with lbl = min
-    id in the node's component.  Adaptive: a size-gated driver-local
-    union-find below ``driver_max_edges`` pairs (pass 0 to disable),
-    else frontier-restricted min-label propagation with pointer jumping
-    and a fused convergence probe — see the module docstring for the
-    exactness argument.  Both paths return the same frame as
-    ``dedup.connected_components`` on every input (property-tested side
-    by side, both paths, in tests/test_corpus_ops.py)."""
-    pruned, head = _gated_pairs(pairs, driver_max_edges)
-    if head is not None:
-        roots = _uf_solve((r[0], r[1]) for r in head)
-        id_type = pruned.schema["doc_a"].dataType
-        schema = StructType([StructField("doc_id", id_type),
-                             StructField("lbl", id_type)])
-        return pairs.sparkSession.createDataFrame(
-            sorted(roots.items()), schema)
-    sym = pruned.union(
-        pruned.select(F.col("doc_b").alias("doc_a"),
-                      F.col("doc_a").alias("doc_b"))
+    id in the node's component: the distributed arm of
+    ``cluster_assignment`` — frontier-restricted min-label propagation
+    with pointer jumping and a fused convergence probe.  See the module
+    docstring for the exactness argument; tests/test_corpus_ops.py
+    property-tests it against a union-find reference."""
+    pairs = pairs.select("doc_a", "doc_b")
+    sym = pairs.union(
+        pairs.select(F.col("doc_b").alias("doc_a"),
+                     F.col("doc_a").alias("doc_b"))
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    # materialize the (cheap, checkpoint-derived) symmetric set once;
-    # every loop round derives from it
+    # materialize the symmetric set once; every loop round derives from
+    # it (labels built from an un-checkpointed sym would re-run the
+    # whole upstream pair pipeline on their first action)
     sym = sym.localCheckpoint(eager=True)
     labels = (
         sym.select(F.col("src").alias("doc_id")).distinct()
@@ -195,13 +176,35 @@ def connected_components_delta(pairs: DataFrame,
     )
 
 
+def _cluster_oracle() -> str:
+    return f"""
+    WITH RECURSIVE {_JACCARD_PAIRS_SQL},
+    edges AS (
+      SELECT doc_a AS src, doc_b AS dst FROM jpairs
+      UNION ALL
+      SELECT doc_b AS src, doc_a AS dst FROM jpairs
+    ),
+    reach(node, lbl) AS (
+      SELECT src, src FROM edges
+      UNION
+      SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
+    ),
+    comp AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach
+             GROUP BY node)
+    SELECT doc_id, cluster_id,
+           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT)
+             AS cluster_size
+    FROM comp
+    """
+
+
 @register(
     "dedup_cluster_assign_delta",
     oracle=_cluster_oracle(),
     survey_ids=["K1"],
     doc="Near-dup cluster assignment on the adaptive CC kernel "
-        "(VERDICT r10 task 3): same contract and same recursive-CTE "
-        "true-closure oracle as dedup_cluster_assign. Edge-count-gated "
+        "(VERDICT r10 task 3), checked against a recursive-CTE "
+        "true-closure oracle. Edge-count-gated "
         "strategy pick, the broadcast-join analogy: under 500k matched "
         "pairs the component solve is a driver-local union-find "
         "(O(E a(E)), vs O(log d) Spark rounds of pure scheduling "
@@ -211,8 +214,8 @@ def connected_components_delta(pairs: DataFrame,
         "shuffle runs over last round's CHANGED labels only and the "
         "convergence probe is fused into the round's projection "
         "instead of costing its own labels-vs-previous shuffle join. "
-        "Exactness arguments and the interleaved A/B vs the r8 kernel: "
-        "module docstring + BENCHLOG round-11.",
+        "Exactness arguments: module docstring; the interleaved A/B "
+        "vs the retired r8 kernel: BENCHLOG round-11.",
 )
 def dedup_cluster_assign_delta(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
@@ -233,9 +236,13 @@ def cluster_assignment(spark: SparkSession, pairs: DataFrame,
     graph is hundreds of edges (BENCHLOG round-12 decomposition).
     Above the gate, the distributed delta kernel labels and the sizes
     ride one small groupBy+join over the matched-doc set, exactly as
-    before."""
-    pruned, head = _gated_pairs(pairs, driver_max_edges)
-    if head is not None:
+    before.  ``driver_max_edges=0`` forces the distributed arm."""
+    pruned = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
+    # the size gate is ONE job: a head that fits the gate IS the whole
+    # edge set (no separate count job, no symmetric-doubled collect)
+    head = (pruned.limit(driver_max_edges + 1).collect()
+            if driver_max_edges else None)
+    if head is not None and len(head) <= driver_max_edges:
         from collections import Counter
 
         roots = _uf_solve((r[0], r[1]) for r in head)
@@ -248,7 +255,7 @@ def cluster_assignment(spark: SparkSession, pairs: DataFrame,
         ])
         return spark.createDataFrame(
             [(x, r, counts[r]) for x, r in sorted(roots.items())], schema)
-    labels = connected_components_delta(pruned, driver_max_edges=0)
+    labels = connected_components_delta(pruned)
     sizes = labels.groupBy("lbl").agg(F.count("*").alias("cluster_size"))
     return labels.join(sizes, "lbl").select(
         "doc_id",

@@ -572,7 +572,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# shared by dedup_ngram_jaccard and dedup_cluster_assign's oracles:
+# shared by dedup_ngram_jaccard and dedup_cluster_assign_delta's oracles:
 # word-3-gram inverted-index pair generation with the df-capped anchor
 # fallback (a.df <= CAP keeps all pairs; over-cap shingles contribute
 # only anchor pairs, a.doc_id = per-shingle min), Jaccard >= 0.2
@@ -707,9 +707,10 @@ def _jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Thresholded word-3-gram Jaccard pair set, localCheckpoint-cached
     per (application, sf_dir).
 
-    Both ``dedup_ngram_jaccard`` and ``dedup_cluster_assign`` consume
-    this exact pair set; without the cache the cluster query re-runs the
-    ~3 s shingle→postings→pair pipeline before its CC rounds even start.
+    Both ``dedup_ngram_jaccard`` and ``dedup_cluster_assign_delta``
+    consume this exact pair set; without the cache the cluster query
+    re-runs the ~3 s shingle→postings→pair pipeline before its CC rounds
+    even start.
     The checkpoint is lazy (``eager=False``): whichever query runs first
     materializes it, the other reuses the materialized RDD.  Keyed by
     applicationId (a restarted session can never see another JVM's
@@ -909,118 +910,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["doc_a", "doc_b"])
         .filter(F.col("hamming") <= 8)
         .orderBy("doc_a", "doc_b")
-    )
-
-
-# ------------------------------------------------ cluster assignment ---
-
-
-# Safety valve only — convergence is detected per round, not assumed.
-# Pointer jumping doubles reachable label distance each round, so 20
-# rounds covers component diameter ~2^20; any graph still moving after
-# that indicates a bug, and we raise rather than return split clusters.
-_CC_MAX_ROUNDS = 20
-
-
-def _cluster_oracle() -> str:
-    return f"""
-    WITH RECURSIVE {_JACCARD_PAIRS_SQL},
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM jpairs
-      UNION ALL
-      SELECT doc_b AS src, doc_a AS dst FROM jpairs
-    ),
-    reach(node, lbl) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    comp AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach
-             GROUP BY node)
-    SELECT doc_id, cluster_id,
-           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT)
-             AS cluster_size
-    FROM comp
-    """
-
-
-def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup cluster assignment — since r12 a delegate to the
-    adaptive CC kernel (VERDICT r10 task 3 / r11 task 1: the swap).
-    The r8 pointer-jumping-only registration is RETIRED from the
-    catalog; ``dedup_cluster_assign_delta`` (components.py, r11-green
-    under the same recursive-CTE true-closure oracle) is the registered
-    cluster-assignment query, and the rename back to this name is
-    queued for r13's ODD window, when the query is in-window anyway
-    (COVERAGE.md r12 rotation statement).  The r8 kernel itself
-    (``connected_components`` below) remains as the reference
-    implementation the property tests compare both paths against."""
-    from .components import dedup_cluster_assign_delta
-
-    return dedup_cluster_assign_delta(spark, sf_dir)
-
-
-def connected_components(pairs: DataFrame,
-                         max_rounds: int = _CC_MAX_ROUNDS) -> DataFrame:
-    """(doc_a, doc_b) undirected pairs -> (doc_id, lbl) with lbl = min
-    id in the node's component.  Min-label propagation with pointer
-    jumping, iterated until a round changes no label (the fixed point —
-    every node then holds its component minimum), with ``max_rounds`` as
-    a safety valve that RAISES rather than silently returning
-    half-merged clusters.
-
-    The convergence probe is cheap by construction: each round's labels
-    are localCheckpoint-materialized anyway (lineage would double per
-    round otherwise), so the changed-label check is one hash join +
-    limit(1) over the already-in-memory matched-doc set — typical
-    corpora converge in 2–3 rounds, so adaptive termination is also
-    faster than any fixed bound sized for the worst case.
-
-    Property-tested against a union-find reference over random graphs
-    and a >2^6-diameter path graph (tests/test_corpus_ops.py)."""
-    sym = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    # materialize the edge set ONCE before deriving anything from it —
-    # labels built from the un-checkpointed sym would re-run the whole
-    # upstream pair pipeline on its own first action (measured: +3 s)
-    sym = sym.localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("src").alias("doc_id")).distinct()
-        .withColumn("lbl", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_rounds):
-        prev = labels
-        nbr = (
-            sym.join(prev.withColumnRenamed("doc_id", "src"), "src")
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("lbl").alias("_nlbl"))
-        )
-        labels = prev.join(nbr, "doc_id", "left").select(
-            "doc_id",
-            F.least("lbl", F.coalesce("_nlbl", F.col("lbl"))).alias("lbl"),
-        )
-        # pointer jump: lbl <- label(lbl); invariant lbl <= doc_id makes
-        # the jumped label always <= the current one
-        jump = labels.select(
-            F.col("doc_id").alias("lbl"), F.col("lbl").alias("_jlbl")
-        )
-        labels = labels.join(jump, "lbl", "left").select(
-            "doc_id", F.coalesce("_jlbl", F.col("lbl")).alias("lbl")
-        ).localCheckpoint(eager=True)
-        changed = (
-            labels.join(prev.withColumnRenamed("lbl", "_plbl"), "doc_id")
-            .filter(F.col("lbl") != F.col("_plbl"))
-            .limit(1)
-            .count()
-        )
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_rounds} rounds "
-        f"(component diameter > 2^{max_rounds}); refusing to return "
-        "split clusters"
     )
 
 

@@ -15,12 +15,12 @@ Design (no cross join anywhere, mirrors corpus_dedup):
   planes as the batch op but 8 bits/table: 256 buckets per table keeps
   per-bucket candidate counts bounded at ingest batch sizes; the batch
   op's 4-bit tables are tuned for one-shot self-joins at sf0.01).
-- The accumulated state is a BUCKET INDEX, an append-only parquet log.
-  Default layout ("norm", A/B-chosen r7): ids-only (table_id, bucket,
-  vec_id) rows plus a vectors-once sibling store joined only for the
-  COLLIDING candidates; "denorm" keeps the vector in every bucket row
-  (x4 space) for a join-free verify.  At 100 TB either is a bucketed
-  table co-located with the probe join.
+- The accumulated state is a BUCKET INDEX, an append-only parquet log
+  of ids-only (table_id, bucket, vec_id) rows, plus a vectors-once
+  sibling store joined only for the COLLIDING candidates (the
+  normalized layout won the r7 A/B, BENCHLOG r7, over one that kept
+  the vector in every bucket row at x4 space).  At 100 TB both are
+  bucketed tables co-located with the probe join.
 - Per micro-batch: probe = equi-join batch sketches vs index on
   (table_id, bucket), verify candidates with an Arrow pair-cosine, keep
   matches >= threshold (the index vector always wins — it arrived
@@ -103,36 +103,24 @@ _pair_cos = _pair_cos_arrow
 
 def dedup_batch_against_index(batch_sk: DataFrame,
                               index_sk: DataFrame | None,
-                              id_col: str = "vec_id",
-                              index_vectors: DataFrame | None = None
-                              ) -> DataFrame:
+                              index_vectors: DataFrame | None,
+                              id_col: str = "vec_id") -> DataFrame:
     """Resolve one batch: (vec_id, dup_of, cos_sim) with dup_of NULL for
     accepted vectors.  Candidates come only from bucket collisions —
     probe (batch vs index) and intra-batch — each verified by true
     cosine before any match is claimed.
 
-    Two index layouts (pipeline constructor flag, pytest-pinned equal):
-    - denormalized: ``index_sk`` rows carry (table_id, bucket, id,
-      embedding, norm) — the vector x N_TABLES, verify is join-free;
-    - normalized: ``index_sk`` rows are ids-only (table_id, bucket, id)
-      and ``index_vectors`` holds each accepted vector ONCE — candidate
-      ids join to the vector store before the cosine verify, so index
-      storage shrinks ~N_TABLES x at the cost of one extra equi-join
-      over only the COLLIDING candidates (not the corpus).
+    ``index_sk`` rows are ids-only (table_id, bucket, id) and
+    ``index_vectors`` holds each accepted vector ONCE — candidate ids
+    join to the vector store before the cosine verify, so the index
+    stores no vector x N_TABLES, at the cost of one extra equi-join
+    over only the COLLIDING candidates (not the corpus).  Both are None
+    before the first accepted batch.
     """
     from ..speccache import per_context
 
     probe_matches = None
     if index_sk is not None:
-        cand_cols = [
-            F.col(f"b.{id_col}").alias("vec_id"),
-            F.col(f"i.{id_col}").alias("dup_of"),
-            F.col("b.embedding").alias("emb_b"),
-            F.col("b.norm").alias("norm_b"),
-        ]
-        if index_vectors is None:
-            cand_cols += [F.col("i.embedding").alias("emb_i"),
-                          F.col("i.norm").alias("norm_i")]
         cand = (
             batch_sk.alias("b")
             .join(
@@ -143,10 +131,13 @@ def dedup_batch_against_index(batch_sk: DataFrame,
                 # indexed this batch's own vectors already
                 & (F.col(f"b.{id_col}") != F.col(f"i.{id_col}")),
             )
-            .select(*cand_cols)
+            .select(
+                F.col(f"b.{id_col}").alias("vec_id"),
+                F.col(f"i.{id_col}").alias("dup_of"),
+                F.col("b.embedding").alias("emb_b"),
+                F.col("b.norm").alias("norm_b"),
+            )
             .dropDuplicates(["vec_id", "dup_of"])  # OR across tables
-        )
-        if index_vectors is not None:
             # fetch the index-side vector for the colliding candidates
             # only; inner join also heals a torn epoch where bucket rows
             # committed before their vector-store rows (the replayed
@@ -154,7 +145,7 @@ def dedup_batch_against_index(batch_sk: DataFrame,
             # vector (store loss/mutation) is silently dropped here —
             # EmbeddingDedupPipeline.check_consistency / strict=True is
             # the loud-failure path for that drift.
-            cand = cand.join(
+            .join(
                 index_vectors.select(
                     F.col(id_col).alias("dup_of"),
                     F.col("embedding").alias("emb_i"),
@@ -162,6 +153,7 @@ def dedup_batch_against_index(batch_sk: DataFrame,
                 ),
                 "dup_of",
             )
+        )
         probe_matches = (
             cand.withColumn("cos_sim", _pair_cos(
                 F.col("emb_b"), F.col("emb_i"),
@@ -252,51 +244,31 @@ def dedup_batch_against_index(batch_sk: DataFrame,
     return all_ids.join(pointer_jump(best, "vec_id"), "vec_id", "left")
 
 
-LAYOUTS = ("denorm", "norm")
-
-# "denorm" stores the vector in every bucket row (x N_TABLES); "norm"
-# stores ids-only bucket rows + each vector ONCE in a sibling store.
-# Default = norm: the sf0.1 interleaved A/B (tools/ab_embedding_layout,
-# BENCHLOG r7: 12k vectors over 6 batches, A-B-B-A x2) measured best
-# wall within noise (13.36 vs 13.43 s) but norm ahead on median (14.66
-# vs 15.86 s) AND 33% smaller index bytes at 64-dim — and the storage
-# gap only widens with vector width (at 4 KB/vector the cut is ~4x),
-# so the normalized layout is the scale default; "denorm" remains for
-# probe-join-free reads of the index itself.
-DEFAULT_LAYOUT = "norm"
-
-
 class EmbeddingDedupPipeline(FormatStampedIndexIngest):
     """foreachBatch-driven incremental embedding dedup with an on-disk
     bucket index.  Index/sink/compaction/start machinery lives in
     _ingest_base; this class owns only the vector sketch + batch
     resolution.
 
-    ``layout="norm"`` (default, A/B-chosen — see DEFAULT_LAYOUT)
-    persists ids-only bucket rows plus a vectors-once store at
-    ``vectors_dir``; ``layout="denorm"`` persists (table_id, bucket,
-    vec_id, embedding, norm) bucket rows.  The two
-    are result-identical (pytest-pinned); the format stamp carries the
-    layout so an index can never be probed under the wrong one."""
+    It persists ids-only bucket rows plus a vectors-once store at
+    ``vectors_dir``.  The format stamp carries the ``+norm`` layout
+    suffix, so an index written by the retired layout that kept the
+    vector in every bucket row (bare ``INDEX_FORMAT`` stamp) is refused
+    instead of probed."""
 
     QUERY_NAME = "embedding-dedup"
     INDEX_DIR_NAME = "bucket_index"
     INDEX_NOUN = "bucket index"
     FORMAT_NOUN = "sketch format"
 
-    def __init__(self, root: str, backend=None,
-                 layout: str = DEFAULT_LAYOUT, strict: bool = False):
-        if layout not in LAYOUTS:
-            raise ValueError(f"layout must be one of {LAYOUTS}, "
-                             f"got {layout!r}")
+    def __init__(self, root: str, backend=None, strict: bool = False):
         super().__init__(root, backend)
-        self.layout = layout
         self.strict = strict
         self.vectors_dir = os.path.join(root, "vector_store")
 
     def check_consistency(self, spark: SparkSession) -> dict:
-        """Norm-layout drift probe: count distinct index vec_ids that
-        have NO row in the vector store.
+        """Drift probe: count distinct index vec_ids that have NO row in
+        the vector store.
 
         The designed torn-epoch shapes heal through replay (the probe's
         own-id guard plus re-appended vectors), but any OTHER store/index
@@ -305,7 +277,7 @@ class EmbeddingDedupPipeline(FormatStampedIndexIngest):
         store drops the candidate and the pipeline accepts a
         near-duplicate instead of failing.  This check makes that drift
         loud.  Returns ``{"index_ids": n, "store_ids": n, "missing": n}``
-        (all zero for denorm/empty).  With ``strict=True`` the pipeline
+        (all zero for an empty index).  With ``strict=True`` the pipeline
         runs it after any micro-batch in which a compaction actually ran
         (the directory-replacing operation the probe exists to audit)
         and raises on missing > 0 — a full ids-only scan of both stores,
@@ -316,9 +288,8 @@ class EmbeddingDedupPipeline(FormatStampedIndexIngest):
         # swap_write this would otherwise read a half-swapped directory
         # and misreport drift (process_batch does the same before probing)
         self.backend.recover(self.index_dir)
-        if self.layout == "norm":
-            self.backend.recover(self.vectors_dir)
-        if self.layout != "norm" or not self.backend.has_data(self.index_dir):
+        self.backend.recover(self.vectors_dir)
+        if not self.backend.has_data(self.index_dir):
             return out
         idx_ids = (spark.read.parquet(self.index_dir)
                    .select("vec_id").distinct())
@@ -339,11 +310,11 @@ class EmbeddingDedupPipeline(FormatStampedIndexIngest):
         return out
 
     def _format(self) -> str:
-        # module global: test-monkeypatchable; layout participates so a
-        # norm index read as denorm (missing embedding columns) refuses
-        # loudly instead of failing mid-probe
-        fmt = INDEX_FORMAT
-        return fmt if self.layout == "denorm" else f"{fmt}+norm"
+        # module global: test-monkeypatchable.  The "+norm" suffix marks
+        # the ids-only layout, so an index stamped with the bare format
+        # (the retired vector-per-bucket-row layout) refuses loudly
+        # instead of failing mid-probe
+        return f"{INDEX_FORMAT}+norm"
 
     def _compact_threshold(self) -> int:
         return INDEX_COMPACT_THRESHOLD
@@ -356,24 +327,22 @@ class EmbeddingDedupPipeline(FormatStampedIndexIngest):
         # heal a torn compaction BEFORE probing (corpus_dedup lesson: a
         # torn index reads as empty and silently accepts near-dups)
         self.backend.recover(self.index_dir)
-        if self.layout == "norm":
-            self.backend.recover(self.vectors_dir)
+        self.backend.recover(self.vectors_dir)
         self._stamp_format()
         sk = _sketch(vecs).localCheckpoint(eager=True)
         index_sk = self._index(spark)
         index_vecs = None
-        if self.layout == "norm" and index_sk is not None:
+        if index_sk is not None:
             if self.backend.has_data(self.vectors_dir):
                 index_vecs = spark.read.parquet(self.vectors_dir)
             else:
                 # torn first epoch: bucket rows committed, vector store
                 # not.  Those rows are this batch's own ids (excluded by
                 # the probe's id guard) — an empty store keeps the
-                # normalized join path and the replay re-appends them.
+                # store join well-formed and the replay re-appends them.
                 index_vecs = sk.select("vec_id", "embedding", "norm").limit(0)
-        verdict = dedup_batch_against_index(sk, index_sk,
-                                            index_vectors=index_vecs)
-        verdict = verdict.localCheckpoint(eager=True)
+        verdict = dedup_batch_against_index(
+            sk, index_sk, index_vecs).localCheckpoint(eager=True)
 
         dup_ids = verdict.filter(F.col("dup_of").isNotNull())
         accepted_ids = verdict.filter(F.col("dup_of").isNull()).select("vec_id")
@@ -383,20 +352,16 @@ class EmbeddingDedupPipeline(FormatStampedIndexIngest):
         self._append(vecs.join(accepted_ids, "vec_id", "left_semi"),
                      self.accepted_dir, "accepted", epoch_id)
         accepted_sk = sk.join(accepted_ids, "vec_id", "left_semi")
-        if self.layout == "norm":
-            self._append(accepted_sk.select("table_id", "bucket", "vec_id"),
-                         self.index_dir, "index", epoch_id)
-            self._append(
-                accepted_sk.dropDuplicates(["vec_id"])
-                .select("vec_id", "embedding", "norm"),
-                self.vectors_dir, "vectors", epoch_id)
-        else:
-            self._append(accepted_sk, self.index_dir, "index", epoch_id)
+        self._append(accepted_sk.select("table_id", "bucket", "vec_id"),
+                     self.index_dir, "index", epoch_id)
+        self._append(
+            accepted_sk.dropDuplicates(["vec_id"])
+            .select("vec_id", "embedding", "norm"),
+            self.vectors_dir, "vectors", epoch_id)
         compacted = self._maybe_compact_index(spark)
-        if self.layout == "norm":
-            compacted |= self._maybe_compact_dir(spark, self.vectors_dir)
-            # strict mode pays the full ids-only scan only when a
-            # compaction actually replaced a directory this batch — the
-            # operation the drift probe exists to audit
-            if self.strict and compacted:
-                self.check_consistency(spark)
+        compacted |= self._maybe_compact_dir(spark, self.vectors_dir)
+        # strict mode pays the full ids-only scan only when a compaction
+        # actually replaced a directory this batch — the operation the
+        # drift probe exists to audit
+        if self.strict and compacted:
+            self.check_consistency(spark)

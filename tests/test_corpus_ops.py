@@ -114,7 +114,9 @@ def test_quantize_int8_roundtrip_error_bound(spark, tmp_path):
 def test_cluster_assign_chains_transitively(spark, tmp_path):
     """A->B->C near-dup chain (A~C not directly similar) must land in ONE
     cluster with the min doc_id as representative."""
-    from debezium_nats_cdc_spark.operators.dedup import dedup_cluster_assign
+    from debezium_nats_cdc_spark.operators.components import (
+        dedup_cluster_assign_delta,
+    )
 
     base = [f"tok{i}" for i in range(30)]
     a = " ".join(base)
@@ -127,64 +129,10 @@ def test_cluster_assign_chains_transitively(spark, tmp_path):
         (3, "en", "s", 10, c), (4, "en", "s", 10, lone),
     ]).write.parquet(path)
     out = {r["doc_id"]: r for r in
-           dedup_cluster_assign(spark, str(tmp_path)).collect()}
+           dedup_cluster_assign_delta(spark, str(tmp_path)).collect()}
     assert set(out) == {1, 2, 3}  # lone doc has no pairs -> not clustered
     assert {r["cluster_id"] for r in out.values()} == {1}
     assert all(r["cluster_size"] == 3 for r in out.values())
-
-
-def test_connected_components_matches_union_find(spark):
-    """Property: over random graphs, the distributed pointer-jumping
-    loop must agree with a sequential union-find on every node."""
-    import random
-
-    from debezium_nats_cdc_spark.operators.dedup import connected_components
-
-    rng = random.Random(42)
-    for trial in range(5):
-        n = rng.randint(5, 60)
-        m = rng.randint(1, 2 * n)
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        edges = [(a, b) for a, b in edges if a != b]
-        if not edges:
-            continue
-        # include one long path to stress diameter
-        chain = list(range(100, 100 + rng.randint(3, 20)))
-        edges += list(zip(chain, chain[1:]))
-
-        parent = {}
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-        def union(a, b):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        for a, b in edges:
-            union(a, b)
-        expected = {x: find(x) for x in parent}
-
-        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got = {r["doc_id"]: r["lbl"]
-               for r in connected_components(df).collect()}
-        assert got == expected, f"trial {trial}: {got} != {expected}"
-
-
-def test_connected_components_long_path_converges(spark):
-    """A 200-node path has diameter 199 > 2^6: the old fixed-6-round
-    loop silently split it; adaptive convergence must label every node
-    with the path minimum (and must NOT hit the safety valve, since
-    pointer jumping needs only ~log2(199) ≈ 8 rounds)."""
-    from debezium_nats_cdc_spark.operators.dedup import connected_components
-
-    edges = [(i, i + 1) for i in range(200)]
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {r["doc_id"]: r["lbl"] for r in connected_components(df).collect()}
-    assert set(got) == set(range(201))
-    assert set(got.values()) == {0}
 
 
 def test_bucket_cap_anchor_fallback_keeps_recall_and_is_observed(
@@ -277,18 +225,18 @@ def test_pair_cache_invalidates_on_table_rewrite(spark, tmp_path):
 
 @pytest.mark.parametrize("gate", [500_000, 0],
                          ids=["driver_path", "distributed_path"])
-def test_connected_components_delta_matches_union_find_and_v1(spark, gate):
-    """Property (VERDICT r10 task 3): BOTH adaptive arms — the
-    size-gated driver union-find (gate open) and the
-    frontier-restricted delta loop (gate=0 forces it) — agree with a
-    sequential union-find AND with the r8 kernel on every node over
-    random graphs + a diameter-stressing path."""
+def test_connected_components_delta_matches_union_find(spark, gate):
+    """Property (VERDICT r10 task 3): BOTH arms of cluster_assignment —
+    the size-gated driver union-find (gate open) and the
+    frontier-restricted delta loop plus its size join (gate=0 forces
+    it) — agree with a sequential union-find on every node's cluster_id
+    AND cluster_size, over random graphs + a diameter-stressing path."""
     import random
+    from collections import Counter
 
     from debezium_nats_cdc_spark.operators.components import (
-        connected_components_delta,
+        cluster_assignment,
     )
-    from debezium_nats_cdc_spark.operators.dedup import connected_components
 
     rng = random.Random(1107)
     for trial in range(5):
@@ -315,16 +263,15 @@ def test_connected_components_delta_matches_union_find_and_v1(spark, gate):
 
         for a, b in edges:
             union(a, b)
-        expected = {x: find(x) for x in parent}
+        roots = {x: find(x) for x in parent}
+        sizes = Counter(roots.values())
+        expected = {x: (r, sizes[r]) for x, r in roots.items()}
 
         df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got = {r["doc_id"]: r["lbl"]
-               for r in connected_components_delta(
-                   df, driver_max_edges=gate).collect()}
+        got = {r["doc_id"]: (r["cluster_id"], r["cluster_size"])
+               for r in cluster_assignment(
+                   spark, df, driver_max_edges=gate).collect()}
         assert got == expected, f"trial {trial}"
-        v1 = {r["doc_id"]: r["lbl"]
-              for r in connected_components(df).collect()}
-        assert got == v1, f"trial {trial} disagrees with the r8 kernel"
 
 
 def test_connected_components_delta_long_path_converges(spark):
@@ -337,7 +284,6 @@ def test_connected_components_delta_long_path_converges(spark):
     edges = [(i, i + 1) for i in range(200)]
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     got = {r["doc_id"]: r["lbl"]
-           for r in connected_components_delta(
-               df, driver_max_edges=0).collect()}
+           for r in connected_components_delta(df).collect()}
     assert set(got) == set(range(201))
     assert set(got.values()) == {0}

@@ -25,6 +25,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from debezium_nats_cdc_spark.operators import dedup
+from debezium_nats_cdc_spark.operators.components import _uf_solve
 
 EST_THRESHOLD = 0.5
 
@@ -44,13 +45,10 @@ def _pairs_at_cap(spark, docs, cap, monkeypatch):
     }
 
 
-def _components(spark, pairs):
-    if not pairs:
-        return frozenset()
-    df = spark.createDataFrame(sorted(pairs), "doc_a long, doc_b long")
+def _components(pairs):
     comp = {}
-    for r in dedup.connected_components(df).collect():
-        comp.setdefault(r["lbl"], set()).add(r["doc_id"])
+    for doc, root in _uf_solve(pairs).items():
+        comp.setdefault(root, set()).add(doc)
     return frozenset(frozenset(v) for v in comp.values())
 
 
@@ -93,7 +91,7 @@ def test_anchor_fallback_recall_floor_on_boilerplate_corpus(
 
     # cluster-level recall: connected components are unchanged — the
     # downstream consumers see the identical answer
-    assert _components(spark, capped) == _components(spark, truth)
+    assert _components(capped) == _components(truth)
 
     # pairs outside the over-cap family are untouched by the cap
     # (whether LSH banding surfaced (200, 201) is a property of the

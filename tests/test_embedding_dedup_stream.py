@@ -18,6 +18,7 @@ from pyspark.sql.types import (
 )
 
 from debezium_nats_cdc_spark.streaming.embedding_dedup import (
+    INDEX_FORMAT,
     N_TABLES,
     EmbeddingDedupPipeline,
 )
@@ -46,11 +47,9 @@ def _scaled(vec: list[float], k: float) -> list[float]:
 V1, V2, V5 = _unit(101), _unit(202), _unit(505)
 
 
-@pytest.fixture(params=["denorm", "norm"])
-def pipeline_run(spark, tmp_path, request):
-    """Two micro-batches through the dedup stream; returns the pipeline.
-    Parametrized over both index layouts: every behavioural test in this
-    file pins layout parity (VERDICT r6 #5)."""
+@pytest.fixture
+def pipeline_run(spark, tmp_path):
+    """Two micro-batches through the dedup stream; returns the pipeline."""
     in_dir = str(tmp_path / "in")
     os.makedirs(in_dir)
     root = str(tmp_path / "emb-dedup")
@@ -67,7 +66,7 @@ def pipeline_run(spark, tmp_path, request):
     spark.createDataFrame(batch1, VEC_SCHEMA).coalesce(1).write.parquet(
         os.path.join(in_dir, "b1"))
 
-    pipe = EmbeddingDedupPipeline(root, layout=request.param)
+    pipe = EmbeddingDedupPipeline(root)
     stream = (
         spark.readStream.schema(VEC_SCHEMA)
         .option("maxFilesPerTrigger", "1")
@@ -153,35 +152,34 @@ def test_dirty_embeddings_pass_through_without_matching(spark, tmp_path):
 def test_norm_layout_stores_each_vector_once(spark, pipeline_run):
     pipe = pipeline_run
     idx = spark.read.parquet(pipe.index_dir)
-    if pipe.layout == "norm":
-        # ids-only bucket rows + one vector-store row per accepted id
-        assert "embedding" not in idx.columns
-        vs = spark.read.parquet(pipe.vectors_dir)
-        assert sorted(r.vec_id for r in vs.collect()) == [1, 2, 5]
-        assert {"vec_id", "embedding", "norm"} <= set(vs.columns)
-    else:
-        assert "embedding" in idx.columns
+    # ids-only bucket rows + one vector-store row per accepted id
+    assert "embedding" not in idx.columns
+    vs = spark.read.parquet(pipe.vectors_dir)
+    assert sorted(r.vec_id for r in vs.collect()) == [1, 2, 5]
+    assert {"vec_id", "embedding", "norm"} <= set(vs.columns)
 
 
 def test_layout_participates_in_format_stamp(spark, tmp_path):
-    """A norm-built index probed by a denorm pipeline (or vice versa)
-    must refuse loudly — the layouts' index schemas are incompatible."""
+    """An index stamped with the bare INDEX_FORMAT — the stamp of the
+    retired layout that kept the vector in every bucket row — must be
+    refused loudly: its bucket rows do not fit the ids-only probe."""
+    from pathlib import Path
+
     in_dir = str(tmp_path / "in")
     os.makedirs(in_dir)
     spark.createDataFrame([Row(vec_id=1, embedding=V1)], VEC_SCHEMA) \
         .coalesce(1).write.parquet(os.path.join(in_dir, "b1"))
-    root = str(tmp_path / "emb-dedup")
-    pipe = EmbeddingDedupPipeline(root, layout="norm")
+    pipe = EmbeddingDedupPipeline(str(tmp_path / "emb-dedup"))
     stream = (
         spark.readStream.schema(VEC_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(os.path.join(in_dir, "*"))
     )
     pipe.start(spark, stream).awaitTermination()
+    assert pipe._index(spark) is not None
+    Path(pipe.index_dir, "._format").write_text(INDEX_FORMAT)
     with pytest.raises(ValueError, match="sketch format"):
-        EmbeddingDedupPipeline(root, layout="denorm")._index(spark)
-    with pytest.raises(ValueError, match="layout"):
-        EmbeddingDedupPipeline(root, layout="bogus")
+        pipe._index(spark)
 
 
 def test_format_stamp_guards_stale_index(spark, pipeline_run):
@@ -194,7 +192,7 @@ def test_format_stamp_guards_stale_index(spark, pipeline_run):
 
 
 def test_consistency_check_surfaces_store_drift(spark, pipeline_run):
-    """ADVICE r7: in the norm layout a missing vector-store row makes
+    """ADVICE r7: a missing vector-store row makes
     the probe's inner join silently drop the candidate (near-dups get
     accepted).  check_consistency makes that drift loud; strict=True
     raises on it."""
@@ -202,9 +200,6 @@ def test_consistency_check_surfaces_store_drift(spark, pipeline_run):
 
     pipe = pipeline_run
     rep = pipe.check_consistency(spark)
-    if pipe.layout == "denorm":
-        assert rep == {"index_ids": 0, "store_ids": 0, "missing": 0}
-        return
     # healthy pipeline: every indexed id has its vector stored
     assert rep["index_ids"] == 3 and rep["missing"] == 0
     assert rep["store_ids"] == 3
@@ -216,6 +211,6 @@ def test_consistency_check_surfaces_store_drift(spark, pipeline_run):
     assert drifted["store_ids"] == 0
     assert drifted["missing"] == 3
 
-    strict = EmbeddingDedupPipeline(pipe.root, layout="norm", strict=True)
+    strict = EmbeddingDedupPipeline(pipe.root, strict=True)
     with pytest.raises(RuntimeError, match="drift"):
         strict.check_consistency(spark)

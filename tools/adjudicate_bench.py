@@ -43,9 +43,8 @@ WARM_DIR = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.01")
 TS_CONF = "spark.sql.parquet.outputTimestampType"
 
 # default suspects: the catalog's heaviest family (reference values are
-# the r9/r8 artifact pair that first motivated this tool; the r8-kernel
-# dedup_cluster_assign was retired in r12 — its contract lives on as
-# dedup_cluster_assign_delta, benchmarked here without a reference pair)
+# the r9/r8 artifact pair that first motivated this tool; the cluster
+# assignment query has no reference pair — its r8 kernel is deleted)
 SUSPECTS = {
     "dedup_cluster_assign_delta": None,
     "dedup_minhash_lsh": (1.86, 2.9),

@@ -5,7 +5,7 @@ in the order a human would want failures reported.
 Usage: python tools/verify_all.py [--fast]
 
 --fast skips the full pytest suite (~8 min) and the bench, leaving the
-correctness/plan/rotation gates (~5 min).  Exit 0 iff every gate
+correctness/plan/fuzz gates (~5 min).  Exit 0 iff every gate
 passes; each gate's tail is echoed either way.
 """
 
@@ -25,7 +25,6 @@ GATES: list[tuple[str, list[str]]] = [
        [sys.executable, "tools/check_strict.py", f"{TESTDATA}/{sf}"])
       for sf in ("sf0.001", "sf0.01")),
     ("plan audit", [sys.executable, "tools/plan_audit.py"]),
-    ("window rotation", [sys.executable, "tools/check_rotation.py"]),
     # seed-0 differential fuzz (~90 s): the dirty-input gate is cheap
     # enough for the fast sweep, and it is where the r6 oracle gaps
     # were found — don't let --fast skip it
