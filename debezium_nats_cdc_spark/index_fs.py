@@ -12,9 +12,7 @@ natively —
     the PQ ``model.json``) → GET/PUT of one object;
   * marker existence (``_rebalance.lock``) → HEAD;
   * dead code-partition removal (``ivf_refresh_pq``'s erasure-cascade
-    leg) → LIST + batch DELETE — routed through the seam (r15) so
-    full-cell PII erasure stays completable on every backend, not
-    just rename-atomic ones.
+    leg) → LIST + batch DELETE (r15).
 
 What deliberately does NOT go through it: the data-plane swap
 machinery (``ivf_compact`` / ``ivf_rebalance``'s staging dir + two
@@ -32,13 +30,15 @@ a partial document.  ``LocalIndexFS`` uses write-tmp + ``os.replace``;
 an object store gets this for free (PUT is atomic per object), so an
 implementation there is a plain PUT.
 
-Deployment installs a backend once, process-wide, via
-``set_index_fs`` — mirroring how a cluster deployment swaps
-``StateBackend`` — and every fingerprint, sidecar, poll, and marker
-check in ``operators/ann_index.py`` / ``operators/ann_pq.py`` /
-``streaming/ann_ingest.py`` routes through it
-(tests/test_index_fs.py pins that no metadata call bypasses the
-seam).
+``LocalIndexFS`` is the one shipped implementation: the data plane
+above is rename-atomic-only, so an object-store metadata backend
+alone could not serve a deployment.  A backend is installed once,
+process-wide, via ``set_index_fs`` — mirroring how a cluster
+deployment swaps ``StateBackend`` — and every fingerprint, sidecar,
+poll, and marker check in ``operators/ann_index.py`` /
+``operators/ann_pq.py`` / ``streaming/ann_ingest.py`` routes through
+it (tests/test_index_fs.py pins, with recording fakes, that no
+metadata call bypasses the seam).
 """
 
 from __future__ import annotations
@@ -158,96 +158,6 @@ class LocalIndexFS(IndexFS):
             shutil.rmtree(root)
         except FileNotFoundError:
             pass
-
-
-class ArrowIndexFS(IndexFS):
-    """``pyarrow.fs``-backed implementation — the seam's object-store
-    mapping proven against a second real backend (r15; VERDICT r14
-    task 7).  ``pyarrow.fs.FileSystem`` is exactly the interface
-    pyarrow's S3/GCS/HDFS filesystems implement, so this class IS the
-    LIST/HEAD/GET/PUT translation an object-store deployment installs:
-    ``ArrowIndexFS(pyarrow.fs.S3FileSystem(...))`` with no further
-    code.  Default backend is Arrow's LocalFileSystem (how the
-    contract suite exercises it hermetically).
-
-    Shape parity: listings are byte-identical to ``LocalIndexFS``'s
-    (root-level files as ``./name`` — fingerprints recorded under one
-    backend must compare equal under another, per the ``listing``
-    contract).
-
-    Atomicity note: ``write_json_atomic`` stages to ``<path>.tmp``
-    then ``move``s — an atomic rename on local/HDFS-class backends.
-    On a true object store ``move`` is copy+delete (not atomic), but
-    there a plain single PUT already IS atomic per the storage
-    contract, so an S3 deployment may subclass and write directly;
-    the staged default is correct everywhere, merely non-optimal
-    there."""
-
-    def __init__(self, fs=None):
-        import pyarrow.fs as pafs
-
-        self._pafs = pafs
-        self.fs = fs if fs is not None else pafs.LocalFileSystem()
-
-    def _infos(self, root: str):
-        # pre-check the root type instead of catching a backend's
-        # errno mapping: only the POSIX LocalFileSystem surfaces a
-        # file-as-root as NotADirectoryError — S3/GCS/HDFS raise their
-        # own IOError flavors — and LocalIndexFS parity demands []/0
-        # there, never a raise (code-review r15, both passes).  One
-        # extra HEAD per listing, object-store-cheap.
-        if self.fs.get_file_info(root).type != self._pafs.FileType.Directory:
-            return []
-        sel = self._pafs.FileSelector(root, recursive=True,
-                                      allow_not_found=True)
-        return self.fs.get_file_info(sel)
-
-    def listing(self, root: str) -> list[list]:
-        out: list[list] = []
-        for info in self._infos(root):
-            if info.type != self._pafs.FileType.File:
-                continue
-            if info.base_name.startswith("."):
-                continue
-            rel = os.path.relpath(info.path, root)
-            if os.sep not in rel:  # LocalIndexFS shape: root files ./x
-                rel = os.path.join(".", rel)
-            out.append([rel, info.size])
-        return sorted(out)
-
-    def count_files(self, root: str, suffix: str = ".parquet") -> int:
-        return sum(
-            1 for info in self._infos(root)
-            if info.type == self._pafs.FileType.File
-            and info.base_name.endswith(suffix)
-            and not info.base_name.startswith(("_", ".")))
-
-    def read_json(self, path: str) -> dict | None:
-        if not self.exists(path):
-            return None
-        with self.fs.open_input_stream(path) as f:
-            return json.loads(f.read().decode("utf-8"))
-
-    def write_json_atomic(self, path: str, rec: dict) -> None:
-        tmp = path + ".tmp"
-        with self.fs.open_output_stream(tmp) as f:
-            f.write(json.dumps(rec).encode("utf-8"))
-        self.fs.move(tmp, path)
-
-    def exists(self, path: str) -> bool:
-        return (self.fs.get_file_info(path).type
-                != self._pafs.FileType.NotFound)
-
-    def remove(self, path: str) -> None:
-        if self.exists(path):
-            self.fs.delete_file(path)
-
-    def remove_tree(self, root: str) -> None:
-        info = self.fs.get_file_info(root)
-        if info.type == self._pafs.FileType.Directory:
-            self.fs.delete_dir(root)
-        elif info.type != self._pafs.FileType.NotFound:
-            self.fs.delete_file(root)
 
 
 _INDEX_FS: IndexFS = LocalIndexFS()

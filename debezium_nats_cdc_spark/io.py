@@ -13,11 +13,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .session import apply_runtime_confs
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 # columns stored as TIMESTAMP(NANOS) per table
 _NANO_TS_COLS = {"events": ["ts"]}
 
@@ -33,12 +28,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql paths)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

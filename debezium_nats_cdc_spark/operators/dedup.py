@@ -169,8 +169,7 @@ def bucket_drop_stats(op: str, obs_wait_s: float = 3.0) -> dict | None:
 
 
 def _candidate_pairs(rows: DataFrame, key_cols: list[str],
-                     extras: list[str], op: str,
-                     subgroup_rounds: int = 0) -> DataFrame:
+                     extras: list[str], op: str) -> DataFrame:
     """Bucket-member rows (key…, doc_id, extras…) → candidate pairs
     (doc_a, doc_b, a_<extra>…, b_<extra>…) with BOUNDED memory at any
     skew.  Shared by the minhash/simhash/jaccard/exact-substring/
@@ -209,21 +208,6 @@ def _candidate_pairs(rows: DataFrame, key_cols: list[str],
     Observation, counting each bucket once at its anchor row; AQE can
     prune CollectMetrics when downstream goes empty, so an un-observed
     twin is stored as the fallback.
-
-    ``subgroup_rounds`` (two-level expansion, VERDICT r6 #8 — OPT-IN,
-    default 0): each round r salts every over-cap bucket's members into
-    ceil(df/CAP) hash sub-groups and all-pairs-expands WITHIN each
-    sub-group (bounded by the same collect_list cap), recovering
-    non-anchor pairs the anchor projection skips at O(df·CAP) extra
-    pairs per round.  The miss class this buys back: two members of a
-    MIXED over-cap bucket that are near-dups of each other but not of
-    the anchor (anchor pairs fail the verify threshold, so the edge —
-    and a whole component — would vanish); a pair is recovered in round
-    r iff both land in the same sub-group (p ≈ CAP/df per round,
-    independent across salts).  On realistic boilerplate buckets the
-    anchor already yields identical components (test_dedup_recall), so
-    the CATALOG queries keep rounds=0 and their oracles stay exact;
-    turn it on for corpora with known mixed stop-shingle buckets.
     """
     from pyspark.sql import Observation, Window as W
 
@@ -263,34 +247,30 @@ def _candidate_pairs(rows: DataFrame, key_cols: list[str],
     out_cols = (["doc_a", "doc_b"] + [f"a_{c}" for c in extras]
                 + [f"b_{c}" for c in extras])
 
-    def _expand(members: DataFrame, keys: list[str]) -> DataFrame:
-        """Group-then-expand all C(df,2) ordered pairs per bucket; the
-        collected array stays bounded by the caller's df filter."""
-        grouped = members.groupBy(*keys).agg(
-            F.collect_list(F.struct("doc_id", *extras)).alias("ds")
-        )
-        ds = F.col("ds")
-        pair_arr = F.flatten(
-            F.transform(
-                ds,
-                lambda x: F.transform(
-                    F.filter(ds, lambda y: y["doc_id"] > x["doc_id"]),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("doc_a"),
-                        y["doc_id"].alias("doc_b"),
-                        *[x[c].alias(f"a_{c}") for c in extras],
-                        *[y[c].alias(f"b_{c}") for c in extras],
-                    ),
+    # in-cap buckets: group-then-expand all C(df,2) ordered pairs; the
+    # collected array stays bounded by the df filter
+    grouped = tagged.filter(
+        (F.col("_df") >= 2) & (F.col("_df") <= BUCKET_CAP)
+    ).groupBy(*key_cols).agg(
+        F.collect_list(F.struct("doc_id", *extras)).alias("ds")
+    )
+    ds = F.col("ds")
+    pair_arr = F.flatten(
+        F.transform(
+            ds,
+            lambda x: F.transform(
+                F.filter(ds, lambda y: y["doc_id"] > x["doc_id"]),
+                lambda y: F.struct(
+                    x["doc_id"].alias("doc_a"),
+                    y["doc_id"].alias("doc_b"),
+                    *[x[c].alias(f"a_{c}") for c in extras],
+                    *[y[c].alias(f"b_{c}") for c in extras],
                 ),
-            )
+            ),
         )
-        return grouped.select(F.explode_outer(pair_arr).alias("p")).select(
-            *[F.col(f"p.{c}").alias(c) for c in out_cols]
-        )
-
-    pairs_in = _expand(
-        tagged.filter((F.col("_df") >= 2) & (F.col("_df") <= BUCKET_CAP)),
-        key_cols,
+    )
+    pairs_in = grouped.select(F.explode_outer(pair_arr).alias("p")).select(
+        *[F.col(f"p.{c}").alias(c) for c in out_cols]
     )
     pairs_over = tagged.filter(
         (F.col("_df") > BUCKET_CAP) & (F.col("doc_id") != F.col("_anchor"))
@@ -300,40 +280,7 @@ def _candidate_pairs(rows: DataFrame, key_cols: list[str],
         *[F.col(f"_anchor_{c}").alias(f"a_{c}") for c in extras],
         *[F.col(c).alias(f"b_{c}") for c in extras],
     )
-    parts = [pairs_in, pairs_over]
-    for r in range(subgroup_rounds):
-        # salt members of each over-cap bucket into ~df/CAP sub-groups;
-        # expected sub-group size is CAP, and a hard 2*CAP guard keeps
-        # the collected array bounded even on a pathological salt (those
-        # rows keep their anchor pairs regardless — nothing is dropped,
-        # this path only ADDS recovered pairs)
-        n_groups = F.greatest(
-            F.lit(1), F.ceil(F.col("_df") / F.lit(BUCKET_CAP))
-        ).cast("bigint")
-        sub = tagged.filter(F.col("_df") > BUCKET_CAP).withColumn(
-            "_sg", F.pmod(F.xxhash64("doc_id", F.lit(r)), n_groups)
-        )
-        w_sg = W.partitionBy(*key_cols, "_sg")
-        sub = sub.withColumn("_sgdf", F.count(F.lit(1)).over(w_sg))
-        parts.append(_expand(
-            sub.filter((F.col("_sgdf") >= 2)
-                       & (F.col("_sgdf") <= 2 * BUCKET_CAP)),
-            [*key_cols, "_sg"],
-        ))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if subgroup_rounds > 0:
-        # The sub-group rounds can re-emit a pair already produced by the
-        # anchor projection (anchor and member salted into the same
-        # sub-group) and the same recovered pair across rounds.  Dedup
-        # here so EVERY caller sees set semantics — extras are functions
-        # of the doc ids, so (doc_a, doc_b) suffices as the key.  Costs
-        # one shuffle, but only on the opt-in expansion path; rounds=0
-        # (all catalog queries) emits each pair at most once already and
-        # pays nothing.
-        out = out.dropDuplicates(["doc_a", "doc_b"])
-    return out
+    return pairs_in.unionByName(pairs_over)
 
 
 def _shingle_expr(toks):
@@ -433,8 +380,7 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
 
 def minhash_candidates(docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text",
-                       hashed: DataFrame | None = None,
-                       subgroup_rounds: int = 0) -> DataFrame:
+                       hashed: DataFrame | None = None) -> DataFrame:
     """LSH banding: docs sharing any band bucket become candidate pairs.
 
     Shuffle cost: docs × B band rows, keyed by (band_id, band_hash).
@@ -482,7 +428,6 @@ def minhash_candidates(docs: DataFrame, id_col: str = "doc_id",
         bands.select(F.col(id_col).alias("doc_id"), "sig", "band_id",
                      "band_hash"),
         ["band_id", "band_hash"], ["sig"], "minhash",
-        subgroup_rounds=subgroup_rounds,
     ).dropDuplicates(["doc_a", "doc_b"])
     est = F.aggregate(
         F.zip_with("a_sig", "b_sig", lambda x, y: F.when(x == y, 1).otherwise(0)),

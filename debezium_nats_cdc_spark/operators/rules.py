@@ -79,21 +79,6 @@ def domain_event_cols(
     ]
 
 
-def domain_event(
-    df: DataFrame,
-    event_type: str,
-    category: str,
-    aggregate_id: F.Column,
-    aggregate_type: str,
-    payload: F.Column,
-) -> DataFrame:
-    """Project an unwrapped change row into the domain envelope — see
-    domain_event_cols (kept as the ad-hoc/batch entry point; the rules
-    below go through the _rule spec cache instead)."""
-    return df.select(*domain_event_cols(
-        event_type, category, aggregate_id, aggregate_type, payload))
-
-
 # ------------------------------------------------------ employee rules --
 
 def _emp_payload(*cols: F.Column) -> F.Column:

@@ -182,10 +182,6 @@ def optimize_zorder(
     return list(closed)
 
 
-def read_events(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_events_pruned(
     spark: SparkSession,
     path: str,

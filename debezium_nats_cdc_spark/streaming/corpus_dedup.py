@@ -265,12 +265,11 @@ class CorpusDedupPipeline(FormatStampedIndexIngest):
         if docs.isEmpty():
             return
         # Heal a compaction crash FIRST: _maybe_compact_index swap-rewrites
-        # index_dir, and a crash mid-swap (or in the generation backend's
-        # first-transition window) leaves it torn.  Recovering only before
-        # the append (as earlier revisions did) is too late — _index()
-        # would read the torn dir, has_data() would see nothing, and the
-        # replayed batch would probe against NO index, silently accepting
-        # near-dups of already-indexed docs.
+        # index_dir, and a crash mid-swap leaves it torn.  Recovering
+        # only before the append (as earlier revisions did) is too late —
+        # _index() would read the torn dir, has_data() would see nothing,
+        # and the replayed batch would probe against NO index, silently
+        # accepting near-dups of already-indexed docs.
         self.backend.recover(self.index_dir)
         self._stamp_format()
         bands = _bands(minhash_signatures(docs)).localCheckpoint(eager=True)

@@ -133,8 +133,7 @@ class LocalFSBackend(StateBackend):
         # dirs and files are PRUNED: Spark's committer stages in-flight
         # task files under `_temporary/` with half-written footers a
         # concurrent poll must not open (only atomically-committed
-        # names count — the index_fs count_files convention).  os.walk
-        # resolves the generation backend's symlink at the root;
+        # names count — the index_fs count_files convention).
         # followlinks stays False so a subdir cycle cannot loop.
         n = 0
         for r, dirs, files in os.walk(table_dir):
@@ -224,147 +223,3 @@ class LocalFSBackend(StateBackend):
         except FileNotFoundError:
             return False
 
-
-class GenerationPointerBackend(LocalFSBackend):
-    """Commit-by-pointer swap: immutable generation dirs + an atomically
-    swapped symlink — the metadata-pointer commit shape of a table format
-    (Iceberg snapshot pointer, Delta log) or a versioned object-store
-    prefix, as opposed to LocalFSBackend's rename-the-directory-in-place.
-
-    Layout per table:
-
-    - ``<table>.gens/gNNNNNN/``  — immutable data generations
-    - ``<table>``                — symlink to the current generation
-
-    ``swap_write`` never touches the live data path: it writes a NEW
-    generation, then commits by atomically replacing the pointer.  A
-    reader therefore always resolves a complete generation; the torn
-    states LocalFSBackend must heal (missing dir between two renames)
-    cannot arise once the pointer exists.  The one non-atomic window is
-    the FIRST swap of a table born as a real directory (the txn append
-    path creates real dirs): the directory moves aside before the
-    pointer lands, and ``recover`` heals that window by re-pointing at
-    the newest complete generation (same prefer-newer semantics as
-    LocalFSBackend's staging recovery).
-
-    Inherits the token/marker exactly-once machinery unchanged — those
-    operate on individual files and resolve through the symlink — which
-    is precisely the porting claim this class exists to prove: pipeline
-    logic never assumes HOW a table's contents are replaced.
-
-    Reader caveat (parity with LocalFSBackend, documented not solved): a
-    query still scanning a superseded generation's files races the
-    post-swap prune; a real table format keeps snapshots pinned until
-    readers release them.
-    """
-
-    def __init__(self, keep_generations: int = 1):
-        # >1 enables time travel: superseded snapshots survive pruning
-        # and stay readable via read_generation() — the Delta/Iceberg
-        # VERSION AS OF + retention/vacuum shape.  1 (default) keeps
-        # only the live generation (the original behavior).
-        self.keep_generations = max(1, keep_generations)
-
-    @staticmethod
-    def _gen_root(table_dir: str) -> str:
-        return table_dir + ".gens"
-
-    @classmethod
-    def _complete_gens(cls, table_dir: str) -> list[str]:
-        """Committed generation dir-names (have _SUCCESS), ascending."""
-        try:
-            entries = os.listdir(cls._gen_root(table_dir))
-        except FileNotFoundError:
-            return []
-        # numeric sort: lexicographic order breaks past g999999 (the
-        # zero-padding only covers 6 digits) and newest-selection picks
-        # a stale generation
-        return sorted(
-            (d for d in entries
-             if d.startswith("g") and d[1:].isdigit()
-             and os.path.exists(os.path.join(cls._gen_root(table_dir), d,
-                                             "_SUCCESS"))),
-            key=lambda d: int(d[1:]),
-        )
-
-    def list_generations(self, table_dir: str) -> list[int]:
-        """Snapshot versions available for time travel, ascending.
-        The last entry is the live generation."""
-        return [int(d[1:]) for d in self._complete_gens(table_dir)]
-
-    def read_generation(self, spark, table_dir: str,
-                        gen: int | None = None) -> DataFrame:
-        """Read a pinned state snapshot — ``VERSION AS OF`` for the
-        materialized read model.  ``gen=None`` reads the live pointer;
-        a retained older generation reproduces the exact state an
-        earlier epoch published (training-reproducibility twin of the
-        batch ``window_state_as_of`` event replay).  Raises ValueError
-        for a pruned/unknown generation, listing what is retained."""
-        if gen is None:
-            return spark.read.parquet(table_dir)
-        name = f"g{gen:06d}"
-        path = os.path.join(self._gen_root(table_dir), name)
-        if name not in self._complete_gens(table_dir):
-            raise ValueError(
-                f"generation {gen} of {table_dir} is pruned or unknown; "
-                f"retained: {self.list_generations(table_dir)}")
-        return spark.read.parquet(path)
-
-    def swap_write(self, df: DataFrame, table_dir: str) -> None:
-        gen_root = self._gen_root(table_dir)
-        os.makedirs(gen_root, exist_ok=True)
-        n = 1 + max(
-            (int(d[1:]) for d in os.listdir(gen_root)
-             if d.startswith("g") and d[1:].isdigit()),
-            default=0,
-        )
-        gen = os.path.join(gen_root, f"g{n:06d}")
-        df.write.mode("overwrite").parquet(gen)
-        tmp = os.path.join(gen_root, f".lnk{n:06d}")
-        if os.path.lexists(tmp):
-            os.remove(tmp)
-        os.symlink(os.path.abspath(gen), tmp)
-        if os.path.isdir(table_dir) and not os.path.islink(table_dir):
-            # first transition from an append-built real dir: move it
-            # aside (atomic), then land the pointer; a crash between the
-            # two renames leaves no table path — recover() re-points
-            os.rename(table_dir, os.path.join(gen_root, f"displaced{n:06d}"))
-        os.replace(tmp, table_dir)
-        self._prune(table_dir)
-
-    def recover(self, table_dir: str) -> None:
-        if os.path.exists(table_dir):  # resolving link or real dir
-            return
-        gen_root = self._gen_root(table_dir)
-        if os.path.islink(table_dir):
-            os.remove(table_dir)  # broken pointer from a pruned target
-        try:
-            entries = os.listdir(gen_root)
-        except FileNotFoundError:
-            return
-        gens = self._complete_gens(table_dir)
-        displaced = sorted(
-            (d for d in entries if d.startswith("displaced")),
-            key=lambda d: int(d[len("displaced"):]),
-        )
-        if gens:  # prefer the newest COMPLETE generation (it is newer
-            #       than any displaced dir by construction)
-            os.symlink(os.path.abspath(os.path.join(gen_root, gens[-1])),
-                       table_dir)
-        elif displaced:
-            os.rename(os.path.join(gen_root, displaced[-1]), table_dir)
-
-    def _prune(self, table_dir: str) -> None:
-        """Drop superseded state beyond the retention window: complete
-        generations older than the newest ``keep_generations``, torn
-        (no _SUCCESS) generations, displaced first-transition dirs, and
-        stale tmp pointers.  The live generation is always retained."""
-        gen_root = self._gen_root(table_dir)
-        current = os.path.realpath(table_dir)
-        keep = set(self._complete_gens(table_dir)[-self.keep_generations:])
-        for d in os.listdir(gen_root):
-            p = os.path.join(gen_root, d)
-            if os.path.islink(p):
-                os.remove(p)
-            elif os.path.realpath(p) != current and d not in keep:
-                shutil.rmtree(p, ignore_errors=True)

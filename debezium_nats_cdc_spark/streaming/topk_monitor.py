@@ -24,28 +24,8 @@ neither.  Moving it onto the kernel would either add a meta row and a
 guard that protect nothing, or make the kernel branch on which monitor
 it serves.
 
-Scale path: the per-batch candidate step is the brute-force broadcast
-(every query sees every new vector — exact, and the batch is the small
-side).  If |queries| x |batch| ever dominates, ``prefilter=True``
-swaps it for the banded hyperplane sketch (embedding_dedup._sketch):
-only (query, vector) pairs colliding in >=1 of the T=4 x B=8-bit
-bucket tables are scored — the merge machinery is unchanged, and every
-RETURNED score is still the exact cosine (the filter narrows the
-candidate set, never the scores; tests pin filtered ⊆ exact).
-
-Prefilter recall statement (sign-random-projection collision math,
-p = 1 - theta/pi per plane, 1-(1-p^B)^T over tables; property-tested in
-tests/test_topk_monitor.py): a true neighbor at cosine 0.99 survives
-the filter with p ≈ 0.99, at 0.92 with p ≈ 0.80, while a random 64-dim
-direction (cos ≈ 0) collides with p ≈ 0.016 — so the filtered path is
-the right trade exactly when the standing answer tracks NEAR
-neighbors; for exhaustive low-similarity top-k keep the exact default.
-
-Measured cutover (BENCHLOG, round 7 prefilter A/B): below ~5M
-query x batch pairs per micro-batch the exact Arrow kernel wins (1M
-pairs: 5.3 s vs 6.0 s); above it the filter dominates (32.8M pairs:
-8-9.5 s vs 36-112 s, 4-12x) — the broadcast product, not the cosine,
-is what stops scaling.
+Candidate step: the brute-force broadcast — every query sees every new
+vector, so the answer is exact, and the batch is the small side.
 """
 
 from __future__ import annotations
@@ -63,15 +43,13 @@ class TopKMonitor:
 
     def __init__(self, root: str, queries: DataFrame, k: int = 5,
                  backend: StateBackend | None = None,
-                 id_col: str = "vec_id", emb_col: str = "embedding",
-                 prefilter: bool = False):
+                 id_col: str = "vec_id", emb_col: str = "embedding"):
         self.state_dir = os.path.join(root, "topk")
         self.checkpoint_dir = os.path.join(root, "_checkpoints")
         self.backend = backend or LocalFSBackend()
         self.k = k
         self.id_col = id_col
         self.emb_col = emb_col
-        self.prefilter = prefilter
         # standing queries: captured once, tiny, broadcast every batch
         self.queries = _with_norm(
             queries.select(F.col(id_col).alias("query_id"),
@@ -79,17 +57,6 @@ class TopKMonitor:
             .filter(F.col("embedding").isNotNull())
         ).select("query_id", F.col("embedding").alias("q_emb"),
                  F.col("_norm").alias("q_norm")).localCheckpoint(eager=True)
-        if prefilter:
-            from .embedding_dedup import _sketch
-
-            # query bucket table: sketched ONCE, ids-only, broadcast
-            # against each batch's sketches (see module docstring for
-            # the recall statement of this filter)
-            self.query_buckets = (
-                _sketch(self.queries, id_col="query_id", emb_col="q_emb")
-                .select("table_id", "bucket", "query_id")
-                .localCheckpoint(eager=True)
-            )
 
     def current(self, spark: SparkSession) -> DataFrame:
         """The standing answer: (query_id, neighbor_id, cos_sim, rnk)."""
@@ -120,25 +87,8 @@ class TopKMonitor:
             F.col("q_norm"), F.col("_norm")), 6).cast("decimal(10,6)")
         w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"),
                                               F.asc("neighbor_id"))
-        if self.prefilter:
-            from .embedding_dedup import _sketch
-
-            # only bucket-colliding (query, vector) pairs get scored:
-            # O(collisions) instead of |batch| x |Q|
-            pairs = (
-                _sketch(v, id_col="neighbor_id", emb_col="embedding")
-                .select("table_id", "bucket", "neighbor_id")
-                .join(F.broadcast(self.query_buckets),
-                      ["table_id", "bucket"])
-                .select("query_id", "neighbor_id")
-                .dropDuplicates()          # OR across tables
-            )
-            scored = (pairs.join(v, "neighbor_id")
-                      .join(F.broadcast(self.queries), "query_id"))
-        else:
-            scored = v.join(F.broadcast(self.queries))
         batch_topk = (
-            scored
+            v.join(F.broadcast(self.queries))
             .filter(F.col("neighbor_id") != F.col("query_id"))
             .select("query_id", "neighbor_id",
                     cos.cast("double").alias("cos_sim"))

@@ -86,3 +86,43 @@ def test_observe_metrics_and_health(spark):
     assert hs.alerts and "cdc_lag" in hs.alerts[0]  # historic ts => lag alert
     hs.record({"max_ts_ms": None}, rows_per_sec=100.0)
     assert any("rate drop" in a for a in hs.alerts)
+
+
+def test_health_listener_records_stream_batches(spark, tmp_path):
+    """CdcHealthListener on a live query: an availableNow stream through
+    with_lag_metrics lands the batch's observed n_events and a
+    processing rate in the listener's history."""
+    import time
+
+    from debezium_nats_cdc_spark.sources.cdc import read_change_stream
+    from debezium_nats_cdc_spark.streaming.monitor import (
+        CdcHealthListener,
+        with_lag_metrics,
+    )
+
+    evs = [e for e in fixtures.golden_workload()
+           if e["payload"]["source"]["table"] == "employees"]
+    want = unwrap(load_envelopes(spark, evs, "employees")).count()
+    log_dir = str(tmp_path / "log")
+    fixtures.write_event_log(evs, log_dir, events_per_file=len(evs))
+
+    def batches():
+        return [h for h in listener.state.history if h.get("n_events")]
+
+    listener = CdcHealthListener()
+    spark.streams.addListener(listener)
+    try:
+        q = (with_lag_metrics(unwrap(
+                read_change_stream(spark, log_dir, "employees")))
+             .writeStream.format("noop")
+             .option("checkpointLocation", str(tmp_path / "ckpt"))
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+        # progress events reach Python listeners asynchronously
+        deadline = time.time() + 30
+        while not batches() and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert [h["n_events"] for h in batches()] == [want]
+    assert batches()[0]["rate"] > 0

@@ -192,23 +192,16 @@ def test_anchor_probe_match_chains_bucket_mates(spark, monkeypatch):
     assert all(v == 1 for v in out.values())
 
 
-@pytest.mark.parametrize("backend_cls", ["local", "pointer"])
 def test_index_compaction_bounds_files_and_keeps_membership(
-        spark, tmp_path, monkeypatch, backend_cls):
+        spark, tmp_path, monkeypatch):
     """With the compaction threshold forced low, the band index must stay
     at a bounded file count across many epochs, keep its format stamp,
     keep detecting cross-batch dups AFTER compaction, and stay
-    replay-stable — on both state backends."""
+    replay-stable."""
     from debezium_nats_cdc_spark.streaming import corpus_dedup as cd
-    from debezium_nats_cdc_spark.streaming.state_backend import (
-        GenerationPointerBackend, LocalFSBackend,
-    )
 
     monkeypatch.setattr(cd, "INDEX_COMPACT_THRESHOLD", 2)
-    backend = (LocalFSBackend() if backend_cls == "local"
-               else GenerationPointerBackend())
-    pipe = cd.CorpusDedupPipeline(str(tmp_path / backend_cls),
-                                  backend=backend)
+    pipe = cd.CorpusDedupPipeline(str(tmp_path))
 
     def docs(rows):
         return spark.createDataFrame(rows, "doc_id long, text string")

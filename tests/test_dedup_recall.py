@@ -12,10 +12,10 @@ Measured on the boilerplate fixture below (K=40 family, CAP=10):
 pair recall ≈ 0.10 (anchor pairs only inside the family), but
 DOC-level recall is 1.0 and the connected components are IDENTICAL to
 the uncapped run — which is what the dedup consumers (cluster assign,
-keep-first, curation) actually use.  That is why the two-level salted
-expansion (VERDICT task #7) is not bought this round: it would raise
-pair recall on degenerate buckets without changing any downstream
-answer, at O(df·CAP) extra pairs.
+keep-first, curation) actually use.  That is why the kernel has no
+salted sub-group expansion: it would raise pair recall on degenerate
+buckets without changing any downstream answer, at O(df·CAP) extra
+pairs.
 """
 
 from __future__ import annotations
@@ -142,92 +142,3 @@ def test_drop_stats_arithmetic_matches_documented_formulas(spark):
     assert st["skipped_pairs"] == (
         df1 * (df1 - 1) // 2 - (df1 - 1) + df2 * (df2 - 1) // 2 - (df2 - 1)
     )
-
-
-def test_two_level_subgroup_rounds_recover_nonanchor_pairs(spark):
-    """Opt-in two-level expansion (VERDICT r6 #8): salted sub-groups of
-    an over-cap bucket all-pairs-expand within themselves, recovering
-    part of the non-anchor miss class at O(df·CAP) per round.  Pinned:
-    rounds=0 is bit-identical to the anchor-only kernel; each round only
-    ADDS pairs; every added pair is a true co-bucket pair; coverage
-    grows with rounds (1 - (1-CAP/df)^R in expectation)."""
-    cap = dedup.BUCKET_CAP
-
-    def pairs_for(rows, rounds):
-        df = spark.createDataFrame(rows, "bkey string, doc_id long")
-        out = dedup._candidate_pairs(df, ["bkey"], [], "kernel_2lvl",
-                                     subgroup_rounds=rounds)
-        return {(r["doc_a"], r["doc_b"]) for r in out.collect()}
-
-    n = 3 * cap  # one hot bucket, 3 expected sub-groups per round
-    overcap = [("hot", i) for i in range(1, n + 1)]
-    truth = {(a, b) for a in range(1, n + 1) for b in range(a + 1, n + 1)}
-    anchor_only = pairs_for(overcap, 0)
-    assert anchor_only == {(1, i) for i in range(2, n + 1)}
-
-    r1 = pairs_for(overcap, 1)
-    r2 = pairs_for(overcap, 2)
-    assert anchor_only <= r1 <= r2 <= truth  # additive, never invents
-    # material recovery: each round covers ~CAP/df of the missing pairs
-    missing = len(truth) - len(anchor_only)
-    rec1 = len(r1) - len(anchor_only)
-    rec2 = len(r2) - len(anchor_only)
-    assert rec1 >= missing * 0.15, (rec1, missing)
-    assert rec2 > rec1  # a second salt finds pairs the first one split
-
-
-def test_subgroup_rounds_fix_the_mixed_bucket_component_loss(spark):
-    """The adversarial case the anchor bound can't cover: an over-cap
-    bucket whose members X,Y are near-dups of EACH OTHER but not of the
-    anchor — anchor pairs fail the downstream verify, so the X-Y
-    component vanishes at rounds=0.
-
-    Note on realism: with the real 4x4 LSH banding this shape is
-    near-unconstructible end-to-end, because X,Y's mutual extra content
-    gives them their own in-cap band bucket (exactly why
-    test_anchor_fallback_recall_floor finds IDENTICAL components on
-    boilerplate corpora, and why the catalog default stays rounds=0).
-    So the demonstration fabricates the bucket at the kernel level —
-    one over-cap bucket, signatures carried as extras, the same
-    est-overlap verify the minhash caller applies."""
-    cap = dedup.BUCKET_CAP
-    n = cap + 20
-    # anchor (id 1) and the bulk: signature family A; X,Y (the two
-    # highest ids): family B — mutually identical, disjoint from A
-    sig_a = [float(i) for i in range(16)]
-    sig_b = [float(1000 + i) for i in range(16)]
-    rows = [("hot", i, sig_a) for i in range(1, n - 1)]
-    rows += [("hot", n - 1, sig_b), ("hot", n, sig_b)]
-    df = spark.createDataFrame(
-        rows, "bkey string, doc_id long, sig array<double>")
-
-    est = F.aggregate(
-        F.zip_with("a_sig", "b_sig",
-                   lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0), lambda acc, v: acc + v) / F.lit(16)
-
-    def verified(rounds):
-        out = dedup._candidate_pairs(df, ["bkey"], ["sig"], "kernel_mixed",
-                                     subgroup_rounds=rounds)
-        return {(r["doc_a"], r["doc_b"]) for r in
-                out.withColumn("est", est)
-                .filter(F.col("est") >= EST_THRESHOLD).collect()}
-
-    r0 = verified(0)
-    # rounds=0: only anchor pairs are generated; anchor-vs-family pass
-    # the verify, anchor-vs-X/Y fail -> the X-Y edge (and component)
-    # is LOST
-    assert (n - 1, n) not in r0
-    assert all(a == 1 for a, _ in r0)
-    found_at = None
-    for rounds in (1, 2, 3, 4, 5, 6, 7, 8):
-        if (n - 1, n) in verified(rounds):
-            found_at = rounds
-            break
-    assert found_at is not None, \
-        "salted sub-group rounds never surfaced the X-Y pair"
-    # and the recovered set never invents a CROSS-family verified pair:
-    # everything is either within family A (ids < n-1, incl. the
-    # legitimately recovered non-anchor A-pairs) or the X-Y edge
-    assert all(p == (n - 1, n) or (p[0] < n - 1 and p[1] < n - 1)
-               for p in verified(found_at))

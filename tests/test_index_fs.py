@@ -1,9 +1,11 @@
 """The index_fs seam (VERDICT r13 task 6): the ANN index layer's
 metadata I/O — fingerprints, sidecar/model JSON, maintenance polls,
-marker checks — routes through a pluggable IndexFS (the
-state_backend.py backend-split pattern), so an object-store deployment
-implements ONE small interface instead of patching os.walk call
-sites.  The data-plane swap machinery deliberately stays rename-based
+marker checks — routes through one IndexFS interface (the
+state_backend.py backend-split pattern).  LocalIndexFS is the one
+shipped implementation; recording fakes installed with set_index_fs
+pin that no metadata call bypasses the seam, and the contract suite
+pins the listing/count semantics any implementation must keep.  The
+data-plane swap machinery deliberately stays rename-based
 (OPERATIONS.md §11 records the constraint + table-format mapping)."""
 
 from __future__ import annotations
@@ -14,7 +16,6 @@ import os
 from pyspark.sql import functions as F
 
 from debezium_nats_cdc_spark.index_fs import (
-    ArrowIndexFS,
     IndexFS,
     LocalIndexFS,
     get_index_fs,
@@ -38,10 +39,10 @@ SF = "/root/testdata/sf0.001"
 def check_index_fs_contract(fs: IndexFS, tmp_path) -> None:
     """The full IndexFS contract.  Fixtures are materialized on the
     LOCAL filesystem, so this runs verbatim against any backend that
-    resolves local paths (LocalIndexFS, ArrowIndexFS over local/NFS,
-    delegating wrappers); a remote object-store implementation should
-    port the fixture setup to its own PUT primitive and then assert
-    the same contract before being installed with set_index_fs."""
+    resolves local paths (LocalIndexFS and delegating wrappers); an
+    implementation over other storage must port the fixture setup to
+    its own write primitive and then assert the same contract before
+    being installed with set_index_fs."""
     root = tmp_path / "area"
     (root / "cell_id=0").mkdir(parents=True)
     (root / "cell_id=0" / "part-0.parquet").write_bytes(b"abc")
@@ -93,33 +94,8 @@ def test_local_index_fs_contract(tmp_path):
     check_index_fs_contract(LocalIndexFS(), tmp_path)
 
 
-def test_arrow_index_fs_contract(tmp_path):
-    """The pyarrow.fs backend — the object-store LIST/HEAD/GET/PUT
-    mapping proven against a second real filesystem implementation
-    (pyarrow's FileSystem interface is what its S3/GCS classes
-    implement), including byte-identical listing shape."""
-    check_index_fs_contract(ArrowIndexFS(), tmp_path)
-
-
 def test_recording_backend_contract(tmp_path):
     check_index_fs_contract(_Recording(), tmp_path)
-
-
-def test_backends_fingerprint_identically(tmp_path):
-    """Cross-backend migration safety: a fingerprint recorded under
-    LocalIndexFS must compare EQUAL to one listed under ArrowIndexFS
-    over the same directory — else every PQ attachment would read as
-    stale after a backend swap."""
-    root = tmp_path / "area"
-    (root / "cell_id=3").mkdir(parents=True)
-    (root / "cell_id=3" / "part-0.parquet").write_bytes(b"abcde")
-    (root / "_SUCCESS").write_bytes(b"")
-    (root / "_stream_epoch.json").write_bytes(b'{"last_epoch": 4}')
-    (root / ".part-0.crc").write_bytes(b"x")
-    local, arrow = LocalIndexFS(), ArrowIndexFS()
-    assert local.listing(str(root)) == arrow.listing(str(root))
-    assert (local.count_files(str(root))
-            == arrow.count_files(str(root)) == 1)
 
 
 class _SymmetricSkipFS(LocalIndexFS):
@@ -235,40 +211,30 @@ def test_maintenance_polls_use_seam(spark, tmp_path):
                for m, p in rec.calls)
 
 
-def test_ann_flow_end_to_end_under_arrow_backend(spark, tmp_path):
-    """The second backend through the REAL flow, not just the contract
-    suite: build -> ingest -> attach -> quantized search -> refresh
-    with a dead cell (the remove_tree leg) under ArrowIndexFS, with
-    results equal to the LocalIndexFS run of the same flow."""
+def test_ann_refresh_flow_over_uncompacted_stream_area(spark, tmp_path):
+    """The real metadata flow end to end with no compaction in between:
+    build -> stream ingest -> attach -> delete of streamed ids ->
+    refresh -> quantized search.  The erased ids are gone from the
+    refreshed codes and from every answer."""
     from debezium_nats_cdc_spark.operators.ann_index import ivf_delete
     from debezium_nats_cdc_spark.operators.ann_pq import (
+        _pq_dir,
         ivf_refresh_pq,
-        ivf_search_pq,
     )
 
     emb = load_table(spark, SF, "embeddings")
-    results = {}
-    for name, fs in (("local", LocalIndexFS()), ("arrow", ArrowIndexFS())):
-        d = str(tmp_path / f"ivf_{name}")
-        prev = set_index_fs(fs)
-        try:
-            ivf_build(spark, emb.filter(F.col("vec_id") % 2 == 0),
-                      d, n_cells=8)
-            ing = IvfStreamIngest(d)
-            ing.process_batch(
-                spark, emb.filter(F.col("vec_id") % 2 == 1), epoch_id=0)
-            ivf_attach_pq(spark, d, m=8, k=16, rounds=1)
-            # a small deletion leaves the attachment stale; the refresh
-            # re-syncs it (and exercises remove_tree if a cell empties)
-            ivf_delete(spark, d, [11, 13])
-            rep = ivf_refresh_pq(spark, d)
-            assert rep["noop"] is False
-            out = ivf_search_pq(spark, d,
-                                emb.filter(F.col("vec_id") < 4),
-                                k=3, nprobe=8)
-            results[name] = sorted(
-                (r.query_id, r.neighbor_id, r.rnk) for r in out.collect())
-        finally:
-            set_index_fs(prev)
-    assert results["arrow"] == results["local"]
-    assert len(results["arrow"]) > 0
+    d = str(tmp_path / "ivf")
+    ivf_build(spark, emb.filter(F.col("vec_id") % 2 == 0), d, n_cells=8)
+    ing = IvfStreamIngest(d)
+    ing.process_batch(
+        spark, emb.filter(F.col("vec_id") % 2 == 1), epoch_id=0)
+    ivf_attach_pq(spark, d, m=8, k=16, rounds=1)
+    victims = [11, 13]  # odd -> live only in the stream area
+    ivf_delete(spark, d, victims)
+    rep = ivf_refresh_pq(spark, d)
+    assert rep["noop"] is False
+    codes = spark.read.parquet(os.path.join(_pq_dir(d), "codes"))
+    assert codes.filter(F.col("vec_id").isin(victims)).count() == 0
+    out = ivf_search_pq(spark, d, emb.filter(F.col("vec_id") < 4),
+                        k=3, nprobe=8).collect()
+    assert out and not {r.neighbor_id for r in out} & set(victims)

@@ -1,16 +1,12 @@
-"""The StateBackend seam proved with a SECOND implementation (VERDICT r3
-task #4): the crash/replay/compaction suite runs parameterized over both
-LocalFSBackend (rename-in-place) and GenerationPointerBackend
-(commit-by-pointer) — if pipeline code had baked in LocalFS assumptions
-(.staging/.old sibling paths, rename atomicity), the pointer backend
-would fail these.
+"""The StateBackend seam: LocalFSBackend's staging-dir swap and its
+crash healing, the compaction/replay suite through the live pipeline,
+and the chaos shapes run through a fault-injecting subclass — the
+pipeline reaches storage only through this interface.
 """
 
 from __future__ import annotations
 
 import os
-
-import pytest
 
 from pyspark.sql import functions as F
 
@@ -22,13 +18,8 @@ from debezium_nats_cdc_spark.streaming.pipeline import (
     read_state,
     run_pipeline_until_done,
 )
-from debezium_nats_cdc_spark.streaming.state_backend import (
-    GenerationPointerBackend,
-    LocalFSBackend,
-)
+from debezium_nats_cdc_spark.streaming.state_backend import LocalFSBackend
 from tests.conftest import load_envelopes
-
-BACKENDS = [LocalFSBackend, GenerationPointerBackend]
 
 
 def _rows(spark, n, start=0):
@@ -37,10 +28,8 @@ def _rows(spark, n, start=0):
     )
 
 
-@pytest.mark.parametrize("backend_cls", BACKENDS)
-def test_swap_write_replaces_and_recover_is_noop_when_healthy(
-        spark, tmp_root, backend_cls):
-    b = backend_cls()
+def test_swap_write_replaces_and_recover_is_noop_when_healthy(spark, tmp_root):
+    b = LocalFSBackend()
     final = os.path.join(tmp_root, "state")
     b.swap_write(_rows(spark, 5), final)
     assert spark.read.parquet(final).count() == 5
@@ -51,11 +40,46 @@ def test_swap_write_replaces_and_recover_is_noop_when_healthy(
     assert b.has_data(final) and b.data_file_count(final) > 0
 
 
-@pytest.mark.parametrize("backend_cls", BACKENDS)
-def test_swap_write_over_append_built_table(spark, tmp_root, backend_cls):
+def test_recover_heals_torn_swap(spark, tmp_root):
+    """A crash between swap_write's two renames leaves no table path:
+    the displaced generation sits at ``.old``, the new one at
+    ``.staging``.  recover() promotes a COMPLETE staging generation
+    (``_SUCCESS`` proves its write finished) and clears ``.old``;
+    without one it restores ``.old``; and a ``.old`` left by a crash
+    after the second rename does not fail the next swap."""
+    import shutil
+
+    b = LocalFSBackend()
+    final = os.path.join(tmp_root, "state")
+    staging, old = final + ".staging", final + ".old"
+    b.swap_write(_rows(spark, 5), final)
+
+    # crash window with the new generation fully written: newer wins
+    _rows(spark, 7).write.parquet(staging)
+    os.rename(final, old)
+    b.recover(final)
+    assert spark.read.parquet(final).count() == 7
+    assert not os.path.exists(staging) and not os.path.exists(old)
+
+    # crash window with a torn staging write: the old generation returns
+    _rows(spark, 9).write.parquet(staging)
+    os.remove(os.path.join(staging, "_SUCCESS"))
+    os.rename(final, old)
+    b.recover(final)
+    assert spark.read.parquet(final).count() == 7
+    assert not os.path.exists(old)
+
+    # leftover .old (crash before the post-swap cleanup): swap succeeds
+    shutil.copytree(final, old)
+    b.swap_write(_rows(spark, 3), final)
+    assert spark.read.parquet(final).count() == 3
+    assert sorted(os.listdir(tmp_root)) == ["state"]
+
+
+def test_swap_write_over_append_built_table(spark, tmp_root):
     """State tables are BORN as plain append dirs (epoch publishes);
     the first compaction swap must handle that starting shape."""
-    b = backend_cls()
+    b = LocalFSBackend()
     final = os.path.join(tmp_root, "state")
     b.append(_rows(spark, 4), final)
     b.append(_rows(spark, 4, start=100), final)
@@ -67,35 +91,25 @@ def test_swap_write_over_append_built_table(spark, tmp_root, backend_cls):
     assert spark.read.parquet(final).count() == 7
 
 
-@pytest.mark.parametrize("backend_cls", BACKENDS)
-def test_repeated_swaps_do_not_leak_generations(spark, tmp_root, backend_cls):
+def test_repeated_swaps_do_not_leak_generations(spark, tmp_root):
     """Each swap supersedes the previous generation entirely; storage
-    must stay bounded (LocalFS: no .old/.staging residue; pointer: old
-    gens pruned)."""
-    b = backend_cls()
+    must stay bounded (no .old/.staging residue)."""
+    b = LocalFSBackend()
     final = os.path.join(tmp_root, "state")
     for i in range(4):
         b.swap_write(_rows(spark, 3 + i), final)
     assert spark.read.parquet(final).count() == 6
-    root_entries = os.listdir(tmp_root)
-    # at most the table itself + one sibling control dir (.gens)
-    assert len(root_entries) <= 2
-    gens = os.path.join(final + ".gens")
-    if os.path.isdir(gens):  # pointer backend: exactly one live gen
-        live = [d for d in os.listdir(gens) if not d.startswith(".")]
-        assert len(live) == 1
+    assert os.listdir(tmp_root) == ["state"]
 
 
-@pytest.mark.parametrize("backend_cls", BACKENDS)
-def test_pipeline_replay_with_compaction(spark, tmp_root, backend_cls,
-                                         monkeypatch):
+def test_pipeline_replay_with_compaction(spark, tmp_root, monkeypatch):
     """Full foreachBatch body, epoch replay, and a forced compaction
-    (threshold 1 => every state append triggers swap_write) on each
-    backend: sinks must stay byte-stable across the replay."""
+    (threshold 1 => every state append triggers swap_write): sinks must
+    stay byte-stable across the replay."""
     from debezium_nats_cdc_spark.operators.unwrap import unwrap
 
     monkeypatch.setattr(pl, "COMPACT_FILE_THRESHOLD", 1)
-    dirs = PipelineDirs.under(tmp_root, backend=backend_cls())
+    dirs = PipelineDirs.under(tmp_root, backend=LocalFSBackend())
     batch = unwrap(load_envelopes(
         spark, fixtures.snapshot_events() + fixtures.golden_workload(),
         "employees",
@@ -118,12 +132,10 @@ def test_pipeline_replay_with_compaction(spark, tmp_root, backend_cls,
     assert read_state(spark, dirs, "employees").count() == counts["state"]
 
 
-@pytest.mark.parametrize("backend_cls", BACKENDS)
-def test_e2e_golden_run_and_restart(spark, tmp_path, backend_cls,
-                                    monkeypatch):
+def test_e2e_golden_run_and_restart(spark, tmp_path, monkeypatch):
     """The golden streaming E2E (checkpointed run + idempotent restart)
-    on each backend, with compaction forced so swap_write executes in
-    the live pipeline, not just in unit tests."""
+    with compaction forced so swap_write executes in the live pipeline,
+    not just in unit tests."""
     monkeypatch.setattr(pl, "COMPACT_FILE_THRESHOLD", 2)
     root = str(tmp_path)
     log_dir = os.path.join(root, "log")
@@ -131,66 +143,18 @@ def test_e2e_golden_run_and_restart(spark, tmp_path, backend_cls,
     fixtures.write_event_log(events, log_dir, events_per_file=5)
     dirs = run_pipeline_until_done(spark, log_dir, root,
                                    tables=["employees"],
-                                   backend=backend_cls())
+                                   backend=LocalFSBackend())
     emp = read_state(spark, dirs, "employees")
     assert sorted(r["employee_number"] for r in emp.collect()) == [
         "EMP001", "EMP002", "EMP003"]
     n1 = spark.read.parquet(dirs.events).count()
     # restart over the same log: committed offsets => nothing re-published
     run_pipeline_until_done(spark, log_dir, root, tables=["employees"],
-                            backend=backend_cls())
+                            backend=LocalFSBackend())
     assert spark.read.parquet(dirs.events).count() == n1
     assert sorted(r["employee_number"]
                   for r in read_state(spark, dirs, "employees").collect()) == [
         "EMP001", "EMP002", "EMP003"]
-
-
-def test_pointer_backend_heals_first_transition_crash(spark, tmp_root):
-    """Pointer-specific crash window: the first swap of an append-built
-    table moves the real dir aside before the pointer lands.  Simulate
-    the crash (table path missing, complete generation present) and
-    assert recover() re-points at the newest complete generation."""
-    b = GenerationPointerBackend()
-    final = os.path.join(tmp_root, "state")
-    b.append(_rows(spark, 4), final)
-    gen_root = b._gen_root(final)
-    os.makedirs(gen_root, exist_ok=True)
-    gen = os.path.join(gen_root, "g000007")
-    _rows(spark, 9).write.mode("overwrite").parquet(gen)
-    os.rename(final, os.path.join(gen_root, "displaced000007"))
-    # crash here: no table path, complete gen on disk
-    b.recover(final)
-    assert os.path.islink(final)
-    assert spark.read.parquet(final).count() == 9
-
-    # variant: no complete generation -> the displaced dir comes back
-    final2 = os.path.join(tmp_root, "state2")
-    b.append(_rows(spark, 5), final2)
-    gr2 = b._gen_root(final2)
-    os.makedirs(gr2, exist_ok=True)
-    os.rename(final2, os.path.join(gr2, "displaced000001"))
-    b.recover(final2)
-    assert spark.read.parquet(final2).count() == 5
-
-
-def test_pointer_backend_heals_broken_pointer(spark, tmp_root):
-    """A pointer whose target was pruned (or lost) is a broken symlink;
-    recover must replace it with the newest complete generation."""
-    import shutil
-
-    b = GenerationPointerBackend()
-    final = os.path.join(tmp_root, "state")
-    b.swap_write(_rows(spark, 5), final)
-    b.swap_write(_rows(spark, 6), final)
-    # break the pointer: blow away its target, keep an older complete gen
-    gen_root = b._gen_root(final)
-    target = os.path.realpath(final)
-    _rows(spark, 8).write.mode("overwrite").parquet(
-        os.path.join(gen_root, "g000001"))
-    shutil.rmtree(target)
-    assert not os.path.exists(final) and os.path.islink(final)
-    b.recover(final)
-    assert spark.read.parquet(final).count() == 8
 
 
 # ---------------------------------------------------------------------------
@@ -199,13 +163,13 @@ def test_pointer_backend_heals_broken_pointer(spark, tmp_root):
 # ---------------------------------------------------------------------------
 
 
-def _flaky(backend_cls, failures: int, sink_prefix: str = "events-"):
+def _flaky(failures: int, sink_prefix: str = "events-"):
     """Backend whose event-store publishes raise for the first N attempts
     — the 'columnar store down' chaos scenario.  Only the publish fails;
     the txn protocol must keep the failed epochs uncommitted so the
     retry republishes without loss or duplication."""
 
-    class Flaky(backend_cls):
+    class Flaky(LocalFSBackend):
         def __init__(self):
             super().__init__()
             self.remaining = failures
@@ -221,9 +185,7 @@ def _flaky(backend_cls, failures: int, sink_prefix: str = "events-"):
     return Flaky()
 
 
-@pytest.mark.parametrize("backend_cls", BACKENDS)
-def test_store_down_mid_batch_recovers_without_loss_or_dupes(
-        spark, tmp_root, backend_cls):
+def test_store_down_mid_batch_recovers_without_loss_or_dupes(spark, tmp_root):
     """Event-store writes fail for two micro-batches, then the store
     comes back.  The query fails and restarts from its checkpoint; once
     recovered, every rule firing lands EXACTLY once — sibling sinks that
@@ -239,7 +201,7 @@ def test_store_down_mid_batch_recovers_without_loss_or_dupes(
     events = fixtures.snapshot_events() + fixtures.golden_workload()
     fixtures.write_event_log(events, log_dir, events_per_file=5)
 
-    dirs = PipelineDirs.under(tmp_root, backend=_flaky(backend_cls, 2))
+    dirs = PipelineDirs.under(tmp_root, backend=_flaky(2))
     attempts = 0
     while True:
         attempts += 1
@@ -261,9 +223,7 @@ def test_store_down_mid_batch_recovers_without_loss_or_dupes(
         "EMP001", "EMP002", "EMP003"]
 
 
-@pytest.mark.parametrize("backend_cls", BACKENDS)
-def test_slow_partitioned_source_empty_and_late_batches(
-        spark, tmp_root, backend_cls):
+def test_slow_partitioned_source_empty_and_late_batches(spark, tmp_root):
     """A partitioned/slow source delivers: a normal batch, a completely
     EMPTY batch (source stalled), an out-of-order batch (event-time
     behind data already seen, within the 120 s dedup watermark), and a
@@ -303,7 +263,7 @@ def test_slow_partitioned_source_empty_and_late_batches(
             for ev in evs:
                 f.write(_json.dumps(ev) + "\n")
 
-    dirs = PipelineDirs.under(tmp_root, backend=backend_cls())
+    dirs = PipelineDirs.under(tmp_root, backend=LocalFSBackend())
     q = start_table_pipeline(spark, log_dir, "employees", dirs,
                              max_files_per_trigger=1)
     q.awaitTermination()
@@ -325,99 +285,6 @@ def test_slow_partitioned_source_empty_and_late_batches(
     assert committed == 2
 
 
-def test_generation_retention_and_time_travel(spark, tmp_root):
-    """keep_generations=3: superseded snapshots stay readable via
-    read_generation (VERSION AS OF), older ones are vacuumed, and a
-    pruned version raises with the retained list."""
-    b = GenerationPointerBackend(keep_generations=3)
-    final = os.path.join(tmp_root, "state")
-    for i in range(1, 6):  # five epochs, distinct contents
-        b.swap_write(_rows(spark, i * 10), final)
-    assert b.list_generations(final) == [3, 4, 5]
-    # live pointer == newest generation
-    assert b.read_generation(spark, final).count() == 50
-    assert b.read_generation(spark, final, 5).count() == 50
-    # retained history reproduces each epoch's exact published state
-    assert b.read_generation(spark, final, 4).count() == 40
-    assert b.read_generation(spark, final, 3).count() == 30
-    with pytest.raises(ValueError, match=r"retained: \[3, 4, 5\]"):
-        b.read_generation(spark, final, 2)
-
-
-def test_time_travel_survives_pointer_recovery(spark, tmp_root):
-    """After a crash that loses the live pointer, recover() re-points at
-    the newest snapshot and the retained history is still readable."""
-    b = GenerationPointerBackend(keep_generations=2)
-    final = os.path.join(tmp_root, "state")
-    b.swap_write(_rows(spark, 10), final)
-    b.swap_write(_rows(spark, 20), final)
-    os.remove(final)  # simulate crash losing the symlink
-    b.recover(final)
-    assert spark.read.parquet(final).count() == 20
-    assert b.list_generations(final) == [1, 2]
-    assert b.read_generation(spark, final, 1).count() == 10
-
-
-def test_default_retention_keeps_only_live_generation(spark, tmp_root):
-    """keep_generations default (1) preserves the original prune
-    behavior: exactly one generation on disk after every swap."""
-    b = GenerationPointerBackend()
-    final = os.path.join(tmp_root, "state")
-    for i in range(1, 4):
-        b.swap_write(_rows(spark, i), final)
-    assert b.list_generations(final) == [3]
-    gen_root = final + ".gens"
-    assert [d for d in sorted(os.listdir(gen_root))
-            if d.startswith("g")] == ["g000003"]
-
-
-def test_pipeline_compaction_history_is_time_travelable(spark, tmp_root,
-                                                        monkeypatch):
-    """Pipeline integration for snapshot retention: with threshold 1
-    every epoch compacts (swap_write), so each epoch publishes a
-    generation.  keep_generations=2 must retain exactly the last two,
-    and the older one must reproduce the state as of the PREVIOUS
-    epoch — i.e. the new epoch's update is absent from it."""
-    from debezium_nats_cdc_spark.operators.unwrap import unwrap
-
-    monkeypatch.setattr(pl, "COMPACT_FILE_THRESHOLD", 1)
-    b = GenerationPointerBackend(keep_generations=2)
-    dirs = PipelineDirs.under(tmp_root, backend=b)
-    snapshot = unwrap(load_envelopes(
-        spark, fixtures.snapshot_events(), "employees"))
-    process_batch(spark, snapshot, "employees", dirs, epoch_id=0)
-    workload = unwrap(load_envelopes(
-        spark, fixtures.golden_workload(), "employees"))
-    process_batch(spark, workload, "employees", dirs, epoch_id=1)
-
-    from debezium_nats_cdc_spark.operators.materialize import current_rows
-
-    state_dir = os.path.join(dirs.state, "employees")
-    gens = b.list_generations(state_dir)
-    assert len(gens) == 2
-    # a generation is a snapshot of the state LOG (incl. versioned
-    # tombstones); resolve it exactly the way read_state resolves the
-    # live log before comparing
-    cur = current_rows(b.read_generation(spark, state_dir, gens[-1]))
-    old = current_rows(b.read_generation(spark, state_dir, gens[0]))
-    # live pointer == newest generation
-    live = read_state(spark, dirs, "employees")
-    assert {tuple(r) for r in cur.collect()} == \
-        {tuple(r) for r in live.collect()}
-    # the older snapshot is exactly the pre-workload (snapshot-only)
-    # state: every change the workload epoch applied is missing from it
-    assert old.count() == snapshot.select("after.id").distinct().count()
-    # and replaying the snapshot alone into a fresh pipeline yields the
-    # identical row set (time travel == state as of epoch 0)
-    dirs2 = PipelineDirs.under(os.path.join(tmp_root, "replay"),
-                               backend=GenerationPointerBackend())
-    process_batch(spark, snapshot, "employees", dirs2, epoch_id=0)
-    want = {tuple(r) for r in
-            read_state(spark, dirs2, "employees").collect()}
-    got = {tuple(r) for r in old.collect()}
-    assert got == want
-
-
 def test_data_rows_skips_staging_and_counts_recursively(tmp_path):
     """code-review r15 pass 2: data_rows must count the TABLE
     (partition subdirs included) while pruning `_`/`.`-prefixed
@@ -425,10 +292,6 @@ def test_data_rows_skips_staging_and_counts_recursively(tmp_path):
     footers a concurrent poll must not open."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from debezium_nats_cdc_spark.streaming.state_backend import (
-        LocalFSBackend,
-    )
 
     root = tmp_path / "table"
     (root / "day=1").mkdir(parents=True)

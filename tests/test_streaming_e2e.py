@@ -205,29 +205,19 @@ def test_contract_violation_routes_to_dlq_with_versioned_reason(
     assert not dirs.backend.has_data(dirs.events)
 
 
-@pytest.mark.parametrize("backend_cls", ["local", "pointer"])
-def test_registry_live_migration_mid_stream(spark, tmp_path, backend_cls):
+def test_registry_live_migration_mid_stream(spark, tmp_path):
     """A3/F4 live migration (VERDICT r5 task #8): the contract upgrades
     v1 -> v2 BETWEEN micro-batches of one logical stream (checkpoint
     resume — the streaming equivalent of a rolling registry deploy).
     Old-schema producers (no v2 optional field) must keep validating
     under v2 (FULL compatibility), while a producer that drops a
-    required field lands in dead_letter with the v2 reason — on both
-    state backends."""
+    required field lands in dead_letter with the v2 reason."""
     from debezium_nats_cdc_spark.registry import FieldSpec, default_registry
     from debezium_nats_cdc_spark.streaming.pipeline import (
         run_pipeline_until_done,
     )
-    from debezium_nats_cdc_spark.streaming.state_backend import (
-        GenerationPointerBackend,
-        LocalFSBackend,
-    )
 
-    def backend():
-        return (LocalFSBackend() if backend_cls == "local"
-                else GenerationPointerBackend())
-
-    root = str(tmp_path / backend_cls)
+    root = str(tmp_path)
     log_dir = os.path.join(root, "log")
 
     def emp(n, salary):
@@ -246,8 +236,7 @@ def test_registry_live_migration_mid_stream(spark, tmp_path, backend_cls):
     )
     reg = default_registry()
     dirs = run_pipeline_until_done(spark, log_dir, root,
-                                   tables=["employees"], registry=reg,
-                                   backend=backend())
+                                   tables=["employees"], registry=reg)
     assert spark.read.parquet(dirs.events).count() == 1
     assert not dirs.backend.has_data(dirs.dead_letter)
 
@@ -273,8 +262,7 @@ def test_registry_live_migration_mid_stream(spark, tmp_path, backend_cls):
             f.write(json.dumps(ev) + "\n")
 
     dirs = run_pipeline_until_done(spark, log_dir, root,
-                                   tables=["employees"], registry=reg,
-                                   backend=backend())
+                                   tables=["employees"], registry=reg)
 
     ev = spark.read.parquet(dirs.events).filter(
         "event_type = 'EmployeeHired'")
