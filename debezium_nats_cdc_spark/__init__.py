@@ -3,7 +3,7 @@ capabilities of the reference CDC pipeline (mike840609/debezium-nats-cdc).
 
 The reference is an HR change-data-capture pipeline: MariaDB binlog ->
 Debezium -> NATS JetStream -> event transformer service -> ClickHouse
-columnar event store (see /root/repo/SURVEY.md). This package re-expresses
+columnar event store (see SURVEY.md). This package re-expresses
 that surface Spark-first:
 
 - the "broker" is a DataFrame/table of envelopes with a ``subject`` column

@@ -18,9 +18,10 @@ Physical layout IS the search structure (the 100 TB story):
 - `centroids/` — n_cells rows (cell_id, c_emb, c_norm); always
   broadcast on probe.
 - `vectors/` — (vec_id, embedding, _norm) written
-  `partitionBy("cell_id")`: one directory per IVF cell.  A probe
-  filters on literal cell ids, so the parquet scan PARTITION-PRUNES to
-  the nprobe directories — `.explain` shows the pruned PartitionFilters
+  `partitionBy("cell_id")`: one directory per IVF cell.  A probe joins
+  the scan to the broadcast probe frame on the raw cell_id, so dynamic
+  partition pruning prunes it at run time to the probed directories —
+  `.explain` shows `dynamicpruningexpression` in the PartitionFilters
   and the test pins it.  On a cluster the same layout is a bucketed /
   partitioned table and the probe touches ~nprobe/n_cells of the data.
 - `_meta.json` — format stamp + dims; a probe against an index built
@@ -281,10 +282,11 @@ def _vector_scan(spark: SparkSession, index_dir: str) -> DataFrame:
     """The index's full vector set: the build/add area plus, when the
     streaming sink has landed anything, the ``vectors_stream/`` area
     (same columns; the stream's ``_epoch`` partition level dropped).
-    Both scans keep ``cell_id`` as a raw partition column, so probe
-    pruning — literal or DPP — prunes each area independently; with no
-    stream area the plan is byte-identical to the pre-streaming one
-    (the explain-pinned tests build without streaming)."""
+    Both scans keep ``cell_id`` as a raw partition column, so the
+    probe's dynamic partition pruning prunes each area independently;
+    with no stream area the plan is byte-identical to the
+    pre-streaming one (the explain-pinned tests build without
+    streaming)."""
     base = spark.read.parquet(os.path.join(index_dir, "vectors"))
     sdir = os.path.join(index_dir, _STREAM_SUBDIR)
     if os.path.isdir(sdir) and any(
@@ -306,6 +308,21 @@ def _area_typed(emb: F.Column, meta: dict) -> F.Column:
     return emb.cast(f"array<{t}>") if t else emb
 
 
+def _guarded(frame: DataFrame, id_col: str, emb: F.Column, dim: int,
+             id_as: str = "vec_id") -> DataFrame:
+    """(``id_as``, embedding, _norm) rows of ``frame`` with NULL and
+    dimension-mismatched embeddings dropped — the one dirty-input guard
+    add, stream ingest and both probe reads share.  A ragged or NULL
+    vector would otherwise land in the lowest cell by id tiebreak
+    (every cosine NULL), and a ragged query would probe nprobe cells
+    that way and return k NULL-cos_sim "neighbors"."""
+    return _with_norm(
+        frame.select(F.col(id_col).alias(id_as), emb.alias("embedding"))
+        .filter(F.col("embedding").isNotNull())
+        .filter(F.size("embedding") == dim)
+    )
+
+
 def ivf_add(spark: SparkSession, index_dir: str, vectors: DataFrame,
             id_col: str = "vec_id", emb_col: str = "embedding") -> None:
     """Incremental ingest: assign new vectors to the EXISTING centroids
@@ -313,12 +330,8 @@ def ivf_add(spark: SparkSession, index_dir: str, vectors: DataFrame,
     is handled by periodic ivf_build off the hot path, like every other
     compaction in this engine)."""
     meta = _load_meta(index_dir)
-    v = _with_norm(
-        vectors.select(F.col(id_col).alias("vec_id"),
-                       _area_typed(F.col(emb_col), meta).alias("embedding"))
-        .filter(F.col("embedding").isNotNull())
-        .filter(F.size("embedding") == meta["dim"])
-    )
+    v = _guarded(vectors, id_col, _area_typed(F.col(emb_col), meta),
+                 meta["dim"])
     assigned = _assign(v, _centroids(spark, index_dir))
     area = os.path.join(index_dir, "vectors")
     # an erasure that emptied the whole base area leaves a zero-row flat
@@ -342,54 +355,28 @@ def ivf_add(spark: SparkSession, index_dir: str, vectors: DataFrame,
             writer.parquet(area)
 
 
-def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
-               k: int = 5, nprobe: int = 4,
-               id_col: str = "vec_id", emb_col: str = "embedding",
-               probe_mode: str = "literal") -> DataFrame:
-    """Top-k cosine neighbors per query, scanning only nprobe cells.
+def _probe(spark: SparkSession, index_dir: str, meta: dict,
+           queries: DataFrame, nprobe: int, id_col: str,
+           emb_col: str) -> tuple[DataFrame, DataFrame]:
+    """The one probe-selection kernel of every IVF read: returns the
+    guarded queries (query_id, q_emb, q_norm) and the probe frame
+    (query_id, q_emb, q_norm, cell_id) with one row per probed cell.
 
-    Two pruning strategies, result-identical (tests pin equality):
+    Probe selection is a projection over the ONE broadcast nested-
+    centroid row: per query, sort the (pcos, -cell_id) struct array
+    desc and take the first nprobe — the `desc(pcos) NULLS LAST,
+    asc(cell_id)` top-nprobe without a query_id window, which would
+    shuffle Q x n_cells embedding rows (guide §2.4).  An empty
+    centroid set yields an empty scored array, and the inner explode
+    drops the query row.  ``cell_id`` is a STRING, the raw type of the
+    partition column it joins (the engine session disables partition
+    type inference; casting the scan side would hide it from dynamic
+    partition pruning)."""
+    q = _guarded(queries, id_col, F.col(emb_col), meta["dim"],
+                 "query_id").select("query_id",
+                                    F.col("embedding").alias("q_emb"),
+                                    F.col("_norm").alias("q_norm"))
 
-    - ``probe_mode="literal"`` (default): the probed cell set (at most
-      n_cells ids — the collected query×nprobe cell ids dedup
-      driver-side to the cell universe) is inlined as a LITERAL
-      partition filter,
-      so Catalyst statically prunes the vectors scan to those
-      directories — the plan shows `PartitionFilters: [cell_id IN (..)]`
-      and tests/test_ann_index.py pins it.  Right for interactive /
-      small query batches: one tiny extra job up front, then the
-      narrowest possible scan.
-    - ``probe_mode="join"``: NO driver collect — the probe set stays
-      distributed and the vectors scan is pruned at RUNTIME by dynamic
-      partition pruning off the broadcast probe join (the plan's
-      PartitionFilters carries `dynamicpruningexpression(cell_id IN
-      dynamicpruning#..)`; pinned too).  Right for huge query batches
-      (ingest-time self-probe, offline eval sweeps), where the literal
-      path's extra pass over `queries` costs more than it saves.
-    """
-    if probe_mode not in ("literal", "join"):
-        raise ValueError(f"probe_mode must be 'literal' or 'join', "
-                         f"got {probe_mode!r}")
-    meta = _load_meta(index_dir)
-    cents = _centroids(spark, index_dir)
-    # dimension-mismatched / NULL queries would probe nprobe cells by
-    # pure id-tiebreak (every cosine NULL) and return k NULL-cos_sim
-    # "neighbors" — drop them up front, same guard as ivf_add
-    q = _with_norm(
-        queries.select(F.col(id_col).alias("query_id"),
-                       F.col(emb_col).alias("embedding"))
-        .filter(F.col("embedding").isNotNull())
-        .filter(F.size("embedding") == meta["dim"])
-    ).select("query_id", F.col("embedding").alias("q_emb"),
-             F.col("_norm").alias("q_norm"))
-    # Probe selection as a projection over the ONE broadcast nested-
-    # centroid row: per query, sort the (pcos, -cell_id) struct array
-    # desc and take the first nprobe — exactly the row_number window's
-    # `desc(pcos) NULLS LAST, asc(cell_id)` top-nprobe, without the
-    # query_id exchange that shuffled Q x n_cells embedding rows
-    # (guide §2.4).  An empty centroid set yields an empty scored
-    # array, and the inner explode then drops the query row — the old
-    # join's empty output.
     def _scored(c):
         pcos = F.round(
             _pair_cos(c["c_emb"], F.col("q_emb"),
@@ -403,44 +390,20 @@ def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
         F.slice(F.sort_array(F.transform(F.col("_cents"), _scored),
                              asc=False),
                 1, nprobe),
-        lambda s: s["cell_id"])
+        lambda s: s["cell_id"].cast("string"))
     probes = (
-        q.join(F.broadcast(_cents_nested(cents)))
+        q.join(F.broadcast(_cents_nested(_centroids(spark, index_dir))))
         .select("query_id", "q_emb", "q_norm",
                 F.explode(probe_cells).alias("cell_id"))
     )
-    # the engine session disables partition-column type inference (a
-    # STRING event_month contract elsewhere), so the partition column
-    # reads back as string on BOTH paths
-    raw_vectors = _vector_scan(spark, index_dir)
-    if probe_mode == "literal":
-        # literal mode consumes `probes` twice — the cell-id collect
-        # below, then the final broadcast join — so a LAZY checkpoint
-        # lets the collect materialize it once and the final plan skip
-        # the query re-scan + nested-centroid re-aggregation (r17,
-        # guide §1.2; cache size = the query batch, literal mode's
-        # documented small-batch contract).  join mode is untouched:
-        # its probes feed the DPP broadcast directly.
-        probes = probes.localCheckpoint(eager=False)
-        # dedup driver-side: the collect moves Q x nprobe INTS, and
-        # dropping the .distinct() removes that exchange's extra AQE
-        # job per search — the resulting cell set is identical
-        probed_cells = sorted({r["cell_id"] for r in
-                               probes.select("cell_id").collect()})
-        # string literals are what statically prune; cast for the join
-        vectors = (
-            raw_vectors
-            .filter(F.col("cell_id").isin([str(c) for c in probed_cells]))
-            .withColumn("cell_id", F.col("cell_id").cast("int"))
-        )
-        joined = vectors.join(F.broadcast(probes), "cell_id")
-    else:
-        # join on the RAW string partition column (casting it would hide
-        # it from the pruning rule): DPP rewrites the scan's partition
-        # filter from the broadcast probe side at runtime, no collect
-        probes_s = probes.withColumn("cell_id",
-                                     F.col("cell_id").cast("string"))
-        joined = raw_vectors.join(F.broadcast(probes_s), "cell_id")
+    return q, probes
+
+
+def _exact_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact re-rank of (query_id, neighbor_id, q_emb, q_norm,
+    embedding, _norm) candidate pairs: (query_id, neighbor_id, cos_sim,
+    rnk) — 6dp cosine desc, neighbor id tiebreak, k rows per query,
+    the query itself excluded."""
     cos = F.round(
         _pair_cos(F.col("q_emb"), F.col("embedding"),
                   F.col("q_norm"), F.col("_norm")), 6
@@ -448,15 +411,37 @@ def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
     w_topk = W.partitionBy("query_id").orderBy(F.desc("cos_sim"),
                                                F.asc("neighbor_id"))
     return (
-        joined
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                cos.alias("cos_sim"))
+        pairs
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", cos.alias("cos_sim"))
         .withColumn("rnk", F.row_number().over(w_topk))
         .filter(F.col("rnk") <= k)
         .withColumn("rnk", F.col("rnk").cast("int"))
         .withColumn("cos_sim", F.col("cos_sim").cast("double"))
     )
+
+
+def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
+               k: int = 5, nprobe: int = 4,
+               id_col: str = "vec_id",
+               emb_col: str = "embedding") -> DataFrame:
+    """Top-k cosine neighbors per query, scanning only nprobe cells.
+
+    No driver collect: the vectors scan joins the broadcast probe frame
+    on the raw string ``cell_id``, and dynamic partition pruning
+    rewrites the scan's partition filter from the broadcast side at run
+    time (the plan's PartitionFilters carries
+    `dynamicpruningexpression(cell_id IN dynamicpruning#..)`;
+    tests/test_ann_index.py pins it), so the scan reads only the
+    probed cells of both vector areas.
+    """
+    meta = _load_meta(index_dir)
+    _q, probes = _probe(spark, index_dir, meta, queries, nprobe,
+                        id_col, emb_col)
+    joined = _vector_scan(spark, index_dir).join(F.broadcast(probes),
+                                                 "cell_id")
+    return _exact_topk(
+        joined.withColumnRenamed("vec_id", "neighbor_id"), k)
 
 
 def ivf_cell_stats(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -500,10 +485,12 @@ def recommend_nprobe(spark: SparkSession, index_dir: str,
                      target_recall: float, k: int = 10,
                      sample_stride: int = 17,
                      candidates: list[int] | None = None) -> dict:
-    """Auto-tune ``nprobe`` (VERDICT r10 stretch 9): replay the
-    measured recall curve (tools/ann_recall_curve.py, OPERATIONS.md §5.8)
-    on a deterministic held-out sample of THIS index's own vectors and
-    return the cheapest nprobe whose recall@k meets ``target_recall``.
+    """Auto-tune ``nprobe`` (VERDICT r10 stretch 9): measure the
+    recall curve (OPERATIONS.md §5.8) on a deterministic held-out
+    sample of THIS index's own vectors and return the cheapest nprobe
+    whose recall@k meets ``target_recall``.  With
+    ``target_recall=1.0`` the returned ``curve`` is the recall curve
+    up to the first candidate that matches the full scan.
 
     Method: every ``sample_stride``-th indexed vec_id self-probes the
     index; ground truth is ``ivf_search`` at nprobe = n_cells (scans

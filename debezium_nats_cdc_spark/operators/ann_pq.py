@@ -4,16 +4,18 @@ Jégou et al., TPAMI 2011 / the FAISS IVF-PQ layout, public literature).
 
 Layout under ``<index_dir>/pq/``:
   * ``codes/``      (vec_id, codes) parquet, ``partitionBy(cell_id)`` —
-                    the SAME partition key as the vector areas, so a
-                    probe's literal cell filter prunes the codes scan
-                    exactly like the vector scan;
+                    the SAME partition key as the vector areas, so the
+                    probe frame prunes the codes scan exactly like the
+                    vector scan;
   * ``model.json``  codebooks + dims + the attachment fingerprint.
 
-Read path (``ivf_search_pq``): probe nprobe cells via the broadcast
-centroids (identical maths to ``ivf_search``), ADC-scan ONLY the
-probed cells' CODES for a per-query shortlist, then exact-cosine
-re-rank just the |queries| × shortlist pairs against the vector area
-(also pruned to the probed cells).  At scale the scan side therefore
+Read path (``ivf_search_pq``): ``ivf_search``'s probe kernel picks
+the same nprobe cells per query, an ADC scan of ONLY the probed
+cells' CODES gives a per-query shortlist, and ``ivf_search``'s exact
+re-rank scores just the |queries| × shortlist pairs against the
+vector area.  Both scans are pruned at run time by dynamic partition
+pruning off a broadcast semi-join with the probe frame — no probe
+collect.  At scale the scan side therefore
 touches nprobe/n_cells of ~8-16 B/vector instead of nprobe/n_cells of
 256 B/vector — the two pruning axes (IVF partitions × PQ bytes)
 multiply.
@@ -58,13 +60,14 @@ from ..index_fs import get_index_fs
 from .ann_index import (
     _REBALANCE_MARKER,
     _STREAM_SUBDIR,
-    _centroids,
+    _exact_topk,
     _load_meta,
     _overwrite_mode,
+    _probe,
     _vector_scan,
 )
-from .pq import PqModel, pq_encode, pq_train
-from .similarity import _pair_cos, _with_norm
+from .pq import PqModel, pq_encode, pq_search_adc, pq_train
+from .similarity import _with_norm
 
 PQ_FORMAT = "ivf-pq-l2adc-v1"
 
@@ -349,12 +352,9 @@ def ivf_search_pq(spark: SparkSession, index_dir: str,
     Refuses on a stale attachment (any index mutation since
     ``ivf_attach_pq`` — the snapshot contract in the module
     docstring).  Output matches ``ivf_search``: (query_id,
-    neighbor_id, cos_sim, rnk), 6dp cosine desc, id tiebreak.
+    neighbor_id, cos_sim, rnk), 6dp cosine desc, id tiebreak; with
+    ``shortlist`` >= the probed cells' size it IS ``ivf_search``.
     """
-    from pyspark.sql import Window as W
-
-    from .pq import pq_search_adc
-
     meta = _load_meta(index_dir)
     model, fp = _load_pq(index_dir)
     if _index_fingerprint(index_dir) != fp:
@@ -362,34 +362,14 @@ def ivf_search_pq(spark: SparkSession, index_dir: str,
             "ivf_search_pq: the index changed since ivf_attach_pq "
             "(add/ingest/delete/compact/rebalance) — the code "
             "attachment is a snapshot; re-run ivf_attach_pq")
-    cents = _centroids(spark, index_dir)
-    q = _with_norm(
-        queries.select(F.col(id_col).alias("query_id"),
-                       F.col(emb_col).alias("embedding"))
-        .filter(F.col("embedding").isNotNull())
-        .filter(F.size("embedding") == meta["dim"])
-    ).select("query_id", F.col("embedding").alias("q_emb"),
-             F.col("_norm").alias("q_norm"))
-    pcos = F.round(
-        _pair_cos(F.col("c_emb"), F.col("q_emb"),
-                  F.col("c_norm"), F.col("q_norm")), 6
-    ).cast("decimal(10,6)")
-    w_probe = W.partitionBy("query_id").orderBy(F.desc("pcos"),
-                                                F.asc("cell_id"))
-    probes = (
-        q.join(F.broadcast(cents))
-        .withColumn("pcos", pcos)
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "cell_id")
-    )
-    probe_pairs = probes.collect()  # ≤ Q × nprobe rows, tiny
-    probed_cells = sorted({r["cell_id"] for r in probe_pairs})
-    cell_lits = [str(c) for c in probed_cells]
-    # the scan is pruned to the UNION of probe sets (one pass serves
-    # the whole query batch); per-query probe semantics are restored
-    # inside pq_search_adc via the probes pairs — a query only ranks
-    # candidates from cells IT probed (ADVICE r13)
+    q, probes = _probe(spark, index_dir, meta, queries, nprobe,
+                       id_col, emb_col)
+    # both scans are pruned to the UNION of probe sets (one pass serves
+    # the whole query batch) by DPP off this broadcast semi-join on the
+    # raw string partition column; per-query probe semantics are
+    # restored inside pq_search_adc via the probe pairs — a query only
+    # ranks candidates from cells IT probed (ADVICE r13)
+    cells = F.broadcast(probes.select("cell_id"))
     codes_dir = os.path.join(_pq_dir(index_dir), "codes")
     if get_index_fs().count_files(codes_dir) == 0:
         # a fully-erased corpus leaves a file-less codes store (every
@@ -401,8 +381,7 @@ def ivf_search_pq(spark: SparkSession, index_dir: str,
             [], "vec_id bigint, codes array<int>, cell_id int")
     else:
         codes = (
-            spark.read.parquet(codes_dir)
-            .filter(F.col("cell_id").isin(cell_lits))
+            spark.read.parquet(codes_dir).join(cells, "cell_id", "left_semi")
             .select("vec_id", "codes", "cell_id")
         )
     short = pq_search_adc(
@@ -410,27 +389,12 @@ def ivf_search_pq(spark: SparkSession, index_dir: str,
         q.select(F.col("query_id").alias("vec_id"),
                  F.col("q_emb").alias("embedding")),
         codes, model, k=shortlist,
-        probes=spark.createDataFrame(
-            [(int(r["query_id"]), int(r["cell_id"])) for r in probe_pairs],
-            "query_id bigint, cell_id int"),
+        probes=probes.select("query_id", "cell_id"),
     ).select("query_id", "neighbor_id")
     vecs = _with_norm(
-        _vector_scan(spark, index_dir)
-        .filter(F.col("cell_id").isin(cell_lits))
+        _vector_scan(spark, index_dir).join(cells, "cell_id", "left_semi")
         .select(F.col("vec_id").alias("neighbor_id"), "embedding")
     )
-    cos = F.round(
-        _pair_cos(F.col("q_emb"), F.col("embedding"),
-                  F.col("q_norm"), F.col("_norm")), 6
-    ).cast("decimal(10,6)")
-    w_topk = W.partitionBy("query_id").orderBy(F.desc("cos_sim"),
-                                               F.asc("neighbor_id"))
-    return (
+    return _exact_topk(
         short.join(vecs, "neighbor_id")   # Q×shortlist, probed cells only
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", "neighbor_id", cos.alias("cos_sim"))
-        .withColumn("rnk", F.row_number().over(w_topk))
-        .filter(F.col("rnk") <= k)
-        .withColumn("rnk", F.col("rnk").cast("int"))
-        .withColumn("cos_sim", F.col("cos_sim").cast("double"))
-    )
+        .join(F.broadcast(q), "query_id"), k)

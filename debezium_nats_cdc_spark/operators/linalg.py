@@ -292,8 +292,8 @@ def pca_fit(spark: SparkSession, vectors: DataFrame, k: int) -> PcaModel:
     bounded-shuffle by construction (d^2 aggregate cells).  What the
     driver collects is the d(d+1)/2-cell TRIANGLE (d=64 -> 2080 rows),
     bounded by the EMBEDDING WIDTH, never by the corpus — the same
-    bounded-collect pattern as ann_index's literal probe.  The dense
-    eigensolve then runs on a d x d symmetric matrix in numpy
+    bounded-collect pattern as ``pq_search_adc``'s query collect.  The
+    dense eigensolve then runs on a d x d symmetric matrix in numpy
     (microseconds; distributing it would be pure overhead).  Rows with
     NULL/ragged lanes were already excluded per-cell by the kernel;
     PCA additionally requires a single consistent d, taken from the

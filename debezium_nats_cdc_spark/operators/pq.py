@@ -306,9 +306,9 @@ def pq_search_adc(spark: SparkSession, queries: DataFrame,
     Returns (query_id, neighbor_id, adc_dist, rnk), rnk by ascending
     squared-L2 ADC distance with id tiebreak (on normalized vectors
     this is exactly descending-cosine order).  Queries are collected
-    driver-side to build LUTs — bounded by ``_MAX_ADC_QUERIES`` (the
-    ``ivf_search`` literal-probe discipline: tiny query set, widest
-    scan pruning); batch-mode querying composes by chunking.
+    driver-side to build LUTs — bounded by ``_MAX_ADC_QUERIES``, the
+    only driver collect of an IVF-PQ read; batch-mode querying
+    composes by chunking.
 
     ``probes`` (optional): a small (query_id, cell_id) frame — the
     per-query probe sets of an IVF read.  When given, ``codes`` must
@@ -425,56 +425,4 @@ def pq_search_adc(spark: SparkSession, queries: DataFrame,
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .withColumn("rnk", F.col("rnk").cast("int"))
-    )
-
-
-def pq_search_rerank(spark: SparkSession, queries: DataFrame,
-                     codes: DataFrame, vectors: DataFrame,
-                     model: PqModel, k: int = 10, shortlist: int = 50,
-                     id_col: str = "vec_id",
-                     emb_col: str = "embedding") -> DataFrame:
-    """ADC shortlist + exact re-rank — the full production PQ read.
-
-    Pure ADC ranks by a quantized distance, so its top-k recall is
-    capped by codebook resolution (measured on the driver corpus:
-    0.25-0.55 mean recall@10 across m/k configs).  The standard fix is
-    two-stage: ADC scans the CODES for a ``shortlist`` of candidates
-    (bytes-light, no float vectors touched), then ONLY those
-    query×candidate pairs read their exact vectors for a cosine
-    re-rank — measured: the m=16/k=64 ADC@50 shortlist contains 95 %
-    of the exact top-10, so re-rank recovers it at the cost of
-    |queries| × shortlist exact reads instead of a corpus scan.
-
-    Output (query_id, neighbor_id, cos_sim, rnk) matches the engine's
-    search convention (6dp cosine, desc, id tiebreak).
-    """
-    from pyspark.sql import Window as W
-
-    from .similarity import _pair_cos, _with_norm
-
-    short = pq_search_adc(spark, queries, codes, model, k=shortlist,
-                          id_col=id_col, emb_col=emb_col) \
-        .select("query_id", "neighbor_id")
-    v = _with_norm(
-        vectors.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(emb_col).alias("embedding")))
-    q = _with_norm(
-        queries.select(F.col(id_col).alias("query_id"),
-                       F.col(emb_col).alias("embedding"))) \
-        .select("query_id", F.col("embedding").alias("q_emb"),
-                F.col("_norm").alias("q_norm"))
-    cos = F.round(
-        _pair_cos(F.col("q_emb"), F.col("embedding"),
-                  F.col("q_norm"), F.col("_norm")), 6
-    ).cast("decimal(10,6)")
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"),
-                                          F.asc("neighbor_id"))
-    return (
-        short.join(v, "neighbor_id")      # Q×shortlist rows, never corpus
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", "neighbor_id", cos.alias("cos_sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .withColumn("rnk", F.col("rnk").cast("int"))
-        .withColumn("cos_sim", F.col("cos_sim").cast("double"))
     )

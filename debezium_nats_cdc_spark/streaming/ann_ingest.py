@@ -19,9 +19,9 @@ from the LAYOUT instead:
     REWRITES byte-identical partitions instead of appending beside
     them.  The epoch guard then makes the common replay a cheap no-op;
     the overwrite makes the crash-window replay harmless;
-  * cell_id stays the LEADING partition level, so ``ivf_search``'s
-    probe pruning (literal or DPP) prunes the stream area exactly like
-    the build area — search reads union both transparently.
+  * cell_id stays the LEADING partition level, so the probe's dynamic
+    partition pruning prunes the stream area exactly like the build
+    area — search reads union both transparently.
 
 Fresh-checkpoint contract (differs from the state monitors, on
 purpose): a NEW checkpoint means Structured Streaming re-delivers the
@@ -56,7 +56,6 @@ from ..operators.ann_index import (
     _centroids,
     _load_meta,
 )
-from ..operators.similarity import _with_norm
 from .state_backend import LocalFSBackend, StateBackend
 
 class IvfStreamIngest:
@@ -110,15 +109,10 @@ class IvfStreamIngest:
         if epoch <= side["last_epoch"]:
             return  # replayed micro-batch: its partitions are already live
         meta = _load_meta(self.index_dir)
-        from ..operators.ann_index import _area_typed
+        from ..operators.ann_index import _area_typed, _guarded
 
-        v = _with_norm(
-            vectors.select(F.col(self.id_col).alias("vec_id"),
-                           _area_typed(F.col(self.emb_col), meta)
-                           .alias("embedding"))
-            .filter(F.col("embedding").isNotNull())
-            .filter(F.size("embedding") == meta["dim"])
-        )
+        v = _guarded(vectors, self.id_col,
+                     _area_typed(F.col(self.emb_col), meta), meta["dim"])
         assigned = (
             _assign(v, _centroids(spark, self.index_dir))
             .withColumn("_epoch",

@@ -74,50 +74,33 @@ def test_nprobe_recall_floor(spark, index_dir):
     assert recall >= 0.4, f"recall@{K} {recall:.2f} with nprobe={NPROBE}"
 
 
-def test_probe_scan_partition_prunes(spark, index_dir):
+def _dpp_pruned_lines(df):
     from debezium_nats_cdc_spark.plans.explain import formatted_plan
 
-    df = ivf_search(spark, index_dir, _queries(spark).limit(1), k=K,
-                    nprobe=NPROBE)
     plan = formatted_plan(df)
-    pruned = [ln for ln in plan.splitlines()
-              if "PartitionFilters" in ln and "cell_id#" in ln
-              and " IN (" in ln]
+    return plan, [ln for ln in plan.splitlines()
+                  if "PartitionFilters" in ln
+                  and "dynamicpruningexpression" in ln and "cell_id#" in ln]
+
+
+def test_probe_scan_partition_prunes(spark, index_dir):
+    """A single-query search must still partition-prune the vectors
+    scan: the probe set reaches it as a runtime (DPP) filter, not as a
+    driver-collected literal list."""
+    plan, pruned = _dpp_pruned_lines(
+        ivf_search(spark, index_dir, _queries(spark).limit(1), k=K,
+                   nprobe=NPROBE))
     assert pruned, f"vectors scan not partition-pruned\n{plan}"
 
 
-def test_join_probe_mode_equals_literal_mode(spark, index_dir):
-    """The no-collect join probe path (large-|Q| cutover) must return
-    exactly what the literal path returns, at exhaustive AND partial
-    nprobe."""
-    for nprobe in (NPROBE, N_CELLS):
-        lit = {(r.query_id, r.neighbor_id, r.rnk) for r in
-               ivf_search(spark, index_dir, _queries(spark), k=K,
-                          nprobe=nprobe, probe_mode="literal").collect()}
-        jn = {(r.query_id, r.neighbor_id, r.rnk) for r in
-              ivf_search(spark, index_dir, _queries(spark), k=K,
-                         nprobe=nprobe, probe_mode="join").collect()}
-        assert jn == lit and lit
-
-
 def test_join_probe_scan_prunes_dynamically(spark, index_dir):
-    """join mode must carry a runtime partition filter (DPP off the
-    broadcast probe side) on the vectors scan — the 'no driver collect'
-    path still reads ~nprobe/n_cells of the corpus, not all of it."""
-    from debezium_nats_cdc_spark.plans.explain import formatted_plan
-
-    df = ivf_search(spark, index_dir, _queries(spark), k=K,
-                    nprobe=NPROBE, probe_mode="join")
-    plan = formatted_plan(df)
-    pruned = [ln for ln in plan.splitlines()
-              if "PartitionFilters" in ln
-              and "dynamicpruningexpression" in ln and "cell_id#" in ln]
-    assert pruned, f"join-mode vectors scan not DPP-pruned\n{plan}"
-
-
-def test_probe_mode_validated(spark, index_dir):
-    with pytest.raises(ValueError, match="probe_mode"):
-        ivf_search(spark, index_dir, _queries(spark), probe_mode="bogus")
+    """The vectors scan must carry a runtime partition filter (DPP off
+    the broadcast probe side) for a multi-query batch: with no driver
+    collect the search still reads ~nprobe/n_cells of the corpus, not
+    all of it."""
+    plan, pruned = _dpp_pruned_lines(
+        ivf_search(spark, index_dir, _queries(spark), k=K, nprobe=NPROBE))
+    assert pruned, f"vectors scan not DPP-pruned\n{plan}"
 
 
 def test_ivf_add_makes_new_vectors_searchable(spark, index_dir, tmp_path):
@@ -215,7 +198,8 @@ def test_cell_stats_flags_drifted_ingest(spark, tmp_path):
 
 def test_recall_floor_at_default_nprobe_on_clustered_corpus(spark, tmp_path):
     """The documented default operating point (OPERATIONS.md §5.8,
-    measured by tools/ann_recall_curve.py): on a clusterable corpus —
+    measured by ``recommend_nprobe(spark, idx, target_recall=1.0,
+    candidates=(1, 2, 4, 8, 12))``): on a clusterable corpus —
     the shape real encoder output has — nprobe=4 of 16 cells must hold
     recall@10 >= 0.9 vs the exhaustive scan."""
     import numpy as np

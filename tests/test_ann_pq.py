@@ -78,12 +78,57 @@ def test_attach_and_search_recall(spark, index_dir):
     got_p = ivf_search_pq(spark, index_dir, q, k=10,
                           nprobe=4, shortlist=50).collect()
     assert _recall(exact_p, got_p) >= 0.7
-    # search conventions: ranked, deterministic, k rows max per query
+    # search conventions: ranked 1..n per query, 6dp cosine desc
     per_q = {}
     for r in got_full:
-        per_q.setdefault(r.query_id, []).append(r.rnk)
-    assert all(sorted(v) == list(range(1, len(v) + 1))
-               for v in per_q.values())
+        per_q.setdefault(r.query_id, []).append((r.rnk, r.cos_sim))
+    for rows in per_q.values():
+        rows.sort()
+        assert [rnk for rnk, _ in rows] == list(range(1, len(rows) + 1))
+        assert all(c is not None for _, c in rows)
+        assert all(rows[i][1] >= rows[i + 1][1]
+                   for i in range(len(rows) - 1))
+
+
+def test_pq_probes_the_same_cells_as_ivf_search(spark, index_dir):
+    """Both reads share one probe kernel: with a shortlist as large as
+    the corpus the ADC stage drops nothing, so ivf_search_pq must equal
+    ivf_search row for row at every nprobe — a query ranking a cell the
+    other read did not probe (or missing one) breaks the equality."""
+    ivf_attach_pq(spark, index_dir, m=8, k=16, rounds=2)
+    q, n = _queries(spark), _emb(spark).count()
+    for nprobe in (1, 3, N_CELLS):
+        want = sorted(map(tuple, ivf_search(
+            spark, index_dir, q, k=10, nprobe=nprobe).collect()))
+        got = sorted(map(tuple, ivf_search_pq(
+            spark, index_dir, q, k=10, nprobe=nprobe,
+            shortlist=n).collect()))
+        assert got == want and want, nprobe
+
+
+def test_pq_scans_prune_dynamically_and_query_bound(spark, index_dir):
+    """No probe collect: the codes scan and the vectors scan both carry
+    a runtime partition filter (DPP off the broadcast probe frame) at
+    nprobe < n_cells, and the driver-side LUT bound refuses a 65-query
+    batch."""
+    from debezium_nats_cdc_spark.plans.explain import formatted_plan
+
+    ivf_attach_pq(spark, index_dir, m=8, k=16, rounds=1)
+    plan = formatted_plan(ivf_search_pq(spark, index_dir, _queries(spark),
+                                        k=5, nprobe=3))
+    scans = [b for b in plan.split("\n\n") if "Scan parquet" in b
+             and "PartitionFilters" in b]
+    for area in (os.path.join("pq", "codes"), "vectors"):
+        hit = [b for b in scans if f"{area}]" in b]
+        assert hit, f"no {area} scan in plan\n{plan}"
+        for b in hit:
+            filt = [ln for ln in b.splitlines() if "PartitionFilters" in ln]
+            assert "dynamicpruningexpression(cell_id#" in filt[0], \
+                f"{area} scan not DPP-pruned\n{b}"
+    with pytest.raises(ValueError, match="more than 64 queries"):
+        ivf_search_pq(spark, index_dir,
+                      _emb(spark).filter(F.col("vec_id") < 100), k=5,
+                      nprobe=3)
 
 
 def test_every_mutation_staleness_guard(spark, index_dir):

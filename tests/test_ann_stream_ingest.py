@@ -49,8 +49,8 @@ def _search_rows(spark, d):
 
 def test_stream_adds_equal_batch_adds(spark, tmp_path):
     """Same base + same two add batches: the streaming sink and the
-    proven batch ivf_add path must yield identical searches (both probe
-    modes) and identical cell stats."""
+    proven batch ivf_add path must yield identical searches and
+    identical cell stats."""
     d_stream, d_batch = str(tmp_path / "s"), str(tmp_path / "b")
     for d in (d_stream, d_batch):
         ivf_build(spark, _base(spark), d, n_cells=N_CELLS)
@@ -62,10 +62,6 @@ def test_stream_adds_equal_batch_adds(spark, tmp_path):
     assert _search_rows(spark, d_stream) == _search_rows(spark, d_batch)
     assert sorted(map(tuple, ivf_cell_stats(spark, d_stream).collect())) == \
         sorted(map(tuple, ivf_cell_stats(spark, d_batch).collect()))
-    joined = sorted(map(tuple, ivf_search(
-        spark, d_stream, _queries(spark), k=K, nprobe=NPROBE,
-        probe_mode="join").collect()))
-    assert joined == _search_rows(spark, d_batch)
 
 
 def test_replay_and_crash_window_are_exactly_once(spark, tmp_path):

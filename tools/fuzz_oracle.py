@@ -31,8 +31,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
 from check_strict import TABLES, canon  # noqa: E402  (shared canonicalizer)
 

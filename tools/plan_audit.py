@@ -33,7 +33,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 _paths = [a for a in sys.argv[1:] if not a.startswith("--")]
 SF_DIR = _paths[0] if _paths else "/root/testdata/sf0.001"
@@ -79,11 +80,10 @@ CARTESIAN_OK: dict[str, str] = {
     "text_bm25_topk": "1-row corpus stats (N, avgdl) broadcast "
                       "crossJoined into the per-term score — scalar "
                       "bound",
-    # ann_search_after_lifecycle left this list in r17: literal-mode
-    # probes are now lazily checkpointed (computed once, shared by the
-    # cell collect and the final broadcast), so the returned plan reads
-    # the checkpoint instead of re-running the bounded centroid
-    # nested-loop — the pattern the entry allowed is gone from the plan
+    "ann_search_after_lifecycle": "probe scoring: |queries| x the "
+                                  "broadcast one-row nested-centroid "
+                                  "array (bounded n_cells=16, by "
+                                  "construction)",
 }
 
 # Queries whose range-partitioning exchange is a reviewed TERMINAL sort
@@ -155,9 +155,7 @@ def run_audit(spark, sf_dir: str):
     return rows, violations
 
 
-LOCKFILE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "plans.lock.json")
+LOCKFILE = os.path.join(REPO, "plans.lock.json")
 
 
 def write_lock(rows, path: str = None) -> None:

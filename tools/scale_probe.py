@@ -24,11 +24,13 @@ Writes SCALING.md.  Usage: python tools/scale_probe.py [small_sf big_sf]
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 if len(sys.argv) == 2:
     sys.exit("usage: scale_probe.py [small_sf_dir big_sf_dir] — pass "

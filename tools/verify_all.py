@@ -19,7 +19,9 @@ import time
 
 FAST = "--fast" in sys.argv[1:]
 
-# scale-factor tables, relative to the repo root every gate runs in
+# every gate runs from the root of the checkout this file belongs to
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# scale-factor tables, relative to that repo root
 TESTDATA = "../testdata"
 
 GATES: list[tuple[str, list[str]]] = [
@@ -50,7 +52,7 @@ def main() -> int:
     failures = []
     for name, cmd in GATES:
         t0 = time.time()
-        r = subprocess.run(cmd, cwd="/root/repo", capture_output=True,
+        r = subprocess.run(cmd, cwd=REPO, capture_output=True,
                            text=True)
         took = time.time() - t0
         lines = [ln for ln in (r.stdout + r.stderr).strip().splitlines()
