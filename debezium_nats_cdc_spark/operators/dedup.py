@@ -96,8 +96,11 @@ def _h1_h2m_cols(shingle_col: str = "g"):
 # member-vs-anchor pair, but skips the other all-pairs expansions, and
 # the operator of a 100 TB run needs to SEE that trade (alert on
 # skipped_pairs, re-run with a higher cap if the anchor recall bound is
-# not acceptable).  Populated by _cap_buckets; read via
+# not acceptable).  Populated by _candidate_pairs; read via
 # bucket_drop_stats() after an action has run on the query's result.
+# Bounded by the op names: each run REPLACES its op's entry, so a
+# streaming ingest (one run per micro-batch) holds only its last
+# batch's observation and fallback plan, never one per batch.
 _DROP_OBS: dict[str, tuple[object, DataFrame]] = {}
 
 _DROP_METRIC_COLS = (
@@ -125,8 +128,10 @@ def _drop_metric_exprs():
 
 def bucket_drop_stats(op: str, obs_wait_s: float = 3.0) -> dict | None:
     """Skew-cap metrics for the last run of ``op`` ('minhash' |
-    'jaccard' | 'simhash' | 'curation' | 'exact_substring'), or None if
-    it hasn't run (or its session is gone).
+    'jaccard' | 'simhash' | 'curation' | 'exact_substring' |
+    'corpus_ingest' | 'embedding_ingest' — the last two are the
+    streaming dedup ingests' last micro-batch), or None if it hasn't
+    run (or its session is gone).
 
     Keys: ``capped_buckets`` (buckets over BUCKET_CAP whose expansion
     degraded to anchor pairing), ``recovered_pairs`` (anchor pairs still
@@ -138,7 +143,7 @@ def bucket_drop_stats(op: str, obs_wait_s: float = 3.0) -> dict | None:
     pyspark's ``Observation.get`` only waits ~100 ms before surfacing a
     schemaless empty row as an opaque toPyRow assertion error.  If the
     observation never fires (AQE pruned the CollectMetrics node, see
-    _cap_buckets), falls back to collecting the stored aggregation —
+    _candidate_pairs), falls back to collecting the stored aggregation —
     which RE-RUNS the bucket pipeline (shingle → postings → groupBy) as
     one extra job: cheap at test scale, a real scan at corpus scale, so
     treat a fallback-path read as a diagnostic, not a free metric.  The
@@ -173,7 +178,8 @@ def _candidate_pairs(rows: DataFrame, key_cols: list[str],
     """Bucket-member rows (key…, doc_id, extras…) → candidate pairs
     (doc_a, doc_b, a_<extra>…, b_<extra>…) with BOUNDED memory at any
     skew.  Shared by the minhash/simhash/jaccard/exact-substring/
-    curation candidate generators.
+    curation candidate generators and by the streaming corpus and
+    embedding dedup ingests (streaming/_ingest_base._resolve_batch).
 
     Two-path plan keyed on per-bucket document frequency:
 

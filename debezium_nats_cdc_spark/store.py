@@ -48,9 +48,10 @@ def clustered_store_rows(events: DataFrame) -> DataFrame:
     No repartition("event_month"): a micro-batch usually spans one month,
     and hashing on it would collapse the write to a single task.  Instead
     each task sorts its slice by (month, clustering keys) and writes one
-    file per month — parallel writes, per-file clustering preserved.  A
-    periodic compaction (compact_store) re-sorts partitions globally when
-    file counts grow.
+    file per month — parallel writes, per-file clustering preserved.
+    Closed months are re-clustered off the hot path by `optimize_zorder`,
+    a maintenance job run by hand; nothing compacts the store
+    automatically.
     """
     return to_store_rows(events).sortWithinPartitions(
         "event_month", "event_type", "event_timestamp", "aggregate_id"
@@ -67,23 +68,6 @@ def append_events(events: DataFrame, path: str) -> None:
         .partitionBy("event_month")
         .parquet(path)
     )
-
-
-def compact_store(spark: SparkSession, path: str, files_per_partition: int = 1) -> None:
-    """Rewrite the store with globally-clustered partitions (run off the
-    hot path, like MergeTree background merges)."""
-    df = spark.read.parquet(path)
-    tmp = path + ".compact"
-    (
-        df.repartition(files_per_partition * max(df.select("event_month").distinct().count(), 1), "event_month")
-        .sortWithinPartitions("event_type", "event_timestamp", "aggregate_id")
-        .write.mode("overwrite")
-        .partitionBy("event_month")
-        .parquet(tmp)
-    )
-    final = Path(path)
-    shutil.rmtree(final)
-    Path(tmp).rename(final)
 
 
 def _zdim_encode(df: DataFrame, col: str, max_codes: int) -> tuple[DataFrame, str]:
@@ -130,8 +114,8 @@ def optimize_zorder(
     max_codes: int = 100_000,
 ) -> list[str]:
     """OPTIMIZE-style Z-order compaction of closed event-store month
-    partitions (the multi-dim upgrade to `compact_store`'s single
-    clustered key).
+    partitions (multi-dim clustering, where each micro-batch file is
+    sorted only by the single key of `clustered_store_rows`).
 
     The reference's analytics workload (docs/system-design.md:130-134)
     filters by event type AND by time window AND by aggregate; the
@@ -144,11 +128,10 @@ def optimize_zorder(
     `file_minmax_stats` / `skipped_fraction` in tests/test_store_zorder.
 
     Cost shape: per month, one bounded dictionary collect per string
-    dim plus exactly ONE range shuffle (the zorder_write contract) —
-    the same price as `compact_store`'s re-sort, paid off the hot path
-    like a MergeTree background merge.  The directory swap is
-    rm+rename (same non-atomic maintenance-window contract as
-    `compact_store`; run it when no reader races the partition).
+    dim plus exactly ONE range shuffle (the zorder_write contract),
+    paid off the hot path like a MergeTree background merge.  The
+    directory swap is rm+rename, a non-atomic maintenance-window
+    contract: run it when no reader races the partition.
 
     Returns the list of months rewritten.
     """
@@ -169,11 +152,10 @@ def optimize_zorder(
             zdims.append(enc_col)
             if enc_col != c:
                 drop.append(enc_col)
-        # staging lives OUTSIDE the store root (compact_store's
-        # convention): a tmp dir named event_month=<m>.zorder inside it
-        # would match both Spark partition discovery and this
-        # function's own glob after a crash, permanently duplicating
-        # the month
+        # staging lives OUTSIDE the store root: a tmp dir named
+        # event_month=<m>.zorder inside it would match both Spark
+        # partition discovery and this function's own glob after a
+        # crash, permanently duplicating the month
         tmp = f"{str(root)}.zorder-{m}"
         shutil.rmtree(tmp, ignore_errors=True)  # leftover from a crash
         zorder_write(enc_df, zdims, tmp, n_files=files_per_month, drop=drop)

@@ -1,13 +1,16 @@
 """Shared scaffolding for the incremental dedup ingest pipelines.
 
 corpus_dedup (text, MinHash band index) and embedding_dedup (vectors,
-hyperplane bucket index) share everything except the sketch: a
+hyperplane bucket index) each own four things: a sketch, a probe join
+against the index, a score column and a threshold.  Everything else
+lives here ONCE, so a fix in either ingest path (the r6 review found two
+bugs duplicated across both) cannot drift from the other: the batch
+resolve (_resolve_batch — intra-batch pairs from the batch dedup
+operators' capped kernel, operators/dedup._candidate_pairs, best-of
+over probe and intra matches, pointer-jumped dup chains), a
 format-stamped append-only index with torn-compaction healing, three
 exactly-once sinks through the txn/StateBackend seam, threshold
-compaction, a stale-marker reset contract at start, and pointer-jumped
-dup chains.  This module holds that machinery ONCE so a fix in either
-ingest path (the r6 review found two bugs duplicated across both)
-cannot drift from the other.
+compaction and a stale-marker reset contract at start.
 """
 
 from __future__ import annotations
@@ -16,16 +19,16 @@ import logging
 import os
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .state_backend import LocalFSBackend, StateBackend
 
 log = logging.getLogger(__name__)
 
 
-def pointer_jump(best: DataFrame, id_col: str, max_rounds: int = 8) -> DataFrame:
-    """Rewrite (id, dup_of, score) rows until every non-NULL dup_of is
-    terminal within the set.  Converges because intra-batch targets
+def pointer_jump(best: DataFrame) -> DataFrame:
+    """Rewrite (doc_id, dup_of, score) rows until every non-NULL dup_of
+    is terminal within the set.  Converges because intra-batch targets
     strictly decrease (keeper < member within a pair) and probe targets
     are already-accepted index entries.  Materializes ONCE up front and
     after each jump: every convergence probe is a Spark action, and an
@@ -33,9 +36,9 @@ def pointer_jump(best: DataFrame, id_col: str, max_rounds: int = 8) -> DataFrame
     pair-expansion lineage per probe AND again at the caller's final
     action (r6 review finding)."""
     best = best.localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+    for _ in range(8):
         targets = best.filter(F.col("dup_of").isNotNull()).select(
-            F.col(id_col).alias("t_id"), F.col("dup_of").alias("t_dup"))
+            F.col("doc_id").alias("t_id"), F.col("dup_of").alias("t_dup"))
         jumped = best.join(targets, best["dup_of"] == targets["t_id"], "left")
         if jumped.filter(F.col("t_dup").isNotNull()).limit(1).count() == 0:
             break
@@ -43,6 +46,67 @@ def pointer_jump(best: DataFrame, id_col: str, max_rounds: int = 8) -> DataFrame
             "dup_of", F.coalesce("t_dup", F.col("dup_of"))
         ).drop("t_id", "t_dup").localCheckpoint(eager=True)
     return best
+
+
+def _best_of(matches: DataFrame, score_name: str) -> DataFrame:
+    # best match = highest score, ties to the lowest target id
+    return matches.groupBy("doc_id").agg(
+        F.max_by("dup_of", F.struct(F.col(score_name), -F.col("dup_of"))
+                 ).alias("dup_of"),
+        F.max(score_name).alias(score_name),
+    )
+
+
+def _resolve_batch(rows: DataFrame, key_cols: list[str], extras: list[str],
+                   probe: DataFrame | None, score_name: str, score: Column,
+                   threshold: float, op: str) -> DataFrame:
+    """Resolve one ingest batch: (doc_id, dup_of, <score_name>) with
+    dup_of NULL for accepted docs.
+
+    ``rows`` are the batch's bucket rows (key_cols…, doc_id, extras…);
+    ``probe`` is the caller's batch-vs-index equi-join as pairs
+    (doc_a = index id, doc_b = batch id, a_<extra>…, b_<extra>…), or
+    None before the first accepted batch.  ``score`` is one Column over
+    the a_*/b_* pair columns, kept where it reaches ``threshold``.
+
+    Intra-batch pairs come from the batch dedup operators' capped kernel
+    (operators/dedup._candidate_pairs): an over-cap bucket degrades to
+    ANCHOR pairing (every member vs the bucket's min-id doc, O(k) as a
+    plain projection) and is never dropped, because an ingest dedup must
+    not let duplicates through; ``bucket_drop_stats(op)`` reports that
+    fallback.  An intra dup's keeper is its lowest-id match; a probe
+    hit's target is its best index match (the index doc always wins —
+    it arrived first).
+
+    dup_of must point at an ACCEPTED doc, but the best match can still
+    target a doc that is itself quarantined this batch: the anchor-capped
+    case (a member's only pair is its bucket anchor, and the anchor
+    duplicates the index) and the cross-bucket case (the member's keeper
+    was matched through a DIFFERENT bucket).  pointer_jump rewrites both
+    until every target is terminal.  The recorded score stays the
+    member's own score against its direct match — a proxy for
+    member-vs-final-target (both cleared the threshold against a shared
+    near-identical item)."""
+    from ..operators.dedup import _candidate_pairs
+
+    def scored(pairs: DataFrame) -> DataFrame:
+        return (pairs.dropDuplicates(["doc_a", "doc_b"])
+                .withColumn(score_name, score)
+                .filter(F.col(score_name) >= threshold))
+
+    matches = scored(_candidate_pairs(rows, key_cols, extras, op)).groupBy(
+        F.col("doc_b").alias("doc_id")).agg(
+        F.min("doc_a").alias("dup_of"),
+        F.max(score_name).alias(score_name),
+    )
+    if probe is not None:
+        probe_best = _best_of(scored(probe).select(
+            F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("dup_of"),
+            score_name), score_name)
+        matches = probe_best.unionByName(matches)
+    all_ids = rows.select("doc_id").distinct()
+    return all_ids.join(pointer_jump(_best_of(matches, score_name)),
+                        "doc_id", "left")
 
 
 class FormatStampedIndexIngest:
@@ -101,23 +165,18 @@ class FormatStampedIndexIngest:
             marker.parent.mkdir(parents=True, exist_ok=True)
             marker.write_text(self._format())
 
-    def _maybe_compact_index(self, spark: SparkSession) -> bool:
-        """Coalesce the index log once its file count passes the
+    def _maybe_compact_dir(self, spark: SparkSession, d: str) -> bool:
+        """Coalesce an append-only state dir (the index, or a sibling
+        such as the vectors-once store) once its file count passes the
         threshold.  Safe under epoch replay: exactly-once is keyed on
-        commit MARKERS in txn_dir (outside the index dir), so a replayed
+        commit MARKERS in txn_dir (outside the data dirs), so a replayed
         epoch after compaction is skipped, not re-appended; the format
         stamp is re-written because swap_write replaces the directory.
         Coalesce explicitly: Spark's leaf parallelism floor keeps tiny
         files in separate partitions, so an un-coalesced rewrite would
         preserve the file count.  ~8x per compaction amortizes to O(log)
-        rewrites of any prefix."""
-        return self._maybe_compact_dir(spark, self.index_dir)
-
-    def _maybe_compact_dir(self, spark: SparkSession, d: str) -> bool:
-        """Threshold compaction for any append-only state dir (the index
-        by default; normalized layouts add sibling dirs, e.g. the
-        vectors-once store).  Returns True iff a compaction ran — callers
-        gate post-compaction audits (e.g. embedding_dedup strict
+        rewrites of any prefix.  Returns True iff a compaction ran —
+        callers gate post-compaction audits (e.g. embedding_dedup strict
         consistency) on it so the audit cost is paid only when the
         directory was actually replaced."""
         n_files = self.backend.data_file_count(d)

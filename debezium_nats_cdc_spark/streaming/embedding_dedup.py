@@ -5,7 +5,7 @@ An embedding INGEST pipeline asks, as new vectors arrive (document
 embeddings, image features): which are near-duplicates — cosine above a
 threshold — of anything already accepted?  Emit the fresh ones,
 quarantine the dups with their match, and grow the index.  Batch-mode
-`sim_embedding_neardup` (operators/similarity.py:228) answers the
+`sim_embedding_neardup` (operators/similarity.py:268) answers the
 within-corpus question; this class answers it against an unbounded,
 continuously-growing corpus with exactly-once sinks.
 
@@ -24,12 +24,13 @@ Design (no cross join anywhere, mirrors corpus_dedup):
 - Per micro-batch: probe = equi-join batch sketches vs index on
   (table_id, bucket), verify candidates with an Arrow pair-cosine, keep
   matches >= threshold (the index vector always wins — it arrived
-  first).  Intra-batch dups resolve through the same capped
-  group-then-expand kernel as the text path (lowest vec_id wins,
-  over-cap buckets degrade to anchor matching, never dropped).
-- dup_of must point at an ACCEPTED vector: pointer-jump chains exactly
-  like corpus_dedup (intra targets strictly decrease; index targets are
-  terminal).
+  first).  Intra-batch dups come from the batch operators' capped
+  candidate-pair kernel (dedup._candidate_pairs: lowest vec_id wins,
+  over-cap buckets degrade to anchor pairing, never dropped).
+- The resolve is the text path's: _ingest_base._resolve_batch picks
+  each vector's best match and pointer-jumps chains so dup_of always
+  lands on an ACCEPTED vector (intra targets strictly decrease; index
+  targets are terminal).
 - EXACTLY-ONCE under micro-batch replay: accepted/quarantine/index all
   publish through the epoch-keyed commit protocol (streaming/txn.py via
   the StateBackend seam), and the index heals torn compactions BEFORE
@@ -45,14 +46,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.vectors import l2_norm, plane_sign_word_arrow
 from ..operators.similarity import _hyperplanes, _pair_cos_arrow
-from ._ingest_base import FormatStampedIndexIngest, pointer_jump
+from ._ingest_base import FormatStampedIndexIngest, _resolve_batch
 
 log = logging.getLogger(__name__)
 
 N_TABLES = 4
 PLANES_PER_TABLE = 8
 COS_THRESHOLD = 0.92
-INTRA_BUCKET_CAP = 1000
 
 # signature family persisted in the index; bump when planes/threshold
 # derivation changes (stale sketches would match nothing — same failure
@@ -61,16 +61,15 @@ INDEX_FORMAT = f"hyperplane-{N_TABLES}x{PLANES_PER_TABLE}-v1"
 INDEX_COMPACT_THRESHOLD = 48
 
 
-def _sketch(vecs: DataFrame, id_col: str = "vec_id",
-            emb_col: str = "embedding") -> DataFrame:
-    """(id, embedding) -> one row per table: (table_id, bucket, id,
-    embedding, norm).  All T*B plane signs come from ONE Arrow kernel
-    pass; per-table buckets are integer slices of the sign word."""
+def _sketch(vecs: DataFrame) -> DataFrame:
+    """(vec_id, embedding) -> one row per table: (table_id, bucket,
+    vec_id, embedding, norm).  All T*B plane signs come from ONE Arrow
+    kernel pass; per-table buckets are integer slices of the sign word."""
     from ..speccache import per_context
 
     def build():
         word = plane_sign_word_arrow(
-            emb_col, _hyperplanes(n_planes=N_TABLES * PLANES_PER_TABLE))
+            "embedding", _hyperplanes(n_planes=N_TABLES * PLANES_PER_TABLE))
         tables = F.explode(
             F.array(
                 *[
@@ -84,171 +83,83 @@ def _sketch(vecs: DataFrame, id_col: str = "vec_id",
                 ]
             )
         ).alias("tb")
-        pre = [F.col(id_col), F.col(emb_col),
-               l2_norm(F.col(emb_col)).alias("norm"), word.alias("_w")]
-        mid = [F.col(id_col), F.col(emb_col), F.col("norm"), tables]
-        out = [F.col("tb.table_id"), F.col("tb.bucket"), F.col(id_col),
-               F.col(emb_col), F.col("norm")]
+        pre = [F.col("vec_id"), F.col("embedding"),
+               l2_norm(F.col("embedding")).alias("norm"), word.alias("_w")]
+        mid = [F.col("vec_id"), F.col("embedding"), F.col("norm"), tables]
+        out = [F.col("tb.table_id"), F.col("tb.bucket"), F.col("vec_id"),
+               F.col("embedding"), F.col("norm")]
         return pre, mid, out
 
-    pre, mid, out = per_context(
-        ("embedding_dedup.sketch", id_col, emb_col), build)
+    pre, mid, out = per_context("embedding_dedup.sketch", build)
     return vecs.select(*pre).select(*mid).select(*out)
-
-
-# candidate verification reuses the batch ops' Arrow pair-cosine
-# (operators/similarity._pair_cos_arrow) — one kernel to fix, not two
-_pair_cos = _pair_cos_arrow
 
 
 def dedup_batch_against_index(batch_sk: DataFrame,
                               index_sk: DataFrame | None,
-                              index_vectors: DataFrame | None,
-                              id_col: str = "vec_id") -> DataFrame:
+                              index_vectors: DataFrame | None) -> DataFrame:
     """Resolve one batch: (vec_id, dup_of, cos_sim) with dup_of NULL for
     accepted vectors.  Candidates come only from bucket collisions —
-    probe (batch vs index) and intra-batch — each verified by true
-    cosine before any match is claimed.
+    probe (batch vs index, below) and intra-batch
+    (_ingest_base._resolve_batch) — each verified by true cosine, with
+    the batch ops' Arrow pair-cosine, before any match is claimed.
 
-    ``index_sk`` rows are ids-only (table_id, bucket, id) and
+    ``index_sk`` rows are ids-only (table_id, bucket, vec_id) and
     ``index_vectors`` holds each accepted vector ONCE — candidate ids
     join to the vector store before the cosine verify, so the index
     stores no vector x N_TABLES, at the cost of one extra equi-join
     over only the COLLIDING candidates (not the corpus).  Both are None
     before the first accepted batch.
     """
-    from ..speccache import per_context
-
-    probe_matches = None
+    rows = batch_sk.withColumnRenamed("vec_id", "doc_id")
+    probe = None
     if index_sk is not None:
-        cand = (
-            batch_sk.alias("b")
+        probe = (
+            rows.alias("b")
             .join(
                 index_sk.alias("i"),
                 (F.col("b.table_id") == F.col("i.table_id"))
                 & (F.col("b.bucket") == F.col("i.bucket"))
                 # replay guard: a partially-committed epoch may have
                 # indexed this batch's own vectors already
-                & (F.col(f"b.{id_col}") != F.col(f"i.{id_col}")),
+                & (F.col("b.doc_id") != F.col("i.vec_id")),
             )
             .select(
-                F.col(f"b.{id_col}").alias("vec_id"),
-                F.col(f"i.{id_col}").alias("dup_of"),
-                F.col("b.embedding").alias("emb_b"),
-                F.col("b.norm").alias("norm_b"),
+                F.col("i.vec_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"),
+                F.col("b.embedding").alias("b_embedding"),
+                F.col("b.norm").alias("b_norm"),
             )
-            .dropDuplicates(["vec_id", "dup_of"])  # OR across tables
-            # fetch the index-side vector for the colliding candidates
-            # only; inner join also heals a torn epoch where bucket rows
-            # committed before their vector-store rows (the replayed
-            # epoch re-appends the missing vectors).  Any OTHER missing
-            # vector (store loss/mutation) is silently dropped here —
-            # EmbeddingDedupPipeline.check_consistency / strict=True is
-            # the loud-failure path for that drift.
+            # OR across tables BEFORE the vector join, which then
+            # fetches the index-side vector for the distinct colliding
+            # candidates only.  The inner join also heals a torn epoch
+            # where bucket rows committed before their vector-store rows
+            # (the replayed epoch re-appends the missing vectors).  Any
+            # OTHER missing vector (store loss/mutation) is silently
+            # dropped here — EmbeddingDedupPipeline.check_consistency /
+            # strict=True is the loud-failure path for that drift.
+            .dropDuplicates(["doc_a", "doc_b"])
             .join(
                 index_vectors.select(
-                    F.col(id_col).alias("dup_of"),
-                    F.col("embedding").alias("emb_i"),
-                    F.col("norm").alias("norm_i"),
+                    F.col("vec_id").alias("doc_a"),
+                    F.col("embedding").alias("a_embedding"),
+                    F.col("norm").alias("a_norm"),
                 ),
-                "dup_of",
+                "doc_a",
             )
         )
-        probe_matches = (
-            cand.withColumn("cos_sim", _pair_cos(
-                F.col("emb_b"), F.col("emb_i"),
-                F.col("norm_b"), F.col("norm_i")))
-            .filter(F.col("cos_sim") >= COS_THRESHOLD)
-            .groupBy("vec_id")
-            .agg(
-                F.max_by("dup_of",
-                         F.struct(F.col("cos_sim"), -F.col("dup_of"))
-                         ).alias("dup_of"),
-                F.max("cos_sim").alias("cos_sim"),
-            )
-        )
-
-    # intra-batch pairs: capped group-then-expand per bucket (the
-    # corpus_dedup kernel with (sig -> embedding, est_jaccard -> cosine))
-    grouped = (
-        batch_sk.groupBy("table_id", "bucket")
-        .agg(F.collect_list(
-            F.struct(F.col(id_col).alias("id"), "embedding", "norm")
-        ).alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-
-    def build_pair_arr():
-        ds = F.col("ds")
-        full_pairs = F.flatten(
-            F.transform(
-                ds,
-                lambda x: F.transform(
-                    F.filter(ds, lambda y: y["id"] > x["id"]),
-                    lambda y: F.struct(
-                        x["id"].alias("keeper"),
-                        y["id"].alias("vec_id"),
-                        x["embedding"].alias("emb_a"),
-                        y["embedding"].alias("emb_b"),
-                        x["norm"].alias("norm_a"),
-                        y["norm"].alias("norm_b"),
-                    ),
-                ),
-            )
-        )
-        anchor = F.element_at(F.array_sort(ds), 1)
-        anchor_pairs = F.transform(
-            F.filter(ds, lambda y: y["id"] > anchor["id"]),
-            lambda y: F.struct(
-                anchor["id"].alias("keeper"),
-                y["id"].alias("vec_id"),
-                anchor["embedding"].alias("emb_a"),
-                y["embedding"].alias("emb_b"),
-                anchor["norm"].alias("norm_a"),
-                y["norm"].alias("norm_b"),
-            ),
-        )
-        return F.when(F.size(ds) <= INTRA_BUCKET_CAP, full_pairs).otherwise(
-            anchor_pairs)
-
-    # cap in the key: the built tree freezes the cap value (see
-    # corpus_dedup's twin comment)
-    pair_arr = per_context(("embedding_dedup.pair_arr", INTRA_BUCKET_CAP),
-                           build_pair_arr)
-    intra = (
-        grouped.select(F.explode_outer(pair_arr).alias("p"))
-        .select("p.keeper", "p.vec_id", "p.emb_a", "p.emb_b",
-                "p.norm_a", "p.norm_b")
-        .dropDuplicates(["keeper", "vec_id"])
-        .withColumn("cos_sim", _pair_cos(
-            F.col("emb_a"), F.col("emb_b"), F.col("norm_a"), F.col("norm_b")))
-        .filter(F.col("cos_sim") >= COS_THRESHOLD)
-    )
-    intra_matches = intra.groupBy("vec_id").agg(
-        F.min("keeper").alias("dup_of"),
-        F.max("cos_sim").alias("cos_sim"),
-    )
-
-    all_ids = batch_sk.select(id_col).distinct().withColumnRenamed(
-        id_col, "vec_id")
-    matches = (probe_matches.unionByName(intra_matches)
-               if probe_matches is not None else intra_matches)
-    best = matches.groupBy("vec_id").agg(
-        F.max_by("dup_of", F.struct(F.col("cos_sim"), -F.col("dup_of"))
-                 ).alias("dup_of"),
-        F.max("cos_sim").alias("cos_sim"),
-    )
-
-    # chains terminate exactly as in corpus_dedup: intra targets strictly
-    # decrease, probe targets are already-accepted index vectors
-    return all_ids.join(pointer_jump(best, "vec_id"), "vec_id", "left")
+    cos = _pair_cos_arrow(F.col("a_embedding"), F.col("b_embedding"),
+                          F.col("a_norm"), F.col("b_norm"))
+    return _resolve_batch(
+        rows, ["table_id", "bucket"], ["embedding", "norm"], probe,
+        "cos_sim", cos, COS_THRESHOLD, "embedding_ingest",
+    ).withColumnRenamed("doc_id", "vec_id")
 
 
 class EmbeddingDedupPipeline(FormatStampedIndexIngest):
     """foreachBatch-driven incremental embedding dedup with an on-disk
-    bucket index.  Index/sink/compaction/start machinery lives in
-    _ingest_base; this class owns only the vector sketch + batch
-    resolution.
+    bucket index.  Resolve/index/sink/compaction/start machinery lives
+    in _ingest_base; this class owns only the vector sketch, its probe
+    join and the vectors-once store.
 
     It persists ids-only bucket rows plus a vectors-once store at
     ``vectors_dir``.  The format stamp carries the ``+norm`` layout
@@ -358,7 +269,7 @@ class EmbeddingDedupPipeline(FormatStampedIndexIngest):
             accepted_sk.dropDuplicates(["vec_id"])
             .select("vec_id", "embedding", "norm"),
             self.vectors_dir, "vectors", epoch_id)
-        compacted = self._maybe_compact_index(spark)
+        compacted = self._maybe_compact_dir(spark, self.index_dir)
         compacted |= self._maybe_compact_dir(spark, self.vectors_dir)
         # strict mode pays the full ids-only scan only when a compaction
         # actually replaced a directory this batch — the operation the

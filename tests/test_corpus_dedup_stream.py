@@ -146,24 +146,54 @@ def test_stale_index_format_is_refused(spark, tmp_path):
         pipe.process_batch(spark, docs2)
 
 
-def test_degenerate_bucket_uses_anchor_fallback(spark, monkeypatch):
-    """A batch where one band bucket exceeds INTRA_BUCKET_CAP must (a)
-    still mark every duplicate (anchor matching, not bucket dropping —
-    an ingest dedup must not let dups through) and (b) keep lowest-id
-    as the keeper."""
-    from debezium_nats_cdc_spark.streaming import corpus_dedup as cd
+def _corpus_degenerate_batch(spark):
     from debezium_nats_cdc_spark.operators.dedup import minhash_signatures
+    from debezium_nats_cdc_spark.streaming import corpus_dedup as cd
 
-    monkeypatch.setattr(cd, "INTRA_BUCKET_CAP", 5)
     boiler = " ".join(f"tok{i}" for i in range(30))
     rows = [(i, boiler) for i in range(10)]                   # 10 identical
     rows += [(100, " ".join(f"x{i}" for i in range(30)))]     # 1 unique
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     bands = cd._bands(minhash_signatures(docs))
-    out = {r["doc_id"]: r["dup_of"]
-           for r in cd.dedup_batch_against_index(bands, None).collect()}
+    return [(r["doc_id"], r["dup_of"])
+            for r in cd.dedup_batch_against_index(bands, None).collect()]
+
+
+def _embedding_degenerate_batch(spark):
+    from debezium_nats_cdc_spark.streaming import embedding_dedup as ed
+
+    same = [1.0] + [0.0] * 63
+    rows = [(i, same) for i in range(10)]                     # 10 identical
+    rows += [(100, [0.0] * 63 + [1.0])]                       # 1 distinct
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return [(r["vec_id"], r["dup_of"]) for r in
+            ed.dedup_batch_against_index(ed._sketch(vecs), None,
+                                         None).collect()]
+
+
+@pytest.mark.parametrize("batch, op", [
+    (_corpus_degenerate_batch, "corpus_ingest"),
+    (_embedding_degenerate_batch, "embedding_ingest"),
+], ids=["corpus", "embedding"])
+def test_degenerate_bucket_uses_anchor_fallback(spark, monkeypatch, batch, op):
+    """A batch where one bucket per band/table exceeds dedup.BUCKET_CAP
+    must (a) still mark every duplicate (anchor matching, not bucket
+    dropping — an ingest dedup must not let dups through), (b) keep
+    lowest-id as the keeper and (c) report the fallback through
+    bucket_drop_stats under the ingest's op name."""
+    from debezium_nats_cdc_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "BUCKET_CAP", 5)
+    out = dict(batch(spark))
     assert out[0] is None and out[100] is None
     assert all(out[i] == 0 for i in range(1, 10))
+    # 4 bands/tables, each with one 10-member bucket over the cap (9
+    # anchor pairs recovered, C(10,2) - 9 = 36 skipped) and the distinct
+    # item alone in another bucket
+    assert dedup.bucket_drop_stats(op) == {
+        "capped_buckets": 4, "recovered_pairs": 36,
+        "skipped_pairs": 144, "total_buckets": 8,
+    }
 
 
 def test_anchor_probe_match_chains_bucket_mates(spark, monkeypatch):
@@ -172,9 +202,10 @@ def test_anchor_probe_match_chains_bucket_mates(spark, monkeypatch):
     quarantined — chained to the anchor's index match — not silently
     accepted (the recall hole an earlier left-anti on keeper opened)."""
     from debezium_nats_cdc_spark.streaming import corpus_dedup as cd
+    from debezium_nats_cdc_spark.operators import dedup
     from debezium_nats_cdc_spark.operators.dedup import minhash_signatures
 
-    monkeypatch.setattr(cd, "INTRA_BUCKET_CAP", 5)
+    monkeypatch.setattr(dedup, "BUCKET_CAP", 5)
     boiler = " ".join(f"tok{i}" for i in range(30))
 
     def bands_of(rows):

@@ -36,9 +36,6 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-_paths = [a for a in sys.argv[1:] if not a.startswith("--")]
-SF_DIR = _paths[0] if _paths else "/root/testdata/sf0.001"
-
 # Queries allowed to contain a nested-loop/cartesian join, with why.
 # Every entry was verified by reading the plan: the nested-loop side is
 # either a broadcast of a bounded-small frame (centroids, a 1-row scalar
@@ -235,6 +232,9 @@ def write_markdown(rows, violations, path: str) -> None:
 def main() -> int:
     from pyspark.sql import SparkSession
 
+    paths = [a for a in sys.argv[1:] if not a.startswith("--")]
+    sf_dir = paths[0] if paths else "/root/testdata/sf0.001"
+
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("plan-audit")
@@ -244,21 +244,21 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    rows, violations = run_audit(spark, SF_DIR)
+    rows, violations = run_audit(spark, sf_dir)
     ok = not violations
 
     if "--write-md" in sys.argv[1:]:
         write_markdown(rows, violations, "PLANS.md")
         write_lock(rows)
         print("wrote PLANS.md + plans.lock.json")
-    elif SF_DIR.rstrip("/").endswith("sf0.001"):
+    elif sf_dir.rstrip("/").endswith("sf0.001"):
         for d in check_lock(rows):
             ok = False
             violations.append(d)
     else:
         # the lock records sf0.001 plans; statistics-driven choices
         # (cost-model broadcasts) legitimately differ at other SFs
-        print(f"lock check skipped: {SF_DIR} is not the locked sf0.001")
+        print(f"lock check skipped: {sf_dir} is not the locked sf0.001")
 
     if not rows:  # e.g. bad sf_dir: every query failed analysis
         for v in violations:

@@ -32,11 +32,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-if len(sys.argv) == 2:
-    sys.exit("usage: scale_probe.py [small_sf_dir big_sf_dir] — pass "
-             "BOTH dirs or neither")
-SMALL = sys.argv[1] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
-BIG = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
 DATA_FACTOR = 10.0
 
 
@@ -61,18 +56,24 @@ def time_catalog(spark, sf_dir: str) -> dict[str, float]:
 
 
 def main() -> int:
+    if len(sys.argv) == 2:
+        sys.exit("usage: scale_probe.py [small_sf_dir big_sf_dir] — pass "
+                 "BOTH dirs or neither")
+    small = sys.argv[1] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+    big = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
+
     from debezium_nats_cdc_spark.session import get_session
 
     spark = get_session("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     # generic warm: JVM, parquet footers, Arrow workers
-    for sf in (SMALL, BIG):
+    for sf in (small, big):
         for t in ("lineitem", "documents", "embeddings", "events"):
             spark.read.parquet(f"{sf}/{t}.parquet").count()
 
-    t_small = time_catalog(spark, SMALL)
-    t_big = time_catalog(spark, BIG)
+    t_small = time_catalog(spark, small)
+    t_big = time_catalog(spark, big)
 
     floor_s = statistics.quantiles(t_small.values(), n=20)[0]  # p5
     floor_b = statistics.quantiles(t_big.values(), n=20)[0]

@@ -42,6 +42,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _EVENTS_SCHEMA = ("event_id bigint, ts timestamp_ntz, user_id bigint, "
                   "event_type string, value double, props string")
 _DOC_SCHEMA = "doc_id long, text string"
+_VEC_SCHEMA = "vec_id long, embedding array<float>"
 
 _WORDS = ("the spark batch stream row column key value join sort merge "
           "filter table scan hash agg window group order data small big "
@@ -124,7 +125,6 @@ def probe(spark, volumes=(8_000, 32_000)) -> list[dict]:
     from debezium_nats_cdc_spark.streaming.funnel_monitor import FunnelMonitor
     from debezium_nats_cdc_spark.streaming.tfidf_monitor import TfidfMonitor
     from debezium_nats_cdc_spark.streaming.topk_monitor import TopKMonitor
-    from tests.test_embedding_dedup_stream import VEC_SCHEMA
 
     out = []
 
@@ -191,14 +191,13 @@ def probe(spark, volumes=(8_000, 32_000)) -> list[dict]:
             lambda m: m.index_dir)
         run("embedding_dedup", vol // 20,
             lambda root, rng: EmbeddingDedupPipeline(os.path.join(root, "m")),
-            lambda mon, rng, n: _feed_vecs(spark, mon, rng, n, VEC_SCHEMA),
+            lambda mon, rng, n: _feed_vecs(spark, mon, rng, n),
             lambda m: m.index_dir)
         run("topk", vol // 20,
             lambda root, rng: TopKMonitor(
                 os.path.join(root, "m"),
-                spark.createDataFrame(gen_vecs(rng, 8), VEC_SCHEMA), k=5),
-            lambda mon, rng, n: _feed_vecs(spark, mon, rng, n, VEC_SCHEMA,
-                                           id_base=1000),
+                spark.createDataFrame(gen_vecs(rng, 8), _VEC_SCHEMA), k=5),
+            lambda mon, rng, n: _feed_vecs(spark, mon, rng, n, id_base=1000),
             lambda m: m.state_dir)
     return out
 
@@ -214,14 +213,14 @@ def _feed_docs(spark, mon, rng, n, batches=4):
                               epoch_id=b)
 
 
-def _feed_vecs(spark, mon, rng, n, schema, batches=4, id_base=0):
+def _feed_vecs(spark, mon, rng, n, batches=4, id_base=0):
     rows = [(i + id_base, v) for i, v in gen_vecs(rng, n)]
     per = max(1, len(rows) // batches)
     for b in range(batches):
         chunk = (rows[b * per:(b + 1) * per] if b < batches - 1
                  else rows[(batches - 1) * per:])
         if chunk:
-            mon.process_batch(spark, spark.createDataFrame(chunk, schema),
+            mon.process_batch(spark, spark.createDataFrame(chunk, _VEC_SCHEMA),
                               epoch_id=b)
 
 
