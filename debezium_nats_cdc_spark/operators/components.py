@@ -219,8 +219,7 @@ def _cluster_oracle() -> str:
 )
 def dedup_cluster_assign_delta(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    return cluster_assignment(
-        spark, _jaccard_edges(spark, sf_dir).select("doc_a", "doc_b"))
+    return cluster_assignment(spark, _jaccard_edges(spark, sf_dir))
 
 
 def cluster_assignment(spark: SparkSession, pairs: DataFrame,

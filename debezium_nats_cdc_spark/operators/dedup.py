@@ -77,19 +77,6 @@ BUCKET_CAP = 1000
 _H2_MASK = (1 << 40) - 1  # keep h1 + 15*h2m < 2^61: no overflow either engine
 
 
-def _h1_h2m_cols(shingle_col: str = "g"):
-    """The (h1, h2m) double-hash column expressions over one md5 of the
-    shingle — the SINGLE definition shared by minhash_signatures.build
-    and _hashed_postings, so the cached-postings path can never silently
-    diverge from the direct path (both feed the same oracles)."""
-    m = F.md5(shingle_col)
-    return (
-        F.conv(F.substring(m, 1, 15), 16, 10).cast("bigint").alias("h1"),
-        F.conv(F.substring(m, 17, 15), 16, 10).cast("bigint")
-        .bitwiseAND(F.lit(_H2_MASK)).alias("h2m"),
-    )
-
-
 # Last (Observation, fallback-metrics DataFrame) per capping operator,
 # so cap-degraded recall is measurable instead of silent: on a
 # boilerplate-heavy corpus the anchor fallback still finds every
@@ -339,8 +326,7 @@ def doc_shingles(docs: DataFrame, id_col: str = "doc_id",
 
 
 def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       hashed: DataFrame | None = None) -> DataFrame:
+                       text_col: str = "text") -> DataFrame:
     """K minhash values per doc via md5 double-hashing (Kirsch-Mitzenmacher).
 
     One md5 per posting yields two integers (h1: 60 bits, h2m: 40 bits,
@@ -361,8 +347,13 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     from ..speccache import per_context
 
     def build():
-        h1, h2m = _h1_h2m_cols("g")
-        hash_cols = [F.col(id_col), h1, h2m]
+        m = F.md5("g")
+        hash_cols = [
+            F.col(id_col),
+            F.conv(F.substring(m, 1, 15), 16, 10).cast("bigint").alias("h1"),
+            F.conv(F.substring(m, 17, 15), 16, 10).cast("bigint")
+            .bitwiseAND(F.lit(_H2_MASK)).alias("h2m"),
+        ]
         agg_exprs = [
             F.min(F.col("h1") + F.lit(i) * F.col("h2m")).alias(f"h{i}")
             for i in range(N_HASHES)
@@ -375,18 +366,14 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
 
     hash_cols, agg_exprs, out_cols = per_context(
         ("minhash_signatures", id_col, text_col), build)
-    if hashed is not None:  # pre-hashed (id, h1, h2m) postings, e.g.
-        postings = hashed   # the _hashed_postings cross-query cache
-    else:
-        postings = doc_shingles(docs, id_col, text_col).select(
-            F.col(id_col), F.explode_outer("gs").alias("g")
-        ).select(*hash_cols)
+    postings = doc_shingles(docs, id_col, text_col).select(
+        F.col(id_col), F.explode_outer("gs").alias("g")
+    ).select(*hash_cols)
     return postings.groupBy(id_col).agg(*agg_exprs).select(*out_cols)
 
 
 def minhash_candidates(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       hashed: DataFrame | None = None) -> DataFrame:
+                       text_col: str = "text") -> DataFrame:
     """LSH banding: docs sharing any band bucket become candidate pairs.
 
     Shuffle cost: docs × B band rows, keyed by (band_id, band_hash).
@@ -413,7 +400,7 @@ def minhash_candidates(docs: DataFrame, id_col: str = "doc_id",
         )
         return md5_60(key)
 
-    sig = minhash_signatures(docs, id_col, text_col, hashed=hashed)
+    sig = minhash_signatures(docs, id_col, text_col)
     bands = sig.select(
         id_col,
         "sig",
@@ -517,7 +504,7 @@ def _minhash_oracle() -> str:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return (
-        minhash_candidates(d, hashed=_hashed_postings(spark, sf_dir))
+        minhash_candidates(d)
         .filter(F.col("est_jaccard") >= 0.5)
         .orderBy("doc_a", "doc_b")
     )
@@ -594,100 +581,20 @@ def jaccard_pair_counts(gsets: DataFrame, op: str = "jaccard") -> DataFrame:
     )
 
 
-
-_PAIR_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-_POSTINGS_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
-def _table_signature(sf_dir: str, name: str = "documents") -> str:
-    """Cheap content fingerprint of a testdata table: mtime+size of the
-    parquet file, or newest-entry mtime + entry count for a directory.
-    Detects a rewrite WITHIN one session so the pair cache can't serve
-    pairs computed from superseded data."""
-    import os
-
-    p = os.path.join(sf_dir.rstrip("/"), f"{name}.parquet")
-    try:
-        if os.path.isdir(p):
-            entries = sorted(os.listdir(p))
-            newest = max(
-                (os.stat(os.path.join(p, f)).st_mtime_ns for f in entries),
-                default=0,
-            )
-            return f"dir:{newest}:{len(entries)}"
-        st = os.stat(p)
-        return f"file:{st.st_mtime_ns}:{st.st_size}"
-    except FileNotFoundError:
-        return "missing"
-
-
-def clear_pair_cache() -> None:
-    """Drop every cached pair/posting set (test/ops hook)."""
-    _PAIR_CACHE.clear()
-    _POSTINGS_CACHE.clear()
-
-
-def _hashed_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-hashed shingle postings (doc_id, h1, h2m), localCheckpoint-
-    cached per (application, sf_dir) with the same content-signature
-    guard as _jaccard_edges.
-
-    dedup_minhash_lsh and dedup_simhash share the identical scan →
-    tokenize → shingle → explode → md5 prefix (minhash's h1 IS
-    md5_60(g), simhash's posting hash): caching the ~0.6 s/warm-run
-    materialization pays once instead of twice per session, and the
-    cached rows are three BIGINTs per posting — far narrower than the
-    shingle strings they replace."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sig = _table_signature(sf_dir)
-    hit = _POSTINGS_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    d = load_table(spark, sf_dir, "documents")
-    df = (
-        doc_shingles(d)
-        .select(F.col("doc_id"), F.explode_outer("gs").alias("g"))
-        .select("doc_id", *_h1_h2m_cols("g"))
-        .localCheckpoint(eager=False)
-    )
-    _POSTINGS_CACHE[key] = (sig, df)
-    return df
-
-
 def _jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Thresholded word-3-gram Jaccard pair set, localCheckpoint-cached
-    per (application, sf_dir).
-
-    Both ``dedup_ngram_jaccard`` and ``dedup_cluster_assign_delta``
-    consume this exact pair set; without the cache the cluster query
-    re-runs the ~3 s shingle→postings→pair pipeline before its CC rounds
-    even start.
-    The checkpoint is lazy (``eager=False``): whichever query runs first
-    materializes it, the other reuses the materialized RDD.  Keyed by
-    applicationId (a restarted session can never see another JVM's
-    checkpoint) and guarded by the table's content signature — a
-    documents.parquet rewritten mid-session invalidates the entry
-    instead of serving stale pairs, and superseded entries are evicted
-    rather than accumulated."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sig = _table_signature(sf_dir)
-    hit = _PAIR_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
+    """Thresholded word-3-gram Jaccard pair set (doc_a, doc_b, jaccard)
+    — the edge set of both ``dedup_ngram_jaccard`` and
+    ``dedup_cluster_assign_delta``.  Each query builds it inside its own
+    plan; the cluster query's ``cluster_assignment`` checkpoints it
+    eagerly before its size gate, so it is computed once per query."""
     d = load_table(spark, sf_dir, "documents")
     pairs = jaccard_pair_counts(doc_shingles(d).filter(F.col("n_toks") >= 3))
     jac = F.col("inter").cast("double") / F.col("uni")
-    df = (
-        pairs.filter(jac >= 0.2)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(jac, 4).cast("decimal(10,4)").cast("double").alias("jaccard"),
-        )
-        .localCheckpoint(eager=False)
+    return pairs.filter(jac >= 0.2).select(
+        "doc_a",
+        "doc_b",
+        F.round(jac, 4).cast("decimal(10,4)").cast("double").alias("jaccard"),
     )
-    _PAIR_CACHE[key] = (sig, df)
-    return df
 
 
 @register(
@@ -723,8 +630,7 @@ _CHUNK_BITS = SIMHASH_BITS // 4
 
 
 def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       hashed: DataFrame | None = None) -> DataFrame:
+                       text_col: str = "text") -> DataFrame:
     """60-bit SimHash signature per document (md5-derived shingle hashes).
 
     For each bit position, sum ±1 votes weighted by each shingle-hash's
@@ -756,15 +662,12 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
             out[i] = sig
         return pd.Series(out)
 
-    if hashed is not None:  # shared cache: minhash's h1 IS md5_60(g)
-        postings = hashed.select(F.col(id_col), F.col("h1").alias("h"))
-    else:
-        postings = doc_shingles(docs, id_col, text_col).select(
-            F.col(id_col), F.explode_outer("gs").alias("g")
-        ).select(
-            F.col(id_col),
-            md5_60("g").alias("h"),
-        )
+    postings = doc_shingles(docs, id_col, text_col).select(
+        F.col(id_col), F.explode_outer("gs").alias("g")
+    ).select(
+        F.col(id_col),
+        md5_60("g").alias("h"),
+    )
     return (
         postings.groupBy(id_col)
         .agg(F.collect_list("h").alias("hs"))
@@ -830,7 +733,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — including its Arrow bit-vote stage — runs once, not once per
     # join side.  Pairs expand inside each chunk bucket.
     d = load_table(spark, sf_dir, "documents")
-    sigs = simhash_signatures(d, hashed=_hashed_postings(spark, sf_dir))
+    sigs = simhash_signatures(d)
     chunks = sigs.select(
         "doc_id",
         "sig",

@@ -15,9 +15,12 @@ load-bearing under at-least-once delivery — a stale duplicate redelivered
 in a LATER micro-batch must not overwrite newer state (found by the
 model-based property test, tests/test_materialize_property.py).
 
-Without Delta/Iceberg MERGE in this container, the physical upsert is an
-overwrite via staging-dir swap (streaming/pipeline._swap_write);
-re-processing any batch converges to the same state (F5 contract).
+Without Delta/Iceberg MERGE, the streaming state table is an LSM: each
+micro-batch appends its reduced rows (streaming/pipeline._sink_state),
+and past a file-count threshold the table is compacted to one row per
+key and rewritten through ``StateBackend.swap_write``
+(pipeline._maybe_compact); re-processing any batch converges to the
+same state (F5 contract).
 """
 
 from __future__ import annotations

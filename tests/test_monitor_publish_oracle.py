@@ -23,7 +23,6 @@ join_asof_last_click class) cannot cancel out here.
 
 from __future__ import annotations
 
-import math
 import sys
 from pathlib import Path
 
@@ -33,29 +32,11 @@ import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(REPO / "tools"))
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
-
-def _norm_cell(v):
-    # mirror tools/check_strict.py norm_cell: raw str(), worst case
-    if v is None or v is pd.NaT:
-        return "NULL"
-    if isinstance(v, float) and math.isnan(v):
-        return "NULL"
-    if isinstance(v, (list, tuple)):
-        return "ARRAY[" + ",".join(str(x) for x in v) + "]"
-    return str(v)
-
-
-def _canon(df: pd.DataFrame) -> list[str]:
-    df = df[sorted(df.columns)]
-    return sorted(
-        "|".join(_norm_cell(v) for v in row)
-        for row in df.itertuples(index=False, name=None)
-    )
+from check_strict import TABLES, canon  # noqa: E402
 
 
 def _oracle(name: str) -> pd.DataFrame:
@@ -115,7 +96,7 @@ def test_published_table_matches_duckdb_oracle(spark, tmp_path, which):
     assert sorted(published.columns) == sorted(expected.columns), (
         f"{which}: published schema {sorted(published.columns)} != "
         f"oracle {sorted(expected.columns)}")
-    got, want = _canon(published), _canon(expected)
+    got, want = canon(published), canon(expected)
     assert got == want, (
         f"{which}: published table diverges from the DuckDB oracle "
         f"({len(got)} vs {len(want)} rows; first deltas: "

@@ -129,3 +129,41 @@ def test_required_field_violation_lands_in_dlq(spark):
     garbage = events.withColumn("payload", F.lit("{not json"))
     _, invalid = reg.validate_events(garbage, "EmployeeHired")
     assert "unparseable_payload" in invalid.collect()[0]["contract_violation"]
+
+
+def test_dtype_conflict_falls_back_to_per_subject_parse(spark):
+    """Two contracts declaring one required field at different dtypes
+    make the merged single parse ambiguous: ``contract_check`` falls back
+    to ``violation_expr``'s per-subject ``_subject_violation`` form, with
+    the same reason strings and version stamps."""
+    from debezium_nats_cdc_spark.operators.validate import with_validation
+
+    reg = SchemaRegistry()
+    reg.register("A", [FieldSpec("x", "long", True)])
+    reg.register("B", [FieldSpec("x", "string", True)])
+    assert reg._required_union_schema() is None
+    _, _, helpers = reg.contract_check(spark.range(0))
+    assert helpers == []  # the general form stamps no helper columns
+
+    cases = [
+        ("A", '{"x": 1}', None),
+        ("A", "{}", "schema:A:v1:x"),
+        ("A", '{"x": "abc"}', "schema:A:v1:x"),
+        ("B", '{"x": "s"}', None),
+        ("B", '{"y": 1}', "schema:B:v1:x"),
+        ("C", "{}", None),
+        ("A", "{not json", "payload_not_json"),
+    ]
+    events = spark.createDataFrame(
+        [(str(i), t, "2024-01-01T00:00:00Z", "agg", p)
+         for i, (t, p, _) in enumerate(cases)],
+        "eventId string, eventType string, timestamp string, "
+        "aggregateId string, payload string",
+    )
+    got = {
+        int(r["eventId"]): (r["invalid_reason"], r["schema_version"])
+        for r in with_validation(events, reg).collect()
+    }
+    for i, (t, _, want) in enumerate(cases):
+        assert got[i][0] == want, (cases[i], got[i])
+        assert got[i][1] == (None if t == "C" else 1), (cases[i], got[i])

@@ -30,9 +30,6 @@ import pandas as pd
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
-ONLY = [a for a in sys.argv[1:] if "/" not in a]
-
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -63,6 +60,12 @@ def canon(df: pd.DataFrame) -> list[str]:
 def main() -> int:
     from pyspark.sql import SparkSession
 
+    argv = sys.argv[1:]
+    # default: the sf0.01 tables beside the checkout (as in verify_all)
+    sf_dir = (argv[0] if argv and "/" in argv[0]
+              else os.path.join(os.path.dirname(REPO), "testdata", "sf0.01"))
+    only = [a for a in argv if "/" not in a]
+
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("check-strict")
@@ -75,16 +78,16 @@ def main() -> int:
 
     con = duckdb.connect()
     for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     ents = catalog.entries()
-    names = [n for n in ents if not ONLY or n in ONLY]
+    names = [n for n in ents if not only or n in only]
     failures = []
     for name in names:
         e = ents[name]
         t0 = time.time()
         try:
-            spark_pd = e.fn(spark, SF_DIR).toPandas()
+            spark_pd = e.fn(spark, sf_dir).toPandas()
         except Exception as ex:
             failures.append(name)
             print(f"FAIL {name}: spark error: {ex}")

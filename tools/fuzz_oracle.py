@@ -390,12 +390,10 @@ def run_seed(spark, seed: int, only: list[str] | None = None,
     import duckdb
 
     from debezium_nats_cdc_spark import catalog
-    from debezium_nats_cdc_spark.operators.dedup import clear_pair_cache
 
     failures: list[str] = []
     with tempfile.TemporaryDirectory(prefix=f"fuzz{seed}_") as tmp:
         gen_tables(seed, tmp, empty_facts=empty_facts, ns_events=ns_events)
-        clear_pair_cache()  # never reuse another dir's cached pairs
         con = duckdb.connect()
         for t in TABLES:
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
@@ -424,7 +422,6 @@ def run_seed(spark, seed: int, only: list[str] | None = None,
                       f"oracle-only={diff_w}")
             else:
                 print(f"ok   {name} (seed {seed}): {len(got)} rows")
-        clear_pair_cache()  # drop checkpoints tied to the deleted tmp dir
         con.close()
     return failures
 

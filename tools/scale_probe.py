@@ -16,8 +16,8 @@ Method notes:
     analysis) inflates the small-SF time and so HIDES super-linearity;
     the adjusted ratio subtracts the per-SF floor (5th percentile of
     that column) from both sides before dividing
-  * dedup/jaccard-family queries share a localCheckpoint pair cache —
-    the probe clears it between SFs so no query is subsidized
+  * every query builds its own plan from scratch — no dedup query reuses
+    another query's pairs or postings, so each time is standalone
 
 Writes SCALING.md.  Usage: python tools/scale_probe.py [small_sf big_sf]
 """
@@ -37,17 +37,11 @@ DATA_FACTOR = 10.0
 
 def time_catalog(spark, sf_dir: str) -> dict[str, float]:
     from debezium_nats_cdc_spark import catalog
-    from debezium_nats_cdc_spark.operators.dedup import clear_pair_cache
 
     out: dict[str, float] = {}
     for name, e in catalog.entries().items():
         best = float("inf")
         for _ in range(2):
-            # clear before EVERY run: the dedup family's shared pair/
-            # posting caches otherwise make the second run (and any
-            # query after its cache-mate) nearly free, under-reporting
-            # standalone cost — same accounting rule as bench.py
-            clear_pair_cache()
             t0 = time.time()
             e.fn(spark, sf_dir).collect()
             best = min(best, time.time() - t0)
