@@ -142,10 +142,10 @@ def _scratch_index_dir() -> str:
 def ann_search_after_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean = _clean_embeddings(spark, sf_dir)
     # ONE aggregate answers both gates the lifecycle needs — any clean
-    # rows at all, and any base-slice rows — where two limit-1 probes
+    # rows at all, and any base-slice rows — where two emptiness probes
     # (here + run_lifecycle's base check) each cost their own take-
-    # escalation jobs (r17, guide §1.2).  Equivalence: count == 0 iff
-    # the limit(1).count() it replaces was 0.
+    # escalation jobs (r17, guide §1.2).  Equivalence: n_clean == 0 iff
+    # clean.isEmpty(), the probe it replaces.
     counts = clean.agg(
         F.count(F.lit(1)).alias("n_clean"),
         F.count(F.when(~_is_stream_row(), 1)).alias("n_base")).first()
@@ -180,14 +180,14 @@ def run_lifecycle(spark: SparkSession, clean: DataFrame,
     mutation sequence the catalog query hashes (split out so tests can
     inspect the index dir the query otherwise scratches).
     ``base_nonempty`` lets a caller that already counted the base slice
-    (the catalog query's combined gate aggregate) skip the limit-1
+    (the catalog query's combined gate aggregate) skip the emptiness
     probe; None keeps the self-contained check."""
     from ..streaming.ann_ingest import IvfStreamIngest
 
     is_stream = _is_stream_row()
     base, stream = clean.filter(~is_stream), clean.filter(is_stream)
     if base_nonempty is None:
-        base_nonempty = base.limit(1).count() > 0
+        base_nonempty = not base.isEmpty()
     if not base_nonempty:
         # degenerate corpus (every clean id ≡ 0 mod 3): ivf_build needs
         # rows, so index everything at build time; search is unchanged

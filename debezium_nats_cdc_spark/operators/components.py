@@ -166,8 +166,9 @@ def connected_components_delta(pairs: DataFrame,
             )
             .localCheckpoint(eager=True)
         )
-        # fused probe: one narrow count over the in-memory checkpoint
-        if labels.filter("_changed").limit(1).count() == 0:
+        # fused probe: one narrow emptiness check over the in-memory
+        # checkpoint (isEmpty compiles no fresh LIMIT class per round)
+        if labels.filter("_changed").isEmpty():
             return labels.select("doc_id", "lbl")
     raise RuntimeError(
         f"connected_components_delta did not converge in {max_rounds} "

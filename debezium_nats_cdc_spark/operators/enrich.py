@@ -80,7 +80,7 @@ def org_distance(departments: DataFrame, max_depth: int = 10) -> DataFrame:
                 (F.col("f.distance") + 1).alias("distance"),
             )
         )
-        if nxt.limit(1).count() == 0:
+        if nxt.isEmpty():
             break
         closure = closure.unionByName(nxt)
         frontier = nxt

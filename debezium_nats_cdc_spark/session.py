@@ -4,6 +4,16 @@ Scale stance: these configs are chosen so the same code runs on local[32]
 for tests and on a 1000-executor cluster unchanged — AQE handles runtime
 re-planning (partition coalescing, skew joins, broadcast demotion), and
 shuffle partition count is the only knob that should differ per deployment.
+
+Fixed cost per micro-batch: two confs cut the CPU every epoch of every
+streaming query pays whatever its size:
+  - offset, commit and state-store files are published through the
+    Hadoop FileSystem API (one ``rename(2)`` each), not the FileContext
+    default, which forks a ``chmod`` / ``readlink`` child process per
+    create and rename when the JVM has no native Hadoop library;
+  - the generated-class cache holds the pipeline's whole working set,
+    so a steady-state micro-batch runs Janino (and the JIT behind it)
+    only for the classes whose source really changes.
 """
 
 from __future__ import annotations
@@ -47,7 +57,30 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.streaming.internal.stateStore.partitions": os.environ.get(
         "SPARK_GRAFT_STATE_PARTITIONS", "4"
     ),
+    # Offset, commit and state-store files go through the Hadoop
+    # FileSystem API.  The default FileContext manager, on a JVM without
+    # libhadoop, forks a child process for every create (``chmod``) and
+    # every rename (``FileUtil.readLink``): ~300 forks and 3.3-3.7 CPU s
+    # per five-table drain.  On a POSIX directory a FileSystem rename is
+    # one rename(2), which is atomic, so a reader sees either no file or
+    # the whole file, as Structured Streaming's log protocol requires.
+    # The engine forces this manager on every session it touches
+    # (get_session and apply_runtime_confs), so setting another one on
+    # the session has no effect: an object-store deployment (S3/GCS/ABFS)
+    # edits this constant to a manager whose publish is atomic there.
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
 }
+
+# Entries in Spark's generated-class cache (static conf, default 100, LRU).
+# The five-table pipeline alone generates ~167 distinct classes per drain,
+# so at 100 every steady-state drain re-ran Janino ~190 times and C2
+# re-JITted the fresh classes (8-10 CPU s per drain).  1,000 holds that
+# working set about six times over, leaving room for the catalog and the
+# monitors in the same JVM; the bound keeps Metaspace and the code cache
+# finite in a session that runs arbitrary queries.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
@@ -91,6 +124,8 @@ def get_session(app_name: str = "debezium-nats-cdc-spark",
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         # ContextCleaner frees localCheckpoint blocks, shuffle files, and
         # terminated queries' state-store providers only after a JVM GC;
         # Spark's periodic-GC default is 30 MINUTES, so a long-lived

@@ -23,7 +23,13 @@ from .operators.layout import zorder_write
 def to_store_rows(events: DataFrame) -> DataFrame:
     """Domain envelope -> hr_events storage schema (FIXTURES §2.3).
     Select-list built once per SparkContext (runs per micro-batch in
-    foreachBatch — speccache.py / BENCHLOG r6)."""
+    foreachBatch — speccache.py / BENCHLOG r6).
+
+    ``created_at`` is the one column whose generated code changes every
+    micro-batch: the optimizer folds ``current_timestamp()`` into a long
+    literal that whole-stage codegen inlines into the source, so each
+    table-batch compiles its two store-write classes afresh (everything
+    else in the pipeline hits the generated-class cache)."""
     from .speccache import per_context
 
     cols = per_context("store.to_store_rows", lambda: [

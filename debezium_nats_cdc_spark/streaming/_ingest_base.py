@@ -40,7 +40,7 @@ def pointer_jump(best: DataFrame) -> DataFrame:
         targets = best.filter(F.col("dup_of").isNotNull()).select(
             F.col("doc_id").alias("t_id"), F.col("dup_of").alias("t_dup"))
         jumped = best.join(targets, best["dup_of"] == targets["t_id"], "left")
-        if jumped.filter(F.col("t_dup").isNotNull()).limit(1).count() == 0:
+        if jumped.filter(F.col("t_dup").isNotNull()).isEmpty():
             break
         best = jumped.withColumn(
             "dup_of", F.coalesce("t_dup", F.col("dup_of"))

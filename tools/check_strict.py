@@ -2,8 +2,14 @@
 
 The repo's one correctness gate.  Worst-case choices, each stricter
 than a plain collect-and-compare:
-  - Spark side collected from a VANILLA session (driver owns the session;
-    no tuned confs) via .toPandas()
+  - Spark side collected via .toPandas() from a VANILLA session built
+    as the driver builds it: local[$SPARK_GRAFT_CPUS] (default: the CPUs
+    this process may run on), default confs, so Arrow is off and there
+    are 200 shuffle partitions.  Only ``io.load_table``'s
+    ``apply_runtime_confs`` adds the engine's confs, as at the driver, so
+    partition-count-dependent behaviour (tie order inside a window, AQE
+    coalescing) and the non-Arrow rendering are checked as the driver
+    runs them
   - DuckDB side collected via .df()  (NOT fetchall) — this converts
     DECIMAL -> float64, HUGEINT -> float64, DATE -> datetime64, and lists
     to masked arrays, which is the leading theory for the 25 r1
@@ -66,11 +72,11 @@ def main() -> int:
               else os.path.join(os.path.dirname(REPO), "testdata", "sf0.01"))
     only = [a for a in argv if "/" not in a]
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("check-strict")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "8")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

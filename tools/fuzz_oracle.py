@@ -468,11 +468,12 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    # the driver's session: its width, default confs (see check_strict)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("fuzz-oracle")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "8")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
