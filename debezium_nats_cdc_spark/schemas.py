@@ -160,6 +160,26 @@ ENVELOPE_SCHEMAS: dict[str, T.StructType] = {
     t: envelope_schema(s) for t, s in TABLE_SCHEMAS.items()
 }
 
+
+def union_row_schema(tables: list[str]) -> T.StructType:
+    """Every field of the tables' row schemas, each name once, in first-
+    seen order: the row struct one change-log parse serves all of
+    ``tables`` with (a one-table list gives that table's own schema).
+    A name two tables declare with different types cannot share one
+    parse, so it raises and names the field."""
+    fields: dict[str, T.StructField] = {}
+    for t in tables:
+        for f in TABLE_SCHEMAS[t].fields:
+            seen = fields.setdefault(f.name, f)
+            if seen.dataType != f.dataType:
+                owner = next(o for o in tables
+                             if f.name in TABLE_SCHEMAS[o].fieldNames())
+                raise ValueError(
+                    f"field {f.name!r} is {seen.dataType.simpleString()} in "
+                    f"{owner!r} but {f.dataType.simpleString()} in {t!r}: "
+                    f"one change-log parse cannot serve both tables")
+    return T.StructType(list(fields.values()))
+
 # ------------------------------------------------------ schema history --
 
 # A3: the FileSchemaHistory analog (reference

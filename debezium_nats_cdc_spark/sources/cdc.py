@@ -8,18 +8,37 @@ nothing downstream changes).  Offset persistence = Structured Streaming
 checkpointing (reference: Debezium offset file,
 config/debezium/application.properties:5-6).
 
-Scale note: one directory per source table keeps per-table schemas typed
-end-to-end (no runtime schema sniffing), and lets the scheduler scale
-file listing per table.  maxFilesPerTrigger bounds micro-batch size
-(reference "Batch Processing" backpressure knob, docs/design.md:898).
+Every table's changes share ONE log directory, as every table's subject
+shares the reference's one ``HCM`` JetStream stream (SURVEY.md A5/A6).
+A reader takes a LIST of tables and parses each line once against the
+union of their row schemas (``schemas.union_row_schema``): ``before`` /
+``after`` carry every field any of the tables declares, and a consumer
+narrows them to one table's own struct (``streaming/pipeline.py``).  A
+one-table list parses with exactly that table's envelope schema.  Under
+``spark.sql.json.enablePartialResults`` (on by default) a bad value in a
+field that belongs to ANOTHER table reads NULL alone and is dropped by
+the narrowing, so the union parse of a row equals its own table's parse.
+maxFilesPerTrigger bounds micro-batch size (reference "Batch Processing"
+backpressure knob, docs/design.md:898).
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..schemas import ENVELOPE_SCHEMAS
+from ..schemas import envelope_schema, union_row_schema
 from .fixtures import DB, TOPIC_PREFIX, subject_for
+
+
+def _table_list(tables: str | Sequence[str]) -> list[str]:
+    return [tables] if isinstance(tables, str) else list(tables)
+
+
+def _envelope(tables: list[str]):
+    """The one envelope schema every line of ``tables`` parses with."""
+    return envelope_schema(union_row_schema(tables))
 
 
 def _with_subject_and_time(df: DataFrame) -> DataFrame:
@@ -39,24 +58,32 @@ def _with_subject_and_time(df: DataFrame) -> DataFrame:
     )
 
 
-def read_change_log(spark: SparkSession, path: str, table: str) -> DataFrame:
-    """Batch read of a Debezium-JSON event log for one table."""
-    df = spark.read.schema(ENVELOPE_SCHEMAS[table]).json(path)
-    return _with_subject_and_time(df.filter(F.col("payload.source.table") == table))
+def _of_tables(df: DataFrame, tables: list[str]) -> DataFrame:
+    # a one-element isin is optimized to an equality
+    return _with_subject_and_time(
+        df.filter(F.col("payload.source.table").isin(tables)))
+
+
+def read_change_log(spark: SparkSession, path: str,
+                    tables: str | Sequence[str]) -> DataFrame:
+    """Batch read of a Debezium-JSON event log for one or more tables."""
+    tables = _table_list(tables)
+    return _of_tables(spark.read.schema(_envelope(tables)).json(path), tables)
 
 
 def read_change_stream(
     spark: SparkSession,
     path: str,
-    table: str,
+    tables: str | Sequence[str],
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Streaming read of the same log (readStream; checkpoint at the sink)."""
-    reader = spark.readStream.schema(ENVELOPE_SCHEMAS[table])
+    """Streaming read of the same log (readStream; checkpoint at the sink).
+    Each line is parsed once, whichever of ``tables`` it belongs to."""
+    tables = _table_list(tables)
+    reader = spark.readStream.schema(_envelope(tables))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.json(path)
-    return _with_subject_and_time(df.filter(F.col("payload.source.table") == table))
+    return _of_tables(reader.json(path), tables)
 
 
 # ------------------------------------------------- broker-record source --
@@ -76,19 +103,21 @@ BROKER_RECORD_SCHEMA = (
 )
 
 
-def parse_broker_records(records: DataFrame, table: str) -> DataFrame:
-    """Kafka-record rows -> typed change envelopes for one table.
+def parse_broker_records(records: DataFrame,
+                         tables: str | Sequence[str]) -> DataFrame:
+    """Kafka-record rows -> typed change envelopes for one or more tables.
 
-    Dispatch is broker-native: filter on the per-table TOPIC first (the
-    reference's one-topic-per-table routing) so other tables' records are
-    dropped on a cheap string equality BEFORE any JSON parsing, then
-    deserialize the value bytes against the table's envelope schema.
+    Dispatch is broker-native: filter on the tables' TOPICS first (the
+    reference's one-subject-per-table routing) so other tables' records
+    are dropped on a cheap string compare BEFORE any JSON parsing, then
+    deserialize each value once against the tables' union envelope.
     """
+    tables = _table_list(tables)
     env = (
-        records.filter(F.col("topic") == subject_for(table))
+        records.filter(F.col("topic").isin([subject_for(t) for t in tables]))
         .select(
             F.from_json(
-                F.col("value").cast("string"), ENVELOPE_SCHEMAS[table]
+                F.col("value").cast("string"), _envelope(tables)
             ).alias("e")
         )
         .select("e.*")
@@ -96,21 +125,22 @@ def parse_broker_records(records: DataFrame, table: str) -> DataFrame:
     return _with_subject_and_time(env)
 
 
-def read_broker_log(spark: SparkSession, path: str, table: str) -> DataFrame:
-    """Batch read of a broker-record directory for one table."""
+def read_broker_log(spark: SparkSession, path: str,
+                    tables: str | Sequence[str]) -> DataFrame:
+    """Batch read of a broker-record directory for one or more tables."""
     return parse_broker_records(
-        spark.read.schema(BROKER_RECORD_SCHEMA).parquet(path), table
+        spark.read.schema(BROKER_RECORD_SCHEMA).parquet(path), tables
     )
 
 
 def read_broker_stream(
     spark: SparkSession,
     path: str,
-    table: str,
+    tables: str | Sequence[str],
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming read of a broker-record directory (A1 adapter path)."""
     reader = spark.readStream.schema(BROKER_RECORD_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return parse_broker_records(reader.parquet(path), table)
+    return parse_broker_records(reader.parquet(path), tables)

@@ -97,6 +97,12 @@ class StateBackend(abc.ABC):
         not restart at 0)."""
 
     @abc.abstractmethod
+    def established_checkpoints(self, checkpoints_root: str) -> list[str]:
+        """Names of the established checkpoints (``checkpoint_established``)
+        directly under ``checkpoints_root``, sorted; [] when it does not
+        exist."""
+
+    @abc.abstractmethod
     def clear_markers(self, txn_dir: str, prefixes: list[str]) -> list[str]:
         """Remove commit markers/staging whose token starts with any of
         ``prefixes``.  Returns what was removed (for caller logging)."""
@@ -205,6 +211,14 @@ class LocalFSBackend(StateBackend):
     def checkpoint_established(self, checkpoint_dir: str) -> bool:
         offsets = os.path.join(checkpoint_dir, "offsets")
         return os.path.isdir(offsets) and bool(os.listdir(offsets))
+
+    def established_checkpoints(self, checkpoints_root: str) -> list[str]:
+        try:
+            names = sorted(os.listdir(checkpoints_root))
+        except FileNotFoundError:
+            return []
+        return [n for n in names if self.checkpoint_established(
+            os.path.join(checkpoints_root, n))]
 
     def clear_markers(self, txn_dir: str, prefixes: list[str]) -> list[str]:
         removed: list[str] = []

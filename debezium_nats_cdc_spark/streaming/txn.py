@@ -27,9 +27,9 @@ renames task files one by one), so this is no weaker for readers and
 strictly stronger for replays.
 
 Because every staging write targets its own directory, concurrent
-per-table queries no longer share an output path — the shared
-``_temporary`` corruption that forced the old driver-side sink lock
-cannot occur, and the lock is gone.
+sink threads (and queries over disjoint table sets) never share an
+output path — the shared ``_temporary`` corruption that forced the old
+driver-side sink lock cannot occur, and the lock is gone.
 
 At cluster scale the same protocol is one ``MERGE``/transactional
 append on a table format; the token doubles as the idempotency key.

@@ -77,13 +77,13 @@ def test_audit_trail_written(spark, pipeline_out):
 
 
 def test_checkpoint_restart_is_idempotent(spark, pipeline_out, tmp_path):
-    """Restarting the query over the same log adds nothing (offsets
-    committed; F5 exactly-once contract)."""
+    """Restarting the query over the same log and the same tables adds
+    nothing (offsets committed; F5 exactly-once contract)."""
     before = spark.read.parquet(pipeline_out.events).count()
     log_dir = os.path.join(os.path.dirname(pipeline_out.events), "log")
     run_pipeline_until_done(
         spark, log_dir, os.path.dirname(pipeline_out.events),
-        tables=["employees"],
+        tables=["employees", "salary_changes", "leave_requests"],
     )
     after = spark.read.parquet(pipeline_out.events).count()
     assert after == before
