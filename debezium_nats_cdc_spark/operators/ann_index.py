@@ -49,6 +49,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..functions.vectors import l2_norm
+from ..io import local_frame
 from .similarity import _pair_cos, _with_norm
 
 INDEX_FORMAT = "ivf-cos-decmean-v1"
@@ -631,7 +632,8 @@ def ivf_rebalance(spark: SparkSession, index_dir: str,
             else []
         if len(seeds) < 2:
             continue
-        pair = spark.createDataFrame(
+        pair = local_frame(
+            spark,
             [(x, seeds[0]["embedding"], seeds[0]["_norm"]),
              (next_id, seeds[1]["embedding"], seeds[1]["_norm"])],
             "cell_id int, c_emb array<double>, c_norm double")
@@ -841,8 +843,8 @@ def ivf_delete(spark: SparkSession, index_dir: str, ids,
     if isinstance(ids, DataFrame):
         ids_df = ids.select(F.col(ids.columns[0]).alias("vec_id")).distinct()
     else:
-        ids_df = spark.createDataFrame(
-            [(int(i),) for i in ids], "vec_id bigint").distinct()
+        ids_df = local_frame(
+            spark, [(int(i),) for i in ids], "vec_id bigint").distinct()
     # Type guard (ADVICE r11): a DataFrame of ids whose column type
     # differs from the index's vec_id would make the semi join match
     # nothing and the erasure silently delete 0 rows — the worst failure

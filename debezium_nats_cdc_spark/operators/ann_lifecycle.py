@@ -57,7 +57,7 @@ from pyspark.sql import types as T
 
 from ..catalog import register
 from ..functions.vectors import l2_norm
-from ..io import load_table
+from ..io import load_table, local_frame
 from .ann_index import ivf_build, ivf_compact, ivf_search
 from .similarity import _sql_cos
 
@@ -150,7 +150,7 @@ def ann_search_after_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_clean"),
         F.count(F.when(~_is_stream_row(), 1)).alias("n_base")).first()
     if counts["n_clean"] == 0:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return local_frame(spark, [], _RESULT_SCHEMA)
     index_dir = _scratch_index_dir()
     run_lifecycle(spark, clean, index_dir,
                   base_nonempty=counts["n_base"] > 0)

@@ -57,6 +57,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..index_fs import get_index_fs
+from ..io import local_frame
 from .ann_index import (
     _REBALANCE_MARKER,
     _STREAM_SUBDIR,
@@ -377,8 +378,8 @@ def ivf_search_pq(spark: SparkSession, index_dir: str,
         # over nothing must return empty, not die on parquet schema
         # inference (ivf_delete's zero-row-sentinel shape for the
         # vectors area; code-review r14)
-        codes = spark.createDataFrame(
-            [], "vec_id bigint, codes array<int>, cell_id int")
+        codes = local_frame(
+            spark, [], "vec_id bigint, codes array<int>, cell_id int")
     else:
         codes = (
             spark.read.parquet(codes_dir).join(cells, "cell_id", "left_semi")

@@ -72,6 +72,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..catalog import register
+from ..io import local_frame
 from .dedup import _JACCARD_PAIRS_SQL, _jaccard_edges
 
 # Safety valve only — convergence is detected per round, not assumed.
@@ -253,8 +254,9 @@ def cluster_assignment(spark: SparkSession, pairs: DataFrame,
             StructField("cluster_id", id_type),
             StructField("cluster_size", LongType()),
         ])
-        return spark.createDataFrame(
-            [(x, r, counts[r]) for x, r in sorted(roots.items())], schema)
+        return local_frame(
+            spark, [(x, r, counts[r]) for x, r in sorted(roots.items())],
+            schema)
     labels = connected_components_delta(pruned)
     sizes = labels.groupBy("lbl").agg(F.count("*").alias("cluster_size"))
     return labels.join(sizes, "lbl").select(

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..catalog import register
 from ..functions.hashing import md5_60
-from ..io import load_table
+from ..io import load_table, local_frame
 from .dedup import BUCKET_CAP as _JACCARD_DF_CAP
 from .dedup import doc_shingles, jaccard_pair_counts
 from .sampling import TRAIN_HEX_CUTOFF, is_train_expr
@@ -383,7 +383,7 @@ _MIX_VALUES_SQL = ", ".join(f"('{lang}', {w})" for lang, w in _TARGET_MIX)
 )
 def corpus_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    t = spark.createDataFrame(_TARGET_MIX, "lang string, target_share double")
+    t = local_frame(spark, _TARGET_MIX, "lang string, target_share double")
     c = (d.filter(F.col("lang").isNotNull())
          .groupBy("lang").agg(F.count("*").cast("bigint").alias("n_docs")))
     j = (t.join(c, "lang", "left")

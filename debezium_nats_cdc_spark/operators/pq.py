@@ -58,6 +58,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.vectors import _stack_valid
+from ..io import local_frame
 
 _MAX_ADC_QUERIES = 64  # ADC LUTs are built driver-side per query
 _MAX_TRAIN_SAMPLE = 100_000  # pq_train's driver-side sample cap (rows)
@@ -360,8 +361,8 @@ def pq_search_adc(spark: SparkSession, queries: DataFrame,
         luts.append(lut.tolist())
         qids.append(r["_qid"])
     if not qids:
-        return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, "
+        return local_frame(
+            spark, [], "query_id bigint, neighbor_id bigint, "
                 "adc_dist double, rnk int")
     luts_l = luts  # closure copies (plain lists — picklable)
     kk = model.k

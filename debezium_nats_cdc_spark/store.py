@@ -17,6 +17,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .io import local_frame
 from .operators.layout import zorder_write
 
 
@@ -105,8 +106,9 @@ def _zdim_encode(df: DataFrame, col: str, max_codes: int) -> tuple[DataFrame, st
             "distinct values in this partition — pre-encode it "
             "numerically or drop it from the clustering dims")
     enc = f"_zenc_{col}"
-    codes = spark.createDataFrame(
-        [(v, i) for i, v in enumerate(vals)], f"`{col}` string, `{enc}` bigint")
+    codes = local_frame(
+        spark, [(v, i) for i, v in enumerate(vals)],
+        f"`{col}` string, `{enc}` bigint")
     return df.join(F.broadcast(codes), col, "left"), enc
 
 

@@ -48,6 +48,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DataType
 
+from ..io import local_frame
 from .state_backend import LocalFSBackend, StateBackend
 
 
@@ -89,8 +90,14 @@ class SwapStateMonitor:
     def _state(self, spark: SparkSession) -> DataFrame:
         self.backend.recover(self.state_dir)
         if not self.backend.has_data(self.state_dir):
-            return spark.createDataFrame([], self._STATE_SCHEMA)
-        return spark.read.parquet(self.state_dir)
+            return local_frame(spark, [], self._STATE_SCHEMA)
+        return self._read_state(spark)
+
+    def _read_state(self, spark: SparkSession) -> DataFrame:
+        # schema given: the kernel wrote the file with exactly this
+        # schema, so a read skips parquet's schema-inference job (one
+        # per read, three per fold of the publish queries)
+        return spark.read.schema(self._STATE_SCHEMA).parquet(self.state_dir)
 
     def state_rows(self, spark: SparkSession) -> DataFrame:
         """The accumulated value rows (meta row excluded)."""
@@ -109,7 +116,7 @@ class SwapStateMonitor:
             # BENCHLOG); the missing meta row means exactly the default
             row = None
             if self.backend.has_data(self.state_dir):
-                row = (spark.read.parquet(self.state_dir)
+                row = (self._read_state(spark)
                        .filter(F.col(self._META_COL).isNull())
                        .drop(*self._VALUE_COLS).first())
             self._meta_memo = row.asDict() if row else {"last_epoch": -1}
@@ -138,12 +145,18 @@ class SwapStateMonitor:
         guard reset) goes through."""
         meta = {**self._meta(spark), **meta}
         schema = DataType.fromDDL(self._STATE_SCHEMA)
-        meta_row = spark.createDataFrame(
-            [tuple(meta.get(c) for c in schema.names)], schema)
+        meta_row = local_frame(
+            spark, [tuple(meta.get(c) for c in schema.names)], schema)
+        # The meta row is a LocalRelation (``local_frame``).  Built by
+        # createDataFrame on a Python list it was a pickled Python RDD
+        # whose Python-worker tasks ran on every swap: 1.4-1.6 worker
+        # CPU-s per fold of the monitor_*_publish queries (sf0.1, 4
+        # cores, ``tools/opt_probe.py --jobs``), now 0.
         # repartition(1), NOT coalesce(1): coalescing a union of a
-        # shuffle branch and the meta LocalRelation measured ~4.7 s per
+        # shuffle branch and that pickled meta frame measured ~4.7 s per
         # micro-batch vs ~0.6 s with an explicit 1-partition shuffle —
-        # same single state file either way (BENCHLOG round-12).
+        # same single state file either way (BENCHLOG round-12); not
+        # re-measured over the LocalRelation.
         # No lineage break before the write: every backend stages the
         # new generation to a FRESH path (LocalFS ``.staging`` dir /
         # a new generation dir) before atomically installing it, so the

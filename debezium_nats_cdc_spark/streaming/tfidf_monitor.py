@@ -41,6 +41,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..io import local_frame
 from ..operators.text import _tokens
 from ._monitor_base import SwapStateMonitor
 from .state_backend import StateBackend
@@ -108,7 +109,7 @@ class TfidfMonitor(SwapStateMonitor):
         the drift alarm."""
         self.backend.recover(self.drift_dir)
         if not self.backend.has_data(self.drift_dir):
-            return spark.createDataFrame([], _DRIFT_SCHEMA)
+            return local_frame(spark, [], _DRIFT_SCHEMA)
         return spark.read.parquet(self.drift_dir).orderBy(
             F.desc("lift"), F.asc("term"))
 

@@ -34,6 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..io import local_frame
 from ..operators.similarity import _pair_cos_arrow, _with_norm
 from .state_backend import LocalFSBackend, StateBackend
 
@@ -61,8 +62,9 @@ class TopKMonitor:
     def current(self, spark: SparkSession) -> DataFrame:
         """The standing answer: (query_id, neighbor_id, cos_sim, rnk)."""
         if not self.backend.has_data(self.state_dir):
-            return spark.createDataFrame(
-                [], "query_id long, neighbor_id long, cos_sim double, rnk int")
+            return local_frame(
+                spark, [],
+                "query_id long, neighbor_id long, cos_sim double, rnk int")
         w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"),
                                               F.asc("neighbor_id"))
         return (

@@ -108,26 +108,45 @@ def test_thousand_updates_exactly_once(spark, tmp_path):
 
 
 def test_concurrent_tables_match_sequential(spark, tmp_path):
-    """concurrent=True (production shape: per-table queries share the
-    cluster) must produce the same event store as the sequential run —
-    the shared-sink lock makes simultaneous appends safe."""
-    root = str(tmp_path / "conc")
-    log_dir = os.path.join(root, "log")
+    """The one query over three tables writes, row for row, what three
+    one-table queries on separate roots write between them: the event
+    store (every column but ``created_at``, the write-time stamp), the
+    audit trail and each table's physical state, tombstones included."""
+    from functools import reduce
+
+    from debezium_nats_cdc_spark.streaming.pipeline import (
+        PipelineDirs,
+        start_table_pipeline,
+    )
+
+    tables = ["employees", "salary_changes", "leave_requests"]
+    log_dir = str(tmp_path / "log")
     events = fixtures.snapshot_events() + fixtures.golden_workload()
     fixtures.write_event_log(events, log_dir, events_per_file=5)
-    dirs = run_pipeline_until_done(
-        spark, log_dir, root,
-        tables=["employees", "salary_changes", "leave_requests"],
-        concurrent=True,
-    )
-    ev = spark.read.parquet(dirs.events)
-    counts = {r["event_type"]: r["n"] for r in
-              ev.groupBy("event_type").count().withColumnRenamed("count", "n").collect()}
-    assert counts["EmployeeHired"] == 1
-    assert counts["EmployeeDataUpdated"] == 1
-    assert counts["SalaryAdjusted"] == 1
-    assert counts["LeaveRequested"] == 1
-    emp = read_state(spark, dirs, "employees")
+    one = run_pipeline_until_done(spark, log_dir, str(tmp_path / "one"),
+                                  tables=tables)
+    apart = []
+    for t in tables:
+        dirs = PipelineDirs.under(str(tmp_path / "apart" / t))
+        start_table_pipeline(spark, log_dir, t, dirs).awaitTermination()
+        apart.append(dirs)
+
+    def rows(df, drop=()):
+        return sorted(map(str, df.drop(*drop).collect()))
+
+    def union(paths):
+        return reduce(lambda a, b: a.unionByName(b),
+                      [spark.read.parquet(p) for p in paths])
+
+    for sink, drop in (("events", ["created_at"]), ("audit", [])):
+        want = rows(union([getattr(d, sink) for d in apart]), drop)
+        assert want, sink
+        assert rows(spark.read.parquet(getattr(one, sink)), drop) == want
+    for t, dirs in zip(tables, apart):
+        got, want = (spark.read.parquet(os.path.join(d.state, t))
+                     for d in (one, dirs))
+        assert rows(got) == rows(want), t
+    emp = read_state(spark, one, "employees")
     assert emp.count() == 3  # EMP999 net-deleted, seed remains
 
 

@@ -4,9 +4,10 @@ For each named catalog query: run it against $SPARK_GRAFT_SF_DIR
 (default sf0.1) through the noop sink N times (default 3), print each
 timing plus min/median — and, with --jobs, the DETERMINISTIC job/stage
 counts via the statusTracker job-group trick plus the Janino compile
-count of one more (warm) run (the r16 evidence discipline:
-plan-structure deltas survive this box's ±0.5 s ambient noise where
-wall-clock does not).  Optionally dump
+count of one more (warm) run, and ``py_worker_cpu_s``, the CPU its
+Python workers used over all of the query's runs (the r16 evidence
+discipline: plan-structure deltas survive this box's ±0.5 s ambient
+noise where wall-clock does not).  Optionally dump
 `.explain("formatted")` to plans/<round>/<query>_<tag>.txt so
 before/after plan claims are on disk for the judge.
 
@@ -69,6 +70,33 @@ def count_jobs(spark, fn, group: str) -> tuple[int, int, int]:
     return len(job_ids), n_stages, n_compiles
 
 
+def py_worker_cpu_s() -> float:
+    """CPU seconds (user + system, reaped children included) used so far
+    by the ``python`` processes below this one: the Spark JVM's Python
+    workers and their daemon.  Read from ``/proc`` like perfbench's
+    ``tree_cpu_s``; a plan that runs no Python worker leaves it flat."""
+    parent, stat = {}, {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat", encoding="ascii") as f:
+                head, tail = f.read().rsplit(")", 1)
+        except OSError:  # the process ended meanwhile
+            continue
+        fields = tail.split()
+        parent[int(name)] = int(fields[1])
+        stat[int(name)] = (head.split("(", 1)[1], fields)
+    me, ticks = os.getpid(), 0
+    for pid, (comm, fields) in stat.items():
+        p = parent[pid]
+        while p not in (me, 0) and p in parent:
+            p = parent[p]
+        if p == me and comm.startswith("python"):
+            ticks += sum(int(x) for x in fields[11:15])
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 def _explain_text(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -102,6 +130,7 @@ def main() -> None:
 
     for q in args.queries:
         fn = ents[q].fn
+        py0 = py_worker_cpu_s()
         times = []
         for i in range(args.reps):
             spark.sparkContext.setJobDescription(f"probe:{q}#{i}")
@@ -125,7 +154,9 @@ def main() -> None:
                 .mode("overwrite").save(),
                 f"jobcount:{q}")
             rec.update({"jobs": n_jobs, "stages": n_stages,
-                        "compiles": n_compiles})
+                        "compiles": n_compiles,
+                        "py_worker_cpu_s": round(py_worker_cpu_s() - py0,
+                                                 2)})
         print(json.dumps(rec), flush=True)
 
 
