@@ -723,7 +723,7 @@ def ivf_compact(spark: SparkSession, index_dir: str) -> dict:
     per touched cell per micro-batch, so stream-area files accumulate
     ~n_cells per batch and probe latency grows with them (measured
     1.6 s -> 2.3 s over 10 epochs / 160 files — BENCHLOG round-12,
-    `tools/ann_ingest_bench.py`).  An ``ivf_build`` rebuild bounds this
+    "streaming ANN ingest under load").  An ``ivf_build`` rebuild bounds this
     but re-clusters the whole corpus; this op only REWRITES: base ∪
     stream lands as one file set per cell under the UNCHANGED
     centroids, assignments verbatim (nothing numeric is recomputed —

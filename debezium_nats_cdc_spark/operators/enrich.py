@@ -38,21 +38,6 @@ def enrich_promotion(events: DataFrame, positions: DataFrame) -> DataFrame:
     )
 
 
-def enrich_employee_context(events: DataFrame, departments: DataFrame,
-                            aggregate_join_col: str = "aggregateId") -> DataFrame:
-    """Attach department name via broadcast join on the payload's
-    departmentId (seq-diagram Flow 1 step 5: 'Query dept/position names')."""
-    dept_id = F.get_json_object("payload", "$.departmentId").cast("long")
-    dims = F.broadcast(
-        departments.select(F.col("id").alias("_dept_id"), F.col("name").alias("departmentName"))
-    )
-    return (
-        events.withColumn("_dept", dept_id)
-        .join(dims, F.col("_dept") == F.col("_dept_id"), "left")
-        .drop("_dept_id", "_dept")
-    )
-
-
 def org_distance(departments: DataFrame, max_depth: int = 10) -> DataFrame:
     """(dept, ancestor, distance) closure over parent_department_id
     (docs/system-design.md:226 'Calculate org distance').

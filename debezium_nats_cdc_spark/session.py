@@ -48,8 +48,8 @@ RUNTIME_CONFS: dict[str, str] = {
     # checkpoint at first start), decoupled from batch shuffle parallelism.
     # The HDFS-backed store pays a fixed per-partition commit cost every
     # micro-batch — at 32 partitions that was 14 s per 500k-event batch vs
-    # 0.4 s at 8 (measured; see streaming/bench.py).  Default is 4: the
-    # r6 interleaved A/B (tools/ab_streaming.py, BENCHLOG) measured
+    # 0.4 s at 8 (measured with bench.py's streaming micro-bench).
+    # Default is 4: the r6 interleaved A/B (BENCHLOG round 6) measured
     # median micro-batch P50 1.256 s / P95 1.588 s at 4 vs 1.388/1.645
     # at 8 — the commit tail is pure per-partition overhead at
     # single-node key volumes.  A real cluster sizes this ≈ total cores
@@ -132,10 +132,7 @@ def get_session(app_name: str = "debezium-nats-cdc-spark",
         # session accumulates until streaming throughput collapses
         # (measured here: 30k -> 5k events/s over two bench runs; with a
         # 30 s interval the same pipeline holds 75-100k events/s flat).
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "30s"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "30s")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -164,6 +164,18 @@ def negative_and_positive_rule_cases() -> list[dict]:
     ]
 
 
+def salary_updates(n: int) -> list[dict]:
+    """n deterministic employee salary-update envelopes (the reference's
+    1,000-updates exactness scenario, docs/system-design.md:548-552,
+    scaled up)."""
+    base = SEED_EMPLOYEES[0]
+    return [
+        envelope("employees", "u", {**base, "salary": 90000.0 + i},
+                 {**base, "salary": 90001.0 + i}, BASE_TS_MS + i)
+        for i in range(n)
+    ]
+
+
 def duplicate_delivery(events: list[dict], dup_indexes: list[int]) -> list[dict]:
     """Simulate at-least-once redelivery: re-emit selected events verbatim
     (same content => same derived event id => must dedup downstream,

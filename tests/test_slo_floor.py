@@ -9,7 +9,7 @@ the floor a red pytest instead.
 It checks the most recent RECORDED driver artifact (BENCH_r*.json), not
 a fresh run: the artifact is what the judge grades, and a fresh run here
 would double the suite's wall time.  Ambient-load caveat: the recorded
-ev/s is already best-of-2 full-volume runs (streaming/bench.py), so a
+ev/s is already best-of-2 full-volume runs (bench.py), so a
 floor of 2x SLO leaves 4x headroom below the observed steady state
 (80k+ ev/s r4/r6) — a trip means a real regression, not scheduler noise.
 

@@ -93,12 +93,10 @@ def test_thousand_updates_exactly_once(spark, tmp_path):
     """The reference's exactness scenario (docs/system-design.md:548-552):
     1,000 salary updates + 50 duplicated deliveries => exactly 1,000
     domain events downstream."""
-    from debezium_nats_cdc_spark.streaming.bench import _synthetic_updates
-
     root = str(tmp_path)
     log_dir = os.path.join(root, "log")
     evs = fixtures.duplicate_delivery(
-        _synthetic_updates(1000), dup_indexes=list(range(0, 100, 2))
+        fixtures.salary_updates(1000), dup_indexes=list(range(0, 100, 2))
     )
     fixtures.write_event_log(evs, log_dir, events_per_file=200)
     dirs = run_pipeline_until_done(spark, log_dir, root, tables=["employees"])

@@ -9,7 +9,6 @@ import os
 
 from debezium_nats_cdc_spark.sources import fixtures
 from debezium_nats_cdc_spark.streaming import pipeline as P
-from debezium_nats_cdc_spark.streaming.bench import _synthetic_updates
 
 
 def _parquet_count(d: str) -> int:
@@ -19,7 +18,7 @@ def _parquet_count(d: str) -> int:
 def test_small_batches_write_one_file_per_sink_per_epoch(spark, tmp_path):
     n_epochs = 5
     log_dir = str(tmp_path / "log")
-    fixtures.write_event_log(_synthetic_updates(n_epochs * 200), log_dir,
+    fixtures.write_event_log(fixtures.salary_updates(n_epochs * 200), log_dir,
                              events_per_file=200)
     dirs = P.PipelineDirs.under(str(tmp_path / "out"))
     q = P.start_table_pipeline(spark, log_dir, "employees", dirs,
@@ -36,7 +35,7 @@ def test_large_batches_keep_parallel_writes(spark, tmp_path, monkeypatch):
     # events sink (one per non-empty branch/partition)
     monkeypatch.setattr(P, "SMALL_BATCH_ROWS", -1)
     log_dir = str(tmp_path / "log")
-    fixtures.write_event_log(_synthetic_updates(500), log_dir,
+    fixtures.write_event_log(fixtures.salary_updates(500), log_dir,
                              events_per_file=500)
     dirs = P.PipelineDirs.under(str(tmp_path / "out"))
     q = P.start_table_pipeline(spark, log_dir, "employees", dirs,

@@ -39,7 +39,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-WARM_DIR = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.01")
+WARM_DIR = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.01")
 TS_CONF = "spark.sql.parquet.outputTimestampType"
 
 # default suspects: the catalog's heaviest family (reference values are
@@ -95,7 +95,7 @@ def run_catalog(spark, rounds: int,
 
 
 def run_streaming(spark, reps: int) -> dict:
-    from debezium_nats_cdc_spark.streaming.bench import streaming_events_per_sec
+    from bench import streaming_events_per_sec
 
     arms = ["TIMESTAMP_MICROS", "INT96"]
     results: dict[str, list[dict]] = {a: [] for a in arms}

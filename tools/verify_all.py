@@ -17,40 +17,37 @@ import subprocess
 import sys
 import time
 
-FAST = "--fast" in sys.argv[1:]
-
 # every gate runs from the root of the checkout this file belongs to
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # scale-factor tables, relative to that repo root
 TESTDATA = "../testdata"
 
-GATES: list[tuple[str, list[str]]] = [
-    *((f"strict oracle ({sf}, all queries)",
-       [sys.executable, "tools/check_strict.py", f"{TESTDATA}/{sf}"])
-      for sf in ("sf0.001", "sf0.01")),
-    ("plan audit", [sys.executable, "tools/plan_audit.py"]),
-    # seed-0 differential fuzz (~90 s): the dirty-input gate is cheap
-    # enough for the fast sweep, and it is where the r6 oracle gaps
-    # were found — don't let --fast skip it
-    ("differential fuzz (seed 0)",
-     [sys.executable, "tools/fuzz_oracle.py", "--seed", "0"]),
-]
-if not FAST:
-    GATES = [
-        # the Tier-1 command: every core, local dirs, hard timeout
-        ("pytest suite (Tier-1)",
-         ["env", f"SPARK_GRAFT_CPUS={len(os.sched_getaffinity(0))}",
-          "SPARK_LOCAL_DIRS=/tmp/spark-local", "timeout", "-k", "10",
-          "2670", sys.executable, "-m", "pytest", "tests/", "-q",
-          "--continue-on-collection-errors", "-p", "no:cacheprovider"]),
-        *GATES,
-        ("bench (sf0.1)", [sys.executable, "bench.py"]),
-    ]
-
 
 def main() -> int:
+    gates: list[tuple[str, list[str]]] = [
+        *((f"strict oracle ({sf}, all queries)",
+           [sys.executable, "tools/check_strict.py", f"{TESTDATA}/{sf}"])
+          for sf in ("sf0.001", "sf0.01")),
+        ("plan audit", [sys.executable, "tools/plan_audit.py"]),
+        # seed-0 differential fuzz (~90 s): the dirty-input gate is cheap
+        # enough for the fast sweep, and it is where the r6 oracle gaps
+        # were found — don't let --fast skip it
+        ("differential fuzz (seed 0)",
+         [sys.executable, "tools/fuzz_oracle.py", "--seed", "0"]),
+    ]
+    if "--fast" not in sys.argv[1:]:
+        gates = [
+            # the Tier-1 command: every core, local dirs, hard timeout
+            ("pytest suite (Tier-1)",
+             ["env", f"SPARK_GRAFT_CPUS={len(os.sched_getaffinity(0))}",
+              "SPARK_LOCAL_DIRS=/tmp/spark-local", "timeout", "-k", "10",
+              "2670", sys.executable, "-m", "pytest", "tests/", "-q",
+              "--continue-on-collection-errors", "-p", "no:cacheprovider"]),
+            *gates,
+            ("bench (sf0.1)", [sys.executable, "bench.py"]),
+        ]
     failures = []
-    for name, cmd in GATES:
+    for name, cmd in gates:
         t0 = time.time()
         r = subprocess.run(cmd, cwd=REPO, capture_output=True,
                            text=True)
@@ -65,7 +62,7 @@ def main() -> int:
     if failures:
         print(f"FAILED gates: {failures}")
         return 1
-    print(f"all {len(GATES)} gates green")
+    print(f"all {len(gates)} gates green")
     return 0
 
 
